@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-adaptive parallelism floor for CPU-bound kernel projections
   * (optimization guide §2.5, input skew: "one huge unsplittable file …
@@ -54,8 +55,9 @@ private[graft] object Scale {
     val maxPartitionBytes = conf.filesMaxPartitionBytes
     val openCost = conf.filesOpenCostInBytes
     // FilePartition's minPartitionNum: the explicit conf when set, else
-    // the leaf-node default parallelism (defaultParallelism here)
-    val minPartitionNum = conf.filesMinPartitionNum.getOrElse(p)
+    // the leaf-node default parallelism (its conf, else defaultParallelism)
+    val minPartitionNum = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(p))
     val hconf = spark.sparkContext.hadoopConfiguration
     val lens = new Array[Long](files.length)
     var i = 0

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import java.io.RandomAccessFile
-import java.nio.charset.StandardCharsets
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Paths, StandardOpenOption}
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -48,6 +50,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * 64 KiB chunk-step to find the last newline. On a 1000-executor
   * cluster the same protocol is how a distributed FS text scan already
   * works; a single local file is simply the degenerate deployment.
+  * Each reader makes one sequential pass over its span through a fixed
+  * 64 KiB read buffer, so its memory is bounded by that buffer plus the
+  * longest line, never by the span size. Framing is `\n` only, and a
+  * `\r` before it stays in the value: a one-byte delimiter is found
+  * identically by `latestOffset`'s backward scan and by every reader,
+  * whatever byte a span boundary falls on, and the value reaches the
+  * parser byte for byte as it was written (a Kafka value is not
+  * re-framed either; JSON reads the `\r` as whitespace).
   */
 object FileTailSource {
   val ShortName = "graft-file-tail"
@@ -186,37 +196,63 @@ final class FileTailReaderFactory extends PartitionReaderFactory {
 /** Reads the lines BELONGING to the span: a line belongs to the span
   * containing its first byte. The batch end is line-aligned, so reading
   * through a straddling line never escapes the planned batch range.
+  * Positional reads fill one fixed buffer; a line's bytes gather in a
+  * reusable array that grows only to the longest line.
   */
 final class FileTailReader(part: FileTailPartition)
     extends PartitionReader[InternalRow] {
-  private val raf = new RandomAccessFile(part.path, "r")
+  private val ch = FileChannel.open(Paths.get(part.path), StandardOpenOption.READ)
+  private val buf = new Array[Byte](64 * 1024)
+  private var bufPos = 0 // next unread byte of buf
+  private var bufEnd = 0 // bytes of buf filled by the last read
+  // lo-1 when skipping: a line STARTING exactly at lo belongs here
+  private var filePos: Long =
+    if (part.lo == part.batchStart) part.lo else part.lo - 1
+  private var line = new Array[Byte](256)
+  private var lineLen = 0
   private var pos: Long = {
+    // partial first line belongs to the previous span: skip it
     if (part.lo == part.batchStart) part.lo
-    else { // partial first line belongs to the previous span: skip it
-      raf.seek(part.lo - 1) // lo-1: a line STARTING exactly at lo belongs here
-      var b = raf.read()
-      var p = part.lo - 1
-      while (b != -1 && b != '\n') { p += 1; b = raf.read() }
-      p + 1
-    }
+    else { readLine(); part.lo + lineLen }
   }
-  private var current: (Long, String) = _
+  private var current: InternalRow = _
+
+  /** Refills `buf` from the next file position; false at end of file. */
+  private def fill(): Boolean = {
+    val n = ch.read(ByteBuffer.wrap(buf), filePos)
+    if (n > 0) { bufPos = 0; bufEnd = n; filePos += n }
+    n > 0
+  }
+
+  /** Gathers the bytes up to the next `\n` into `line` and consumes the
+    * `\n`; false at end of file before one.
+    */
+  private def readLine(): Boolean = {
+    lineLen = 0
+    var found = false
+    while (!found && (bufPos < bufEnd || fill())) {
+      var i = bufPos
+      while (i < bufEnd && buf(i) != '\n') i += 1
+      val n = i - bufPos
+      if (lineLen + n > line.length)
+        line = util.Arrays.copyOf(line, math.max(2 * line.length, lineLen + n))
+      System.arraycopy(buf, bufPos, line, lineLen, n)
+      lineLen += n
+      found = i < bufEnd
+      bufPos = if (found) i + 1 else i
+    }
+    found
+  }
 
   override def next(): Boolean = {
     if (pos >= part.hi) return false
-    raf.seek(pos)
-    val sb = new java.io.ByteArrayOutputStream(256)
-    var b = raf.read()
-    var n = 0L
-    while (b != -1 && b != '\n') { sb.write(b); n += 1; b = raf.read() }
-    if (b == -1) return false // unterminated tail line: not in any batch
-    val line = new String(sb.toByteArray, StandardCharsets.UTF_8)
-    current = (pos, line)
-    pos += n + 1
+    if (!readLine()) return false // unterminated tail line: not in any batch
+    current = InternalRow(pos,
+      UTF8String.fromBytes(util.Arrays.copyOf(line, lineLen)))
+    pos += lineLen + 1
     true
   }
 
-  override def get(): InternalRow =
-    InternalRow(current._1, UTF8String.fromString(current._2))
-  override def close(): Unit = raf.close()
+  override def get(): InternalRow = current
+  override def close(): Unit = ch.close()
 }

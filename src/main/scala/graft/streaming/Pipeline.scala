@@ -806,12 +806,17 @@ object Pipeline {
           "cannot anchor flush sentinels")
       val mx = mxAny.asInstanceOf[java.sql.Timestamp]
       val schema = events.schema
+      import org.apache.spark.sql.types.{FloatType, IntegerType}
+      // values take the field's own width: the schema tripwire admits
+      // an int32 event_id and a float value
       def sentinelRow(id: Long, at: java.sql.Timestamp, v: Double) =
         org.apache.spark.sql.Row.fromSeq(schema.fields.toSeq.map { f =>
-          f.name match {
-            case "ts" => at
-            case "event_id" => java.lang.Long.valueOf(id)
-            case "value" => java.lang.Double.valueOf(v)
+          (f.name, f.dataType) match {
+            case ("ts", _) => at
+            case ("event_id", IntegerType) => Integer.valueOf(id.toInt)
+            case ("event_id", _) => java.lang.Long.valueOf(id)
+            case ("value", FloatType) => java.lang.Float.valueOf(v.toFloat)
+            case ("value", _) => java.lang.Double.valueOf(v)
             case _ => null
           }
         })

@@ -46,6 +46,17 @@ class ScaleSpec extends SparkSpec {
     assert(Scale.fanOut(df) eq df)
   }
 
+  /** ~20 MB of incompressible hex in ONE parquet file. */
+  private def mediumSingleFile(): String = {
+    val dir = Files.createTempDirectory("graft_scale").toString + "/mid"
+    spark.range(300000)
+      .select(col("id"), md5(col("id").cast("string")).as("h1"),
+        md5(concat(lit("x"), col("id").cast("string"))).as("h2"),
+        md5(concat(lit("y"), col("id").cast("string"))).as("h3"))
+      .coalesce(1).write.parquet(dir)
+    dir
+  }
+
   test("medium single file that Spark splits to >= cores: identity " +
       "(the r19 maxPartitionBytes-only estimate added a redundant shuffle)") {
     // ~20 MB of incompressible hex: FilePartition's maxSplitBytes is
@@ -54,16 +65,23 @@ class ScaleSpec extends SparkSpec {
     // fan-out must be the identity. The pre-r20 estimate divided by
     // maxPartitionBytes (128 MB) only, called this 1 split, and
     // repartitioned a scan that was already parallel.
-    val dir = Files.createTempDirectory("graft_scale").toString + "/mid"
-    spark.range(300000)
-      .select(col("id"), md5(col("id").cast("string")).as("h1"),
-        md5(concat(lit("x"), col("id").cast("string"))).as("h2"),
-        md5(concat(lit("y"), col("id").cast("string"))).as("h3"))
-      .coalesce(1).write.parquet(dir)
-    val scan = spark.read.parquet(dir)
+    val scan = spark.read.parquet(mediumSingleFile())
     assert(numParts(scan) >= spark.sparkContext.defaultParallelism,
       s"precondition: Spark itself must split the file (got ${numParts(scan)})")
     assert(Scale.fanOut(scan) eq scan)
+  }
+
+  test("leafNodeDefaultParallelism drives the split estimate as it drives the scan") {
+    // with the conf at 1, FilePartition packs the medium file into one
+    // split; an estimate from defaultParallelism would call it split
+    // and leave the kernel on one task
+    val dir = mediumSingleFile()
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
+    try {
+      val scan = spark.read.parquet(dir)
+      assert(numParts(scan) === 1, "precondition: the conf packs the file into one split")
+      assert(numParts(Scale.fanOut(scan)) === spark.sparkContext.defaultParallelism)
+    } finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
   }
 
   test("minhash signatures through the fan-out equal the 1-split plan's") {

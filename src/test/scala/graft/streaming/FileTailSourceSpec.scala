@@ -103,14 +103,50 @@ class FileTailSourceSpec extends SparkSpec {
       (9L, "r4"), (12L, "r5"))) // exactly once, no replays
   }
 
+  /** Reads [0, file end) through one [[FileTailReader]] per span, the
+    * spans cut at `cuts`, in span order.
+    */
+  private def readSpans(p: Path, cuts: Seq[Long]): Seq[(Long, String)] = {
+    val end = Files.size(p)
+    val bounds = (0L +: cuts.filter(c => c > 0 && c < end).distinct.sorted) :+ end
+    bounds.sliding(2).toSeq.flatMap { case Seq(lo, hi) =>
+      val r = new FileTailReader(FileTailPartition(p.toString, lo, hi, batchStart = 0L))
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => (r.get().getLong(0), r.get().getUTF8String(1).toString)).toList
+      finally r.close()
+    }
+  }
+
   test("split protocol: multi-partition batch reads every line exactly once") {
-    val p = tmpLog()
-    val lines = (0 until 500).map(i => f"record_$i%04d_${"x" * (i % 37)}")
-    append(p, lines.mkString("", "\n", "\n"))
-    // force many small splits: 4 partitions, 128-byte min split
-    val got = readAll(p, "earliest",
-      Map("maxPartitionsPerBatch" -> "4", "minSplitBytes" -> "128"))
-    assert(got.map(_._2) === lines) // ordered by offset, exactly once
+    val buffer = 64 * 1024
+    val long = "L" * (2 * buffer + 1000) // spans three read-buffer fills
+    // 2 + 3k bytes never land on 64 KiB: a char straddles the refill
+    val utf8 = "ab" + "\u20ac" * 30000
+    val mixed = "\u00fc\u20ac\ud834\udd1e" * 50 // 2-, 3- and 4-byte chars
+    val inputs = Seq(
+      "short lines" -> (0 until 500).map(i => f"record_$i%04d_${"x" * (i % 37)}"),
+      "longer than the buffer" -> Seq("head", long, "mid", long, "tail"),
+      "multi-byte UTF-8" -> Seq(utf8, mixed, utf8, mixed),
+      "CRLF keeps its \\r" -> Seq("one\r", "two\r", "", "three\r"))
+    inputs.foreach { case (name, lines) =>
+      val p = tmpLog()
+      append(p, lines.mkString("", "\n", "\n"))
+      val bytes = Files.readAllBytes(p)
+      val starts = lines.scanLeft(0L)(_ + _.getBytes(StandardCharsets.UTF_8).length + 1).init
+      val expected = starts.zip(lines)
+      // engine path: 4 partitions, 128-byte min split
+      assert(readAll(p, "earliest",
+        Map("maxPartitionsPerBatch" -> "4", "minSplitBytes" -> "128")) === expected, name)
+      // reader path: spans cut inside multi-byte chars and lines, across
+      // buffer refills, and with lo exactly on a line start
+      val inChar = bytes.indices.filter(i => (bytes(i) & 0xc0) == 0x80).map(_.toLong)
+      val cutSets = Seq(
+        Seq(1L, 7L, buffer - 1L, buffer.toLong, buffer + 1L),
+        starts, starts.map(_ + 1), inChar.take(3) ++ inChar.takeRight(3))
+      cutSets.foreach(cuts => assert(readSpans(p, cuts) === expected, s"$name, cuts $cuts"))
+    }
+    // the UTF-8 input really splits a char at the buffer refill
+    assert((utf8.getBytes(StandardCharsets.UTF_8)(buffer) & 0xc0) == 0x80)
   }
 
   test("planInputPartitions splits the range evenly and covers it exactly") {

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{FloatType, IntegerType}
 
 import graft.SparkSpec
 import graft.model.SensorReading
@@ -494,36 +495,51 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("stream-stream LEFT OUTER interval join: eager matches + null-padded unresolved alerts after finalization") {
     val dir = "/root/testdata/sf0.001"
-    val out = Pipeline.replayStreamStreamJoin(spark, dir,
-      window = "30 minutes", joinType = "leftOuter")
-      .select(col("alert_id"), col("reading_id")).collect()
+    // the same events at the narrower widths the schema tripwire
+    // tolerates (int32 event_id, float value): the flush sentinels must
+    // be built in the schema's own types or encoding them throws
+    val narrow = Files.createTempDirectory("graft_narrow_events").toString
+    graft.sources.Tables.eventsPhysical(spark, dir)
+      .withColumn("event_id", col("event_id").cast("int"))
+      .withColumn("value", col("value").cast("float"))
+      .coalesce(1).write.parquet(s"$narrow/events.parquet")
+    val narrowSchema = graft.sources.Tables.events(spark, narrow).schema
+    assert(narrowSchema("event_id").dataType === IntegerType)
+    assert(narrowSchema("value").dataType === FloatType)
 
-    // batch expectation: the PLAIN left join of alerts ↔ sub-threshold
-    // readings in the 30-min window — the flush sentinels drive the
-    // final watermark past everything, so every unresolved alert emits
-    // (no finalized-prefix clause)
-    val e = graft.sources.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val a = e.filter(col("value") >= 200)
-      .select(col("event_id").as("alert_id"), col("ts").as("alert_ts"),
-        col("event_type").as("a_type"))
-    val r = e.filter(col("value") < 200)
-      .select(col("event_id").as("reading_id"), col("ts").as("r_ts"),
-        col("event_type").as("r_type"))
-    val expected = a.join(r,
-        col("a_type") === col("r_type") &&
-          col("r_ts") >= col("alert_ts") &&
-          col("r_ts") <= col("alert_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-      .select(col("alert_id"), col("reading_id")).collect()
+    Seq(dir, narrow).foreach { d => withClue(d) {
+      val out = Pipeline.replayStreamStreamJoin(spark, d,
+        window = "30 minutes", joinType = "leftOuter")
+        .select(col("alert_id"), col("reading_id")).collect()
 
-    def multiset(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(x => (x.getLong(0), if (x.isNullAt(1)) -1L else x.getLong(1)))
-      .groupBy(identity).view.mapValues(_.length).toMap
-    assert(multiset(out) === multiset(expected))
-    // the outer branch demonstrably fired, and matches still flowed
-    assert(out.exists(_.isNullAt(1)), "no null-padded row emitted")
-    assert(out.exists(!_.isNullAt(1)), "no matched row emitted")
+      // batch expectation: the PLAIN left join of alerts ↔ sub-threshold
+      // readings in the 30-min window — the flush sentinels drive the
+      // final watermark past everything, so every unresolved alert emits
+      // (no finalized-prefix clause)
+      val e = graft.sources.Tables.events(spark, d)
+        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+      val a = e.filter(col("value") >= 200)
+        .select(col("event_id").as("alert_id"), col("ts").as("alert_ts"),
+          col("event_type").as("a_type"))
+      val r = e.filter(col("value") < 200)
+        .select(col("event_id").as("reading_id"), col("ts").as("r_ts"),
+          col("event_type").as("r_type"))
+      val expected = a.join(r,
+          col("a_type") === col("r_type") &&
+            col("r_ts") >= col("alert_ts") &&
+            col("r_ts") <= col("alert_ts") + expr("INTERVAL 30 MINUTES"),
+          "left_outer")
+        .select(col("alert_id"), col("reading_id")).collect()
+
+      def multiset(rows: Array[org.apache.spark.sql.Row]) = rows
+        .map(x => (x.getAs[Number](0).longValue,
+          if (x.isNullAt(1)) -1L else x.getAs[Number](1).longValue))
+        .groupBy(identity).view.mapValues(_.length).toMap
+      assert(multiset(out) === multiset(expected))
+      // the outer branch demonstrably fired, and matches still flowed
+      assert(out.exists(_.isNullAt(1)), "no null-padded row emitted")
+      assert(out.exists(!_.isNullAt(1)), "no matched row emitted")
+    }}
   }
 
   test("streaming semantic dedup: trained-cluster assignment runs stateless on a stream") {
