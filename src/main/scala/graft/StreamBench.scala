@@ -136,15 +136,11 @@ object StreamBench {
             .as[graft.streaming.UserEvent], maxGapSec = 600L)
           .toDF("sensor_id", "from_band", "to_band"))
     }
-    val combined = env.json.dropRight(1) +
-      "," + dedup.json + "," + cur.json + "," + clf.json + "," +
-      bm25.json + "," +
-      asof.json + "," + ann.json + "," + tail.json + "," + cdc.json +
-      "," + ewma.json + "," + hop.json + "," + sess.json + "," +
-      ssj.json + "," + occ.json + "," + occMerge.json + "," +
-      lake.json + "," + kll.json +
-      "," + roll.json + "," + mg.json +
-      "," + trans.json + "}"
+    // section order = key order in the artifact
+    val sections = Seq(dedup, cur, clf, bm25, asof, ann, tail, cdc, ewma,
+      hop, sess, ssj, occ, occMerge, lake, kll, roll, mg, trans)
+    val combined =
+      (env.json.dropRight(1) +: sections.map(_.json)).mkString("", ",", "}")
     println(combined)
     Files.write(Paths.get(outPath), (combined + "\n").getBytes("UTF-8"))
     spark.stop()

@@ -1,9 +1,18 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** Measures the steady-state envelope of the real dual-sink pipeline
   * (raw parquet append + watermarked windowed agg) under the deterministic
@@ -14,6 +23,7 @@ import org.apache.spark.sql.functions._
   * Shared by [[graft.streaming.SteadyStateSpec]] (which asserts the
   * targets) and [[graft.StreamBench]] (which persists the numbers as a
   * per-round JSON artifact, the streaming analogue of `BENCH_r*.json`).
+  * Every section runs through one measurement harness (`harness`).
   */
 object SteadyState {
 
@@ -52,100 +62,177 @@ object SteadyState {
         s""""latency_ms":{"median":$medianMs,"max":$maxMs},"out_rows":$outRows}"""
   }
 
-  /** The documents table as a deterministic unbounded stream: the
-    * `rate-micro-batch` clock drives row indices that cycle a cached
-    * broadcast pool of REAL documents (stream-static join — the same
-    * per-batch probe shape production ingest uses), each stream row
-    * getting a fresh id disjoint from every pool id. Text content, order
-    * and rate are all deterministic.
+  /** The productive micro-batches (`numInputRows > 0`) of one query, each
+    * as (numInputRows, triggerExecution ms). Latency quantiles are over
+    * these only: empty triggers cost ~nothing and would flatter the median.
     */
-  private def docStream(spark: SparkSession, sfDir: String,
-      rowsPerBatch: Int): (DataFrame, DataFrame) = {
-    val pool = graft.sources.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .withColumn("__k",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("doc_id"))).cast("long") - 1L)
-      .cache()
-    val m = pool.count()
-    val stream = spark.readStream
+  private final case class Batches(samples: Seq[(Long, Long)]) {
+    def count: Int = samples.length
+    def rows: Long = samples.map(_._1).sum
+    private def lat = samples.map(_._2)
+    /** -1 when no batch was productive (the honest zero envelope) */
+    def medianMs: Long = if (lat.isEmpty) -1 else median(lat)
+    def maxMs: Long = if (lat.isEmpty) -1 else lat.max
+  }
+
+  private def docEnvelope(kind: String, docs: Long, elapsedSec: Double,
+      b: Batches, outRows: Long): DocEnvelope =
+    DocEnvelope(kind, docs, elapsedSec, docs / elapsedSec * 60, b.count,
+      b.medianMs, b.maxMs, outRows)
+
+  /** An external producer run beside the queries: `step(n)` for
+    * n = 0, 1, … with `everyMs` between steps.
+    */
+  private final case class Feed(everyMs: Long, step: Long => Unit)
+
+  /** The one measurement harness every section runs through:
+    *  1. registers ONE listener recording each query's productive
+    *     progress by query id — before any start, so the first
+    *     micro-batch can't slip past, and accumulated rather than read
+    *     back from the query's progress ring buffer, which keeps only
+    *     the last 100 entries and would silently undercount long runs;
+    *  2. runs `starts` in order — the LAST query gates the wait;
+    *  3. runs `feed`, if any, on one producer thread;
+    *  4. polls every 200 ms until the gating query has `minBatches`
+    *     productive batches or `deadlineSec` elapses;
+    *  5. captures elapsed BEFORE stop, so shutdown cost never dilutes
+    *     msg/min;
+    *  6. in one `finally` — a start that throws included — stops the
+    *     feed, every query that started and the listener, then runs
+    *     `cleanup`.
+    * Returns elapsed seconds and each started query's batches, in
+    * `starts` order.
+    */
+  private def harness(spark: SparkSession, minBatches: Int, deadlineSec: Int,
+      starts: Seq[() => StreamingQuery], feed: Option[Feed] = None,
+      cleanup: () => Unit = () => ()): (Double, Seq[Batches]) = {
+    val productive =
+      new ConcurrentHashMap[UUID, ConcurrentLinkedQueue[(Long, Long)]]()
+    def of(id: UUID) = productive.computeIfAbsent(id,
+      _ => new ConcurrentLinkedQueue[(Long, Long)]())
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0)
+          of(e.progress.id).add((e.progress.numInputRows,
+            e.progress.durationMs.get("triggerExecution").toLong))
+    }
+    val queries = ArrayBuffer.empty[StreamingQuery]
+    @volatile var feeding = true
+    val producer = feed.map(f => new Thread(() => {
+      var n = 0L
+      while (feeding) {
+        f.step(n)
+        n += 1
+        Thread.sleep(f.everyMs)
+      }
+    }, "graft-envelope-feed"))
+    var elapsedSec = 0.0
+    spark.streams.addListener(listener)
+    try {
+      starts.foreach(start => queries += start())
+      producer.foreach(_.start())
+      val gate = of(queries.last.id)
+      val t0 = System.nanoTime()
+      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
+      while (gate.size < minBatches && System.nanoTime() < deadline)
+        Thread.sleep(200)
+      elapsedSec = (System.nanoTime() - t0) / 1e9
+    } finally {
+      feeding = false
+      producer.foreach(_.join(10000))
+      queries.foreach(_.stop())
+      spark.streams.removeListener(listener)
+      cleanup()
+    }
+    (elapsedSec, queries.map(q => Batches(of(q.id).asScala.toSeq)).toSeq)
+  }
+
+  /** An append writer named after the section, on a fresh checkpoint,
+    * triggered back to back.
+    */
+  private def writer(df: DataFrame, kind: String): DataStreamWriter[Row] =
+    df.writeStream
+      .queryName(s"graft_envelope_$kind")
+      .outputMode("append")
+      .option("checkpointLocation",
+        Files.createTempDirectory(s"graft_${kind}_ckpt").toString)
+      .trigger(Trigger.ProcessingTime(0))
+
+  /** Rows a parquet sink wrote; no sink dir = the query committed zero
+    * batches before the deadline, reported as zero instead of throwing.
+    */
+  private def parquetRows(spark: SparkSession, dir: String): Long =
+    if (new java.io.File(dir).exists()) spark.read.parquet(dir).count()
+    else 0L
+
+  /** One query from `stream` into a parquet sink through [[harness]]:
+    * throughput counts INPUT rows (out rows differ per pipeline:
+    * collisions for dedup, gated docs for curation, flushed windows),
+    * out_rows = rows the sink wrote. `stream` is built inside the
+    * harness, so a transform that fails analysis still gets cleaned up.
+    */
+  private def parquetSection(spark: SparkSession, kind: String,
+      stream: => DataFrame, minBatches: Int, deadlineSec: Int,
+      feed: Option[Feed] = None,
+      cleanup: () => Unit = () => ()): DocEnvelope = {
+    val out = Files.createTempDirectory(s"graft_${kind}_out").toString + "/out"
+    val (elapsedSec, Seq(b)) = harness(spark, minBatches, deadlineSec,
+      Seq(() => writer(stream, kind).format("parquet")
+        .option("path", out).start()),
+      feed, cleanup)
+    docEnvelope(kind, b.rows, elapsedSec, b, parquetRows(spark, out))
+  }
+
+  /** The deterministic micro-batch clock under the pooled and CDC
+    * streams: `rowsPerBatch` rows per trigger, one minute of event time
+    * each.
+    */
+  private def rateClock(spark: SparkSession, rowsPerBatch: Int): DataFrame =
+    spark.readStream
       .format("rate-micro-batch")
       .option("rowsPerBatch", rowsPerBatch)
       .option("startTimestamp", 1704067200000L)
       .option("advanceMillisPerBatch", 60000L)
       .load()
+
+  /** A table as a deterministic unbounded stream: [[rateClock]] row
+    * indices cycle a cached broadcast `pool` of REAL rows (stream-static
+    * join — the same per-batch probe shape production ingest uses), each
+    * stream row getting a fresh `outId` disjoint from every pool id.
+    * Content, order and rate are all deterministic. The cached pool is
+    * returned so the measurement can unpersist it.
+    */
+  private def pooledStream(spark: SparkSession, pool: DataFrame,
+      idCol: String, payload: String, outId: String,
+      rowsPerBatch: Int): (DataFrame, DataFrame) = {
+    val cached = pool.select(col(idCol), col(payload))
+      .withColumn("__k",
+        row_number().over(Window.orderBy(col(idCol))).cast("long") - 1L)
+      .cache()
+    val m = cached.count()
+    val stream = rateClock(spark, rowsPerBatch)
       .withColumn("__k", pmod(col("value"), lit(m)))
-      .join(broadcast(pool), Seq("__k"))
-      .select((col("value") + lit(1000000000L)).as("doc_id"), col("text"))
-    (stream, pool) // pool returned so the measurement can unpersist it
+      .join(broadcast(cached), Seq("__k"))
+      .select((col("value") + lit(1000000000L)).as(outId), col(payload))
+    (stream, cached)
   }
 
   /** Generic doc-pipeline envelope: build the streaming transform over
-    * [[docStream]], run it into a parquet sink until `minBatches`
-    * productive micro-batches (or deadline), and read the envelope out of
-    * the engine's progress telemetry. Throughput counts INPUT documents
-    * (out rows differ per pipeline: collisions for dedup, gated docs for
-    * curation). Progress is accumulated by a [[StreamingQueryListener]],
-    * not read back from `q.recentProgress` — that ring buffer caps at 100
-    * entries and would silently undercount any run whose batch count
-    * exceeds the retention window; elapsed is captured BEFORE `stop()` so
-    * shutdown cost never dilutes msg/min.
+    * the documents table as a pooled stream and run it into a parquet
+    * sink until `minBatches` productive micro-batches (or deadline).
+    * Throughput counts INPUT documents.
     */
   def measureDocStream(spark: SparkSession, kind: String,
       build: DataFrame => DataFrame, sfDir: String,
       rowsPerBatch: Int = 50, minBatches: Int = 15,
       deadlineSec: Int = 180): DocEnvelope = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    val out = Files.createTempDirectory(s"graft_${kind}_out").toString + "/out"
-    val ckpt = Files.createTempDirectory(s"graft_${kind}_ckpt")
-    val (stream, pool) = docStream(spark, sfDir, rowsPerBatch)
-    val qName = s"graft_envelope_$kind"
-    // (numInputRows, triggerExecutionMs) per productive batch, unbounded —
-    // registered BEFORE start() so the first micro-batch can't slip past
-    val productive = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          productive.add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    spark.streams.addListener(listener)
-    val q = build(stream)
-      .writeStream
-      .queryName(qName)
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .start()
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (productive.size < minBatches
-          && System.nanoTime() < deadline) Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-      pool.unpersist()
-    }
-    val prog = {
-      import scala.jdk.CollectionConverters._
-      productive.asScala.toSeq
-    }
-    val lat = prog.map(_._2)
-    val docs = prog.map(_._1).sum
-    val outRows =
-      if (new java.io.File(out).exists()) spark.read.parquet(out).count()
-      else 0L
-    DocEnvelope(kind, docs, elapsedSec, docs / elapsedSec * 60, lat.length,
-      if (lat.isEmpty) -1 else median(lat),
-      if (lat.isEmpty) -1 else lat.max, outRows)
+    val (stream, pool) = pooledStream(spark,
+      graft.sources.Tables.documents(spark, sfDir), "doc_id", "text",
+      "doc_id", rowsPerBatch)
+    parquetSection(spark, kind, build(stream), minBatches, deadlineSec,
+      cleanup = () => pool.unpersist())
   }
 
   /** Live-source envelope: an EXTERNAL producer thread appends JSON
@@ -162,75 +249,22 @@ object SteadyState {
   def measureFileTailStream(spark: SparkSession, rowsPerAppend: Int = 50,
       appendIntervalMs: Long = 1000L, minBatches: Int = 15,
       deadlineSec: Int = 180): DocEnvelope = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
     import java.nio.file.StandardOpenOption.{APPEND, CREATE}
     val log = Files.createTempDirectory("graft_filetail_env").resolve("feed.log")
-    val out = Files.createTempDirectory("graft_filetail_out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft_filetail_ckpt")
-    val qName = "graft_envelope_filetail"
-    val productive = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          productive.add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    spark.streams.addListener(listener)
-    @volatile var stopProducer = false
-    val producer = new Thread(() => {
-      var batch = 0L
-      while (!stopProducer) {
-        val sb = new StringBuilder
-        (0 until rowsPerAppend).foreach { j =>
-          val n = batch * rowsPerAppend + j
-          val ts = java.time.Instant.ofEpochSecond(1704067200L + n).toString
-          sb.append(f"""{"sensor_id":"SENSOR_${n % 10 + 1}%03d","location":"warehouse_a","timestamp":"$ts","temperature":${20 + n % 7}.0,"humidity":50.0,"pressure":1000.0}""")
-            .append('\n')
-        }
-        Files.write(log, sb.toString.getBytes("UTF-8"), CREATE, APPEND)
-        batch += 1
-        Thread.sleep(appendIntervalMs)
+    val append = Feed(appendIntervalMs, batch => {
+      val sb = new StringBuilder
+      (0 until rowsPerAppend).foreach { j =>
+        val n = batch * rowsPerAppend + j
+        val ts = java.time.Instant.ofEpochSecond(1704067200L + n).toString
+        sb.append(f"""{"sensor_id":"SENSOR_${n % 10 + 1}%03d","location":"warehouse_a","timestamp":"$ts","temperature":${20 + n % 7}.0,"humidity":50.0,"pressure":1000.0}""")
+          .append('\n')
       }
-    }, "graft-filetail-producer")
-    val q = Sources.dropIncomplete(Sources.parseJson(
-        Sources.fileTail(spark, log.toString, startingOffset = "earliest")))
-      .writeStream
-      .queryName(qName)
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .start()
-    producer.start()
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (productive.size < minBatches
-          && System.nanoTime() < deadline) Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      stopProducer = true
-      producer.join(5000)
-      q.stop()
-      spark.streams.removeListener(listener)
-    }
-    val prog = {
-      import scala.jdk.CollectionConverters._
-      productive.asScala.toSeq
-    }
-    val lat = prog.map(_._2)
-    val docs = prog.map(_._1).sum
-    val outRows =
-      if (new java.io.File(out).exists()) spark.read.parquet(out).count()
-      else 0L
-    DocEnvelope("filetail_stream", docs, elapsedSec, docs / elapsedSec * 60,
-      lat.length, if (lat.isEmpty) -1 else median(lat),
-      if (lat.isEmpty) -1 else lat.max, outRows)
+      Files.write(log, sb.toString.getBytes("UTF-8"), CREATE, APPEND)
+    })
+    parquetSection(spark, "filetail_stream",
+      Sources.dropIncomplete(Sources.parseJson(
+        Sources.fileTail(spark, log.toString, startingOffset = "earliest"))),
+      minBatches, deadlineSec, feed = Some(append))
   }
 
   /** Streaming band-index dedup envelope: the corpus (even pool ids) is
@@ -381,15 +415,6 @@ object SteadyState {
       sfDir, rowsPerBatch, minBatches, deadlineSec)
   }
 
-  /** Drives [[Pipeline.startDual]] from [[Sources.rateSimulated]] until the
-    * slower (stateful agg) query has processed `minAggBatches` productive
-    * micro-batches or `deadlineSec` elapses, then reads the envelope out of
-    * the engine's own progress telemetry and what the raw sink actually
-    * wrote (recentProgress caps at 100 entries, so summing it would
-    * undercount long runs). Latency quantiles are over PRODUCTIVE batches
-    * (numInputRows > 0): empty triggers cost ~nothing and would flatter
-    * the median.
-    */
   /** ANN SERVING against a live query stream: query vectors arrive on
     * the rate clock (cycling a cached pool of real embeddings), and each
     * micro-batch is served by ONE pruned [[graft.ext.Similarity.ivfProbeBatch]]
@@ -406,81 +431,47 @@ object SteadyState {
   def measureAnnServeStream(spark: SparkSession, sfDir: String,
       rowsPerBatch: Int = 50, minBatches: Int = 15,
       deadlineSec: Int = 180): DocEnvelope = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
     val kind = "ann_serve_stream"
     val path = graft.SparkEntry.ivfLayout(spark, sfDir) // warm index build
     val out = Files.createTempDirectory(s"graft_${kind}_out").toString + "/out"
-    val ckpt = Files.createTempDirectory(s"graft_${kind}_ckpt")
-    val pool = graft.sources.Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("__k",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("vec_id"))).cast("long") - 1L)
-      .cache()
-    val m = pool.count()
-    val stream = spark.readStream
-      .format("rate-micro-batch")
-      .option("rowsPerBatch", rowsPerBatch)
-      .option("startTimestamp", 1704067200000L)
-      .option("advanceMillisPerBatch", 60000L)
-      .load()
-      .withColumn("__k", pmod(col("value"), lit(m)))
-      .join(broadcast(pool), Seq("__k"))
-      .select((col("value") + lit(1000000000L)).as("qid"), col("embedding"))
-    val qName = s"graft_envelope_$kind"
-    val productive = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          productive.add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    spark.streams.addListener(listener)
-    val q = stream.writeStream
-      .queryName(qName)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qs = batch.collect().map(r => (r.getLong(0),
-          r.getSeq[Float](1).map(_.toDouble).toSeq)).toSeq
-        if (qs.nonEmpty)
-          // transactional append — the envelope prices the production
-          // exactly-once sink (staging + manifest), not a blind append
-          TxnSink.append(
-            graft.ext.Similarity.ivfProbeBatch(spark, path, "vec_id",
-              "embedding", qs, k = 10, nProbe = 2, excludeSelf = false),
-            out, batchId)
-      }
-      .start()
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (productive.size < minBatches
-          && System.nanoTime() < deadline) Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-      pool.unpersist()
-    }
-    val prog = {
-      import scala.jdk.CollectionConverters._
-      productive.asScala.toSeq
-    }
-    val lat = prog.map(_._2)
-    val docs = prog.map(_._1).sum
-    val outRows =
-      if (new java.io.File(out).exists()) spark.read.parquet(out).count()
-      else 0L
-    DocEnvelope(kind, docs, elapsedSec, docs / elapsedSec * 60, lat.length,
-      if (lat.isEmpty) -1 else median(lat),
-      if (lat.isEmpty) -1 else lat.max, outRows)
+    val (stream, pool) = pooledStream(spark,
+      graft.sources.Tables.embeddings(spark, sfDir), "vec_id", "embedding",
+      "qid", rowsPerBatch)
+    val (elapsedSec, Seq(b)) = harness(spark, minBatches, deadlineSec,
+      Seq(() => writer(stream, kind)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val qs = batch.collect().map(r => (r.getLong(0),
+            r.getSeq[Float](1).map(_.toDouble).toSeq)).toSeq
+          if (qs.nonEmpty)
+            // transactional append — the envelope prices the production
+            // exactly-once sink (staging + manifest), not a blind append
+            TxnSink.append(
+              graft.ext.Similarity.ivfProbeBatch(spark, path, "vec_id",
+                "embedding", qs, k = 10, nProbe = 2, excludeSelf = false),
+              out, batchId)
+        }
+        .start()),
+      cleanup = () => pool.unpersist())
+    docEnvelope(kind, b.rows, elapsedSec, b, parquetRows(spark, out))
   }
+
+  /** Keyspace of the two CDC sections. */
+  private val CdcKeys = 100000L
+
+  /** The CDC sections' seed snapshot: every key at version 0. */
+  private def cdcSeed(spark: SparkSession): DataFrame =
+    spark.range(CdcKeys).select(col("id"), lit(0L).as("ver"),
+      (col("id") % 997).cast("double").as("x"))
+
+  /** The CDC sections' deterministic change stream: rate-driven upserts
+    * scattered over [[CdcKeys]], every 50th row a tombstone.
+    */
+  private def cdcStream(spark: SparkSession, rowsPerBatch: Int): DataFrame =
+    rateClock(spark, rowsPerBatch).select(
+      pmod(col("value") * lit(2654435761L), lit(CdcKeys)).as("id"),
+      (col("value") + 1L).as("ver"),
+      col("value").cast("double").as("x"),
+      (col("value") % 50 === 0).as("del"))
 
   /** CDC-apply envelope: a deterministic change stream (rate-driven
     * upserts + periodic tombstones over a bounded keyspace) merged into a
@@ -495,74 +486,23 @@ object SteadyState {
   def measureCdcApplyStream(spark: SparkSession,
       rowsPerBatch: Int = 50, minBatches: Int = 10,
       deadlineSec: Int = 180): DocEnvelope = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
     val kind = "cdc_apply_stream"
     val snap = Files.createTempDirectory("graft_cdc_snap").toString + "/snap"
-    val ckpt = Files.createTempDirectory("graft_cdc_ckpt")
-    val nKeys = 100000L
     val nBuckets = 64
-    graft.ops.Upsert.initPartitioned(
-      spark.range(nKeys).select(col("id"), lit(0L).as("ver"),
-        (col("id") % 997).cast("double").as("x")),
-      Seq("id"), nBuckets, snap)
-    val stream = spark.readStream
-      .format("rate-micro-batch")
-      .option("rowsPerBatch", rowsPerBatch)
-      .option("startTimestamp", 1704067200000L)
-      .option("advanceMillisPerBatch", 60000L)
-      .load()
-      .select(
-        pmod(col("value") * lit(2654435761L), lit(nKeys)).as("id"),
-        (col("value") + 1L).as("ver"),
-        col("value").cast("double").as("x"),
-        (col("value") % 50 === 0).as("del"))
-    val qName = s"graft_envelope_$kind"
-    val productive = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          productive.add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    spark.streams.addListener(listener)
-    val q = stream.writeStream
-      .queryName(qName)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      // batch-id fence included: the envelope prices the production
-      // applyStream shape (marker write per batch), not the bare merge
-      .foreachBatch(TxnSink.fenced(s"${snap}_txn") {
-        (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.ops.Upsert.applyPartitioned(batch.sparkSession, snap, batch,
-            Seq("id"), "ver", nBuckets, deleteCol = Some("del"))
-          ()
-      })
-      .start()
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (productive.size < minBatches
-          && System.nanoTime() < deadline) Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-    }
-    val prog = {
-      import scala.jdk.CollectionConverters._
-      productive.asScala.toSeq
-    }
-    val lat = prog.map(_._2)
-    val docs = prog.map(_._1).sum
-    val outRows = spark.read.parquet(snap).count()
-    DocEnvelope(kind, docs, elapsedSec, docs / elapsedSec * 60, lat.length,
-      if (lat.isEmpty) -1 else median(lat),
-      if (lat.isEmpty) -1 else lat.max, outRows)
+    graft.ops.Upsert.initPartitioned(cdcSeed(spark), Seq("id"), nBuckets,
+      snap)
+    val (elapsedSec, Seq(b)) = harness(spark, minBatches, deadlineSec,
+      Seq(() => writer(cdcStream(spark, rowsPerBatch), kind)
+        // batch-id fence included: the envelope prices the production
+        // applyStream shape (marker write per batch), not the bare merge
+        .foreachBatch(TxnSink.fenced(s"${snap}_txn") {
+          (batch: DataFrame, _: Long) =>
+            graft.ops.Upsert.applyPartitioned(batch.sparkSession, snap,
+              batch, Seq("id"), "ver", nBuckets, deleteCol = Some("del"))
+            ()
+        })
+        .start()))
+    docEnvelope(kind, b.rows, elapsedSec, b, spark.read.parquet(snap).count())
   }
 
   /** Envelope of the STREAMING MERGE (X129) at steady state — the same
@@ -579,69 +519,19 @@ object SteadyState {
   def measureOccMergeStream(spark: SparkSession,
       rowsPerBatch: Int = 50, minBatches: Int = 10,
       deadlineSec: Int = 180): DocEnvelope = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
     val kind = "occ_merge_stream"
     val table = Files.createTempDirectory("graft_occ_menv").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_occ_menv_ckpt")
-    val nKeys = 100000L
     graft.sources.OccTable.init(
-      spark.range(nKeys).select(col("id"), lit(0L).as("ver"),
-        (col("id") % 997).cast("double").as("x"))
-        .repartitionByRange(16, col("id")),
+      cdcSeed(spark).repartitionByRange(16, col("id")),
       table, statsColumns = Seq("id"))
-    val stream = spark.readStream
-      .format("rate-micro-batch")
-      .option("rowsPerBatch", rowsPerBatch)
-      .option("startTimestamp", 1704067200000L)
-      .option("advanceMillisPerBatch", 60000L)
-      .load()
-      .select(
-        pmod(col("value") * lit(2654435761L), lit(nKeys)).as("id"),
-        (col("value") + 1L).as("ver"),
-        col("value").cast("double").as("x"),
-        (col("value") % 50 === 0).as("del"))
-    val qName = s"graft_envelope_$kind"
-    val productive = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          productive.add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    spark.streams.addListener(listener)
-    val q = stream.writeStream
-      .queryName(qName)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .foreachBatch(graft.sources.OccTable.mergeSink(table,
-        "occ_merge_env", Seq("id"), deleteCol = Some("del"),
-        statsColumns = Seq("id")))
-      .start()
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (productive.size < minBatches
-          && System.nanoTime() < deadline) Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-    }
-    val prog = {
-      import scala.jdk.CollectionConverters._
-      productive.asScala.toSeq
-    }
-    val lat = prog.map(_._2)
-    val docs = prog.map(_._1).sum
-    val outRows = graft.sources.OccTable.read(spark, table)().count()
-    DocEnvelope(kind, docs, elapsedSec, docs / elapsedSec * 60, lat.length,
-      if (lat.isEmpty) -1 else median(lat),
-      if (lat.isEmpty) -1 else lat.max, outRows)
+    val (elapsedSec, Seq(b)) = harness(spark, minBatches, deadlineSec,
+      Seq(() => writer(cdcStream(spark, rowsPerBatch), kind)
+        .foreachBatch(graft.sources.OccTable.mergeSink(table,
+          "occ_merge_env", Seq("id"), deleteCol = Some("del"),
+          statsColumns = Seq("id")))
+        .start()))
+    docEnvelope(kind, b.rows, elapsedSec, b,
+      graft.sources.OccTable.read(spark, table)().count())
   }
 
   /** Envelope of the OCC COMMIT-LOG TAIL (X104) at steady state: an
@@ -713,8 +603,6 @@ object SteadyState {
       relay: DataFrame => DataFrame, rowsPerAppend: Int,
       appendIntervalMs: Long, minBatches: Int,
       deadlineSec: Int): DocEnvelope = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
     val root = Files.createTempDirectory(s"graft_${kind}_env")
     val src = root.toString + "/src"
     val dst = root.toString + "/dst"
@@ -722,62 +610,24 @@ object SteadyState {
     val shape = mkRows(0L, 0L)
     graft.sources.OccTable.init(shape, src)
     graft.sources.OccTable.init(relay(shape), dst)
-    val qName = s"graft_envelope_$kind"
-    val productive = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          productive.add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    spark.streams.addListener(listener)
-    @volatile var stopProducer = false
-    val producer = new Thread(() => {
-      var batch = 0L
-      while (!stopProducer) {
-        val lo = batch * rowsPerAppend
-        graft.sources.OccTable.append(
-          mkRows(lo, rowsPerAppend.toLong).coalesce(1), src)
-        // mid-run maintenance: the compaction the tail must ride through
-        if (batch == 5L) {
-          graft.sources.OccTable.checkpoint(spark, src)
-          graft.sources.OccTable.rewrite(spark, src, d => d.coalesce(1))
-        }
-        batch += 1
-        Thread.sleep(appendIntervalMs)
+    val append = Feed(appendIntervalMs, batch => {
+      graft.sources.OccTable.append(
+        mkRows(batch * rowsPerAppend, rowsPerAppend.toLong).coalesce(1), src)
+      // mid-run maintenance: the compaction the tail must ride through
+      if (batch == 5L) {
+        graft.sources.OccTable.checkpoint(spark, src)
+        graft.sources.OccTable.rewrite(spark, src, d => d.coalesce(1))
       }
-    }, s"graft-$kind-producer")
-    val q = graft.sources.OccStream.tailTo(spark, src, ckpt.toString,
-      (batch, ver) => graft.sources.OccTable
-        .streamingSink(dst, appId)(relay(batch), ver),
-      onRewrite = "skipRewrites", queryName = Some(qName))
-    producer.start()
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (productive.size < minBatches
-          && System.nanoTime() < deadline) Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      stopProducer = true
-      producer.join(10000)
-      q.stop()
-      spark.streams.removeListener(listener)
-    }
-    val prog = {
-      import scala.jdk.CollectionConverters._
-      productive.asScala.toSeq
-    }
-    val lat = prog.map(_._2)
+    })
+    val (elapsedSec, Seq(b)) = harness(spark, minBatches, deadlineSec,
+      Seq(() => graft.sources.OccStream.tailTo(spark, src, ckpt.toString,
+        (batch, ver) => graft.sources.OccTable
+          .streamingSink(dst, appId)(relay(batch), ver),
+        onRewrite = "skipRewrites", queryName = Some(s"graft_envelope_$kind"))),
+      feed = Some(append))
     val delivered = graft.sources.OccTable.read(spark, dst)().count()
     val srcRows = graft.sources.OccTable.read(spark, src)().count()
-    DocEnvelope(kind, delivered, elapsedSec,
-      delivered / elapsedSec * 60, lat.length,
-      if (lat.isEmpty) -1 else median(lat),
-      if (lat.isEmpty) -1 else lat.max, srcRows)
+    docEnvelope(kind, delivered, elapsedSec, b, srcRows)
   }
 
   /** Envelope of a WATERMARKED WINDOWED-AGG shape over the sensor rate
@@ -793,110 +643,42 @@ object SteadyState {
   def measureSensorWindowStream(spark: SparkSession, kind: String,
       build: DataFrame => DataFrame, rowsPerBatch: Int = 50,
       advanceMsPerBatch: Long = 120000L, minBatches: Int = 15,
-      deadlineSec: Int = 180): DocEnvelope = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    val out = Files.createTempDirectory(s"graft_${kind}_out").toString + "/out"
-    val ckpt = Files.createTempDirectory(s"graft_${kind}_ckpt")
-    val readings = Sources.rateSimulated(spark, rowsPerBatch = rowsPerBatch,
-      advanceMsPerBatch = advanceMsPerBatch)
-    val qName = s"graft_envelope_$kind"
-    val productive = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          productive.add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    spark.streams.addListener(listener)
-    val q = build(readings)
-      .writeStream
-      .queryName(qName)
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .start()
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (productive.size < minBatches
-          && System.nanoTime() < deadline) Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-    }
-    val prog = {
-      import scala.jdk.CollectionConverters._
-      productive.asScala.toSeq
-    }
-    val lat = prog.map(_._2)
-    val rows = prog.map(_._1).sum
-    val outRows =
-      if (new java.io.File(out).exists()) spark.read.parquet(out).count()
-      else 0L
-    DocEnvelope(kind, rows, elapsedSec, rows / elapsedSec * 60, lat.length,
-      if (lat.isEmpty) -1 else median(lat),
-      if (lat.isEmpty) -1 else lat.max, outRows)
-  }
+      deadlineSec: Int = 180): DocEnvelope =
+    parquetSection(spark, kind,
+      build(Sources.rateSimulated(spark, rowsPerBatch = rowsPerBatch,
+        advanceMsPerBatch = advanceMsPerBatch)),
+      minBatches, deadlineSec)
 
+  /** Drives the dual sink — [[Pipeline.startDual]]'s two halves,
+    * [[Pipeline.startRawSink]] then [[Pipeline.startAggSink]], started
+    * one at a time so a failing agg start still stops the raw query —
+    * from [[Sources.rateSimulated]] until the slower (stateful agg) query
+    * has processed `minAggBatches` productive micro-batches or
+    * `deadlineSec` elapses, then reads the envelope out of the engine's
+    * own progress telemetry and what the raw sink actually wrote.
+    * Latency quantiles are over PRODUCTIVE batches (numInputRows > 0):
+    * empty triggers cost ~nothing and would flatter the median.
+    */
   def measure(spark: SparkSession, rowsPerBatch: Int = 50,
       advanceMsPerBatch: Long = 120000L, minAggBatches: Int = 15,
       deadlineSec: Int = 180): Envelope = {
-    require(minAggBatches <= 100,
-      "measure polls q.recentProgress, a ring buffer capped at 100 " +
-        "entries — a larger minAggBatches would spin until the deadline; " +
-        "use the listener pattern of measureDocStream for longer runs")
     val out = Files.createTempDirectory("graft_steady_out").toString
     val ckpt = Files.createTempDirectory("graft_steady_ckpt").toString
     val readings = Sources.rateSimulated(spark, rowsPerBatch = rowsPerBatch,
       advanceMsPerBatch = advanceMsPerBatch)
-    val queries = Pipeline.startDual(readings, out, ckpt)
-    val raw = queries.head
-    val agg = queries(1)
-    val t0 = System.nanoTime()
-    var elapsedSec = 0.0
-    try {
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (agg.recentProgress.count(_.numInputRows > 0) < minAggBatches
-          && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-      }
-      // before stop(): the (multi-second) shutdown of two queries must not
-      // dilute msg/min — same rule as measureDocStream
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally queries.foreach(_.stop())
-
-    def latencies(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Long] =
-      q.recentProgress.toSeq.filter(_.numInputRows > 0)
-        .map(_.durationMs.get("triggerExecution").toLong)
-    val rawLat = latencies(raw)
-    val aggLat = latencies(agg)
-    // no sink dir = the query committed zero batches before the deadline —
-    // report the honest zero envelope instead of throwing on the read
-    val rows =
-      if (new java.io.File(s"$out/raw").exists())
-        spark.read.parquet(s"$out/raw").count()
-      else 0L
-    val flushed =
-      if (new java.io.File(s"$out/agg").exists())
-        spark.read.parquet(s"$out/agg").count()
-      else 0L
+    val (elapsedSec, Seq(raw, agg)) = harness(spark, minAggBatches,
+      deadlineSec, Seq(
+        () => Pipeline.startRawSink(readings, out, ckpt),
+        () => Pipeline.startAggSink(readings, out, ckpt)))
+    val rows = parquetRows(spark, s"$out/raw")
     Envelope(
       rows = rows, elapsedSec = elapsedSec,
       msgPerMin = rows / elapsedSec * 60,
-      rawBatches = rawLat.length,
-      rawMedianMs = if (rawLat.isEmpty) -1 else median(rawLat),
-      rawMaxMs = if (rawLat.isEmpty) -1 else rawLat.max,
-      aggBatches = aggLat.length,
-      aggMedianMs = if (aggLat.isEmpty) -1 else median(aggLat),
-      aggMaxMs = if (aggLat.isEmpty) -1 else aggLat.max,
-      aggWindowsFlushed = flushed,
+      rawBatches = raw.count, rawMedianMs = raw.medianMs,
+      rawMaxMs = raw.maxMs,
+      aggBatches = agg.count, aggMedianMs = agg.medianMs,
+      aggMaxMs = agg.maxMs,
+      aggWindowsFlushed = parquetRows(spark, s"$out/agg"),
       rowsPerBatch = rowsPerBatch, advanceMsPerBatch = advanceMsPerBatch)
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
@@ -72,8 +73,9 @@ class SteadyStateSpec extends SparkSpec {
       s"curation micro-batch median ${cur.medianMs} ms breaches <10 s")
     // >= not ===: a final micro-batch can commit to the parquet sink
     // after the poll loop counted progress but before stop() lands, so
-    // the sink may hold a batch the docs sum (from recentProgress) never
-    // saw — the gate is "annotates every doc, never silently drops"
+    // the sink may hold a batch the docs sum (from the progress
+    // listener) never saw — the gate is "annotates every doc, never
+    // silently drops"
     assert(cur.outRows >= cur.docs,
       s"curation wrote ${cur.outRows} of ${cur.docs} docs")
   }
@@ -124,6 +126,42 @@ class SteadyStateSpec extends SparkSpec {
       s"delivered ${occ.docs} rows > ${occ.outRows} committed — duplicates")
     assert(occ.docs >= occ.outRows / 2,
       s"delivered only ${occ.docs} of ${occ.outRows} committed rows")
+  }
+
+  test("file-tail and hopping-window sections reach their batches through the feed and parquet-sink paths") {
+    // the live producer path: a feed thread appends to the log while the
+    // buffered FileTailReader tails it; parse + drop-incomplete keeps
+    // every well-formed reading (>= for the late-commit race above)
+    val tail = SteadyState.measureFileTailStream(spark, minBatches = 5,
+      deadlineSec = 120)
+    info(tail.json)
+    assert(tail.batches >= 5, s"only ${tail.batches} productive batches")
+    assert(tail.outRows >= tail.docs,
+      s"file tail wrote ${tail.outRows} of ${tail.docs} readings")
+    // no feed: the rate clock drives the query directly. 10 min of event
+    // time per batch closes 10-min/5-min hopping windows against the
+    // 10-min watermark within 5 batches (the 2-min default needs ~10)
+    val hop = SteadyState.measureSensorWindowStream(spark,
+      "hopping_window_stream",
+      r => graft.ops.WindowedAgg.hopping(
+        r.withWatermark("timestamp", "10 minutes"),
+        "timestamp", "sensor_id", "temperature"),
+      advanceMsPerBatch = 600000L, minBatches = 5, deadlineSec = 120)
+    info(hop.json)
+    assert(hop.batches >= 5, s"only ${hop.batches} productive batches")
+    assert(hop.outRows > 0, "no finalized hopping window flushed")
+  }
+
+  test("a section whose query fails analysis leaks no listener and no query") {
+    val listeners = spark.streams.listListeners().length
+    val active = spark.streams.active.map(_.id).toSet
+    intercept[AnalysisException] {
+      SteadyState.measureSensorWindowStream(spark, "bad",
+        r => r.select(col("no_such_column")), minBatches = 1,
+        deadlineSec = 10)
+    }
+    assert(spark.streams.listListeners().length === listeners)
+    assert(spark.streams.active.map(_.id).toSet === active)
   }
 
   test("kafka source contract: reference reader wiring; connector-missing failure is actionable (S1/ST8)") {
