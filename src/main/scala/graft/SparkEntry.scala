@@ -767,28 +767,46 @@ object SparkEntry {
     }
   }
 
-  /** Build-once ts-sorted events layout PLUS its per-file min/max stats
-    * sidecar — the data-skipping fixture under `q_fileskip_scan`. Data
-    * and sidecar share one cache key (a sidecar must describe exactly
-    * one set of part-files), so a regenerated source rebuilds both.
+  /** Build-once OCC table under [[Layout.ensureLayoutDir]]: `frame`
+    * initialized at `<cache dir>/t` with `statsColumns` in its log, the
+    * marker stamped only after init commits. A half-built fixture is
+    * cleared before the rebuild (init refuses a live log). Returns the
+    * table path.
     */
-  private[graft] def fileStatsLayout(s: SparkSession,
-      dir: String): (String, String) = {
-    val src = new java.io.File(s"$dir/events.parquet")
-    val key = s"$dir:${src.length}:${src.lastModified}:sorted32:ts,user_id:us1"
-    // ONE cache entry holding data/ AND stats/ (marker stamped only
-    // after both): the sidecar names the data dir's exact part files
-    // (write-job UUIDs), so two independent cache dirs could pair a
-    // surviving stale sidecar with a rebuilt data dir — a one-sided
-    // tmp eviction would then prune against files that no longer exist
-    val root = Layout.ensureLayoutDir("fileskip", key) { p =>
-      Layout.writeSorted(Tables.events(s, dir), "ts", s"$p/data",
-        nFiles = 32)
-      Layout.writeFileStats(s, s"$p/data", Seq("ts", "user_id"),
-        s"$p/stats")
+  private def occLayout(s: SparkSession, prefix: String, cacheKey: String,
+      statsColumns: Seq[String])(frame: => DataFrame): String = {
+    val root = Layout.ensureLayoutDir(prefix, cacheKey) { p =>
+      deleteTree(s, p)
+      OccTable.init(frame, s"$p/t", statsColumns = statsColumns)
       new java.io.File(p, "_SUCCESS").createNewFile()
     }
-    (s"$root/data", s"$root/stats")
+    s"$root/t"
+  }
+
+  /** Build-once ts-clustered events OCC table with `ts` stats in its
+    * log — the data-skipping fixture under `q_fileskip_scan`: 32
+    * range-partitioned, ts-sorted files, so a week range plans only the
+    * few files whose [min, max] intersects it.
+    */
+  private[graft] def fileStatsLayout(s: SparkSession, dir: String): String = {
+    val src = new java.io.File(s"$dir/events.parquet")
+    occLayout(s, "fileskip",
+      s"$dir:${src.length}:${src.lastModified}:occ32:ts:us1", Seq("ts"))(
+      Tables.events(s, dir)
+        .repartitionByRange(32, col("ts")).sortWithinPartitions("ts"))
+  }
+
+  /** `q_fileskip_scan`'s week, 2024-01-08 through 2024-01-14 inclusive,
+    * as epoch micros (the unit of the OCC log's `ts` stats). The
+    * literals resolve in the session time zone, as a
+    * `lit(...).cast("timestamp")` filter would.
+    */
+  private[graft] def fileSkipWeek(s: SparkSession): (Long, Long) = {
+    val r = s.range(1).select(
+      unix_micros(lit("2024-01-08 00:00:00").cast("timestamp")),
+      unix_micros(lit("2024-01-14 23:59:59.999999").cast("timestamp")))
+      .head
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Build-once TWO-GENERATION layout of the events table — the
@@ -924,6 +942,23 @@ object SparkEntry {
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
     new java.io.File(
       sys.props("java.io.tmpdir"), s"graft_${prefix}_$user/$key").toString
+  }
+
+  /** Recursively delete `path`, if present. */
+  private def deleteTree(s: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** [[scratchDir]] of (`prefix`, `key`), deleted on entry — the fresh
+    * per-run root an OCC query builds its tables under (init refuses a
+    * live log).
+    */
+  private def freshScratch(s: SparkSession, prefix: String,
+      key: String): String = {
+    val root = scratchDir(prefix, key)
+    deleteTree(s, root)
+    root
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2661,16 +2696,16 @@ object SparkEntry {
     }),
 
     // ---- FILE-LEVEL DATA SKIPPING: a week-range scan answered through
-    //      the per-file min/max sidecar — only files whose [min_ts,
-    //      max_ts] overlaps the range are ever opened (LayoutSpec pins
-    //      the measured file-count reduction); the oracle replays the
-    //      same predicate over the whole table, so an over-eager skip
-    //      (a dropped file that held a matching row) fails the hash ----
+    //      the OCC log's per-file ts stats — only files whose [min_ts,
+    //      max_ts] intersects the range are ever opened (LayoutSpec's
+    //      "fileskip fixture" test pins the file-count reduction); the
+    //      oracle replays the same predicate over the whole table, so an
+    //      over-eager skip (a dropped file that held a matching row)
+    //      fails the hash ----
     "q_fileskip_scan" -> ((s, dir) => {
-      val (data, stats) = fileStatsLayout(s, dir)
-      Layout.skipScan(s, data, stats, "ts",
-          lit("2024-01-08 00:00:00").cast("timestamp"),
-          lit("2024-01-14 23:59:59.999999").cast("timestamp"))
+      val (lo, hi) = fileSkipWeek(s)
+      OccTable.readPruned(s, fileStatsLayout(s, dir), "ts",
+          lo.toDouble, hi.toDouble)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           round(sum("value"), 2).as("sum_value"),
@@ -3018,27 +3053,28 @@ object SparkEntry {
           round(sum("value"), 2).as("sum_value"))
     }),
 
-    // ---- copy-on-write CDC apply: the SAME merge as q_upsert, but
-    //      against a key-bucketed partitioned snapshot where only the
-    //      affected bucket directories are read or rewritten (partition
-    //      filter from the batch's distinct buckets — driver metadata).
-    //      Idempotent, so re-runs converge; the oracle is the same
-    //      latest-wins replay ----
+    // ---- CDC apply onto a table: the SAME merge as q_upsert, run as an
+    //      OCC MERGE. A build-once key-clustered base (16 files, event_id
+    //      stats) is shallow-cloned into a fresh scratch (zero bytes
+    //      copied), so every run merges into the same two-version log.
+    //      The updates carry ts + 60 days, so "source replaces match"
+    //      is the oracle's latest-by-ts rule on this input ----
     "q_upsert_partitioned" -> ((s, dir) => {
       val src = new java.io.File(s"$dir/events.parquet")
-      def base = Tables.events(s, dir)
+      val base = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val snapPath = Layout.ensureLayoutDir("upsnap",
-        s"$dir:${src.length}:${src.lastModified}:b16:us1") { p =>
-        Upsert.initPartitioned(base, Seq("event_id"), nBuckets = 16, p)
-      }
+      val snap = occLayout(s, "upsnap",
+        s"$dir:${src.length}:${src.lastModified}:occ16:us1",
+        Seq("event_id"))(base.repartitionByRange(16, col("event_id")))
+      val t = freshScratch(s, "occ_upsert", s"$dir|upsert") + "/t"
+      OccTable.clone(s, snap, t)
       val updates = base.filter(col("event_id") % 10 === 0)
         .withColumn("ts", col("ts") + expr("INTERVAL 60 DAYS"))
         .withColumn("value", -col("value"))
         .withColumn("deleted", col("event_id") % 100 === 0)
-      Upsert.applyPartitioned(s, snapPath, updates, Seq("event_id"), "ts",
-        nBuckets = 16, deleteCol = Some("deleted"))
-      s.read.parquet(snapPath)
+      OccTable.merge(s, t, updates, Seq("event_id"),
+        deleteCol = Some("deleted"))
+      OccTable.read(s, t)()
         .select("event_id", "ts", "user_id", "event_type", "value")
     }),
 
@@ -3052,16 +3088,8 @@ object SparkEntry {
     "q_occ_table" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_q_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_q", dir)
+      val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 3 === 0), t)
       OccTable.append(base.filter(col("event_id") % 3 === 1), t)
       var raced = false
@@ -3084,16 +3112,8 @@ object SparkEntry {
     "q_occ_skip" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|skip".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_skip_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_skip", s"$dir|skip")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3123,16 +3143,8 @@ object SparkEntry {
     "q_occ_dsv2" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|dsv2".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_dsv2_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_dsv2", s"$dir|dsv2")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3167,17 +3179,8 @@ object SparkEntry {
     "q_occ_dsv2_mapped" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|dsv2map".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_dsv2map_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_dsv2map", s"$dir|dsv2map")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3216,18 +3219,9 @@ object SparkEntry {
     "q_occ_dsv2_clone" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|dsv2clone".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_dsv2cl_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
-      val c = root.toString + "/fork"
+      val root = freshScratch(s, "occ_dsv2cl", s"$dir|dsv2clone")
+      val t = s"$root/t"
+      val c = s"$root/fork"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3258,17 +3252,8 @@ object SparkEntry {
     "q_occ_dsv2_dv" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|dsv2dv".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_dsv2dv_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_dsv2dv", s"$dir|dsv2dv")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3302,17 +3287,8 @@ object SparkEntry {
     //      flat events table ----
     "q_occ_widen" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("event_id")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|widen".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_widen_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_widen", s"$dir|widen")
+      val t = s"$root/t"
       OccTable.init(ev.filter(col("event_id") % 2 === 0)
         .withColumn("metric", (col("event_id") % 1000).cast("int"))
         .coalesce(2), t, statsColumns = Seq("metric"))
@@ -3333,17 +3309,8 @@ object SparkEntry {
     "q_occ_partition_prune" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|pvprune".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_pv_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_pv", s"$dir|pvprune")
+      val t = s"$root/t"
       // two partitioned commits so pruning spans init AND append adds
       OccTable.init(ev.filter(col("event_id") % 2 === 0), t,
         statsColumns = Seq("value"), partitionBy = Seq("event_type"))
@@ -3365,17 +3332,8 @@ object SparkEntry {
     "q_occ_bloom_skip" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|bloomskip".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_bloom_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_bloom", s"$dir|bloomskip")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3407,17 +3365,8 @@ object SparkEntry {
     "q_occ_optimize" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|optimize".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_opt_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_opt", s"$dir|optimize")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3448,17 +3397,8 @@ object SparkEntry {
     "q_occ_merge" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|merge".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_merge_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_merge", s"$dir|merge")
+      val t = s"$root/t"
       val maxId = ev.agg(max("event_id")).head.getLong(0)
       val qId = maxId / 4
       // key-clustered layout: 8 files of disjoint event_id ranges, so
@@ -3489,17 +3429,8 @@ object SparkEntry {
     "q_occ_merge_backfill" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|mergebf".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_mergebf_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_mergebf", s"$dir|mergebf")
+      val t = s"$root/t"
       val maxId = ev.agg(max("event_id")).head.getLong(0)
       val qId = maxId / 4
       OccTable.init(ev.repartitionByRange(8, col("event_id")), t,
@@ -3530,17 +3461,8 @@ object SparkEntry {
     "q_occ_pruned_composed" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|prunedcomp".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_prc_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_prc", s"$dir|prunedcomp")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3577,17 +3499,8 @@ object SparkEntry {
     "q_occ_rename" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|colmap".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_cm_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_cm", s"$dir|colmap")
+      val t = s"$root/t"
       OccTable.init(ev.repartitionByRange(4, col("event_id")), t,
         statsColumns = Seq("event_id", "value"))
       OccTable.renameColumn(s, t, "value", "reading")
@@ -3611,17 +3524,8 @@ object SparkEntry {
     "q_occ_generated" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|gencol".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_gen_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_gen", s"$dir|gencol")
+      val t = s"$root/t"
       val rule = "unix_micros(ts) div 86400000000"
       OccTable.init(ev.filter(col("event_id") % 2 === 0)
         .withColumn("day", expr(rule)), t, partitionBy = Seq("day"))
@@ -3643,17 +3547,8 @@ object SparkEntry {
     //      makes the file counts deterministic) ----
     "q_occ_vacuum_audit" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("event_id", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|vacaudit".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_vac_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_vac", s"$dir|vacaudit")
+      val t = s"$root/t"
       OccTable.init(ev.filter(col("event_id") % 2 === 0).coalesce(1), t)
       OccTable.append(ev.filter(col("event_id") % 2 === 1).coalesce(1), t)
       OccTable.rewrite(s, t,
@@ -3685,17 +3580,8 @@ object SparkEntry {
     "q_occ_delete_dv" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|deletedv".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_dv_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_dv", s"$dir|deletedv")
+      val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
@@ -3723,17 +3609,8 @@ object SparkEntry {
     "q_occ_detail" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|detail".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_detail_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_detail", s"$dir|detail")
+      val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0).coalesce(1),
         t, statsColumns = Seq("event_id"))                           // v0
       OccTable.append(base.filter(col("event_id") % 2 === 1)
@@ -3765,17 +3642,8 @@ object SparkEntry {
     "q_occ_clone" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|clone".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_clone_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val (src, dst) = (root.toString + "/src", root.toString + "/dst")
+      val root = freshScratch(s, "occ_clone", s"$dir|clone")
+      val (src, dst) = (s"$root/src", s"$root/dst")
       OccTable.init(base.filter(col("event_id") % 2 === 0), src)
       OccTable.clone(s, src, dst)
       OccTable.append(base.filter(col("event_id") % 2 === 1), dst)
@@ -3792,17 +3660,8 @@ object SparkEntry {
     "q_occ_history" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|history".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_hist_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_hist", s"$dir|history")
+      val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0)
         .coalesce(1), t)                                           // v0
       OccTable.append(base.filter(col("event_id") % 2 === 1)
@@ -3823,17 +3682,8 @@ object SparkEntry {
     "q_occ_delete" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|delete".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_del_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_del", s"$dir|delete")
+      val t = s"$root/t"
       val maxId = ev.agg(max("event_id")).head.getLong(0)
       val qId = maxId / 4
       val blooms = Seq(OccBloom.BloomCol("user_id",
@@ -3869,17 +3719,8 @@ object SparkEntry {
     "q_occ_changes" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|changes".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_changes_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_changes", s"$dir|changes")
+      val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0), t)       // v0
       OccTable.append(base.filter(col("event_id") % 2 === 1), t)     // v1
       OccTable.rewrite(s, t, d => d.withColumn("value",
@@ -3905,17 +3746,8 @@ object SparkEntry {
     "q_occ_restore" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|restore".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_restore_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_restore", s"$dir|restore")
+      val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0), t)       // v0
       OccTable.append(base.filter(col("event_id") % 2 === 1), t)     // v1
       OccTable.rewrite(s, t,
@@ -3954,22 +3786,14 @@ object SparkEntry {
     "q_occ_sql" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val user = sys.props.getOrElse("user.name", "anon")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|sqlddl".getBytes("UTF-8")).map("%02x".format(_))
-        .mkString
-      val root = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_occ_sql_$user", key)
-      val rootPath = new org.apache.hadoop.fs.Path(root.toString)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
-      val t = root.toString + "/t"
+      val root = freshScratch(s, "occ_sql", s"$dir|sqlddl")
+      val t = s"$root/t"
       OccTable.init(ev.filter(col("event_id") % 2 === 0).coalesce(2), t,
         statsColumns = Seq("event_id"))
       OccTable.append(ev.filter(col("event_id") % 2 === 1).coalesce(2), t,
         statsColumns = Seq("event_id"))
-      val name = s"occ_sql_${key.take(8)}"
+      // the scratch leaf is the key's md5: a per-source table name
+      val name = s"occ_sql_${new java.io.File(root).getName.take(8)}"
       s.sql(s"DROP TABLE IF EXISTS $name")
       s.sql(s"CREATE TABLE $name USING `graft-occ` OPTIONS (path '$t')")
       s.sql(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -6497,9 +6321,10 @@ object SparkEntry {
         |           THEN CAST(floor(value / 10) AS BIGINT) ELSE 0 END)
         |       AS BIGINT) AS bucket_sum
         |FROM events GROUP BY 1""".stripMargin,
-    // Replayed over the ORIGINAL table: equality proves the sidecar
+    // Replayed over the ORIGINAL table: equality proves the log stats
     // pruned no file that held a matching row (the file-skip win itself
-    // is pinned by LayoutSpec — engine-internal, not SQL-expressible).
+    // is pinned by LayoutSpec's "fileskip fixture" test —
+    // engine-internal, not SQL-expressible).
     "q_fileskip_scan" ->
       """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  round(sum(value), 2) AS sum_value,

@@ -30,7 +30,6 @@ object StreamBench {
     // the LIVE source path (external producer appends, FileTailSource
     // tails) — S1-live measured at the same cadence class
     val tail = graft.streaming.SteadyState.measureFileTailStream(spark)
-    val cdc = graft.streaming.SteadyState.measureCdcApplyStream(spark)
     val ewma = graft.streaming.SteadyState.measureEwmaStream(spark, sfDir)
     // the two window families the dual sink doesn't price: hopping
     // (overlapping ×width/slide state) and session (gap-merge state;
@@ -70,8 +69,8 @@ object StreamBench {
     // the lakehouse loop live: OCC append-producer + commit-log tail
     // relaying into a second fenced OCC table, compaction mid-run
     val occ = graft.streaming.SteadyState.measureOccTailStream(spark)
-    // X129: the streaming MERGE — the cdc_apply shape applied INSIDE
-    // the table format (fenced mergeSink, stats-discovered candidates)
+    // X129: the streaming MERGE — CDC apply inside the table format
+    // (fenced mergeSink, stats-discovered candidates)
     val occMerge = graft.streaming.SteadyState.measureOccMergeStream(spark)
     // X119: the SAME loop with the X14 curation pipeline applied to
     // every relayed micro-batch — tail → curate → fenced append, the
@@ -137,7 +136,7 @@ object StreamBench {
           .toDF("sensor_id", "from_band", "to_band"))
     }
     // section order = key order in the artifact
-    val sections = Seq(dedup, cur, clf, bm25, asof, ann, tail, cdc, ewma,
+    val sections = Seq(dedup, cur, clf, bm25, asof, ann, tail, ewma,
       hop, sess, ssj, occ, occMerge, lake, kll, roll, mg, trans)
     val combined =
       (env.json.dropRight(1) +: sections.map(_.json)).mkString("", ",", "}")

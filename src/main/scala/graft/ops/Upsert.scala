@@ -18,6 +18,11 @@ import org.apache.spark.sql.functions._
   * row-version resolution. Map-side partial `max_by` collapses each
   * partition to one candidate per key before the shuffle, so a snapshot
   * rewritten daily at 100 TB moves keys, not history.
+  *
+  * This is the version-ordered batch reference. Applying changes to a
+  * stored table, with only the touched files rewritten, is
+  * [[graft.sources.OccTable.merge]]; its streaming form is
+  * [[graft.sources.OccTable.mergeSink]].
   */
 object Upsert {
 
@@ -60,173 +65,5 @@ object Upsert {
     // evaluate null and silently drop the row
     deleteCol.fold(unpacked)(d =>
       unpacked.filter(!coalesce(col(d), lit(false))).drop(d))
-  }
-
-  /** Partition column of the copy-on-write snapshot layout. */
-  val BucketCol = "__bucket"
-
-  /** Write `df` as a key-bucketed copy-on-write snapshot: partitioned by
-    * `pmod(xxhash64(key), nBuckets)` so every key lives in exactly one
-    * partition directory and [[applyPartitioned]] can rewrite ONLY the
-    * buckets a change batch touches. `nBuckets` is the rewrite
-    * granularity knob: at 100 TB, thousands (a batch touching 0.1% of
-    * keys then rewrites ~0.1% of the table, not all of it).
-    */
-  def initPartitioned(df: DataFrame, keyCols: Seq[String], nBuckets: Int,
-      path: String): Unit = {
-    require(nBuckets >= 1, s"initPartitioned: nBuckets=$nBuckets")
-    require(!df.columns.contains(BucketCol), s"$BucketCol is reserved")
-    val bucketed = df.withColumn(BucketCol,
-      pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets)))
-    if (df.isEmpty) writeEmptyMarker(bucketed, path)
-    // explicit partition count: each task holds whole buckets, so the
-    // write emits ONE file per bucket dir; the number pins the exchange
-    // against AQE coalescing (a coalesced single task would write every
-    // bucket's file serially — guide §6 small files / §2.4)
-    else bucketed
-      .repartition(nBuckets, col(BucketCol))
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(path)
-  }
-
-  /** An empty snapshot cannot be a bare partitioned dir (zero rows write
-    * zero partition directories and the next read dies with
-    * UNABLE_TO_INFER_SCHEMA): it is stored as ONE empty unpartitioned
-    * part file carrying the full schema — `BucketCol` as an ordinary
-    * column, so bucket-filtered reads still resolve. The next non-empty
-    * apply replaces it wholesale with a partitioned layout again.
-    */
-  private def writeEmptyMarker(withBucket: DataFrame, path: String): Unit =
-    withBucket.limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(path)
-
-  /** Whether `path` currently holds any `BucketCol=…` partition dirs. */
-  private def hasBucketDirs(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(root) && fs.listStatus(root)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
-  }
-
-  /** Copy-on-write CDC apply — the scale-right form of [[latestWins]]:
-    * merge a change batch into an [[initPartitioned]] snapshot REWRITING
-    * ONLY THE AFFECTED BUCKET PARTITIONS. The batch's distinct bucket
-    * ids (≤ nBuckets — driver metadata) become a partition filter, so
-    * the read prunes to the touched directories at planning; the merge
-    * is [[latestWins]] scoped to those buckets; dynamic partition
-    * overwrite replaces exactly those directories. Untouched buckets are
-    * never read OR written — a batch touching k of n buckets costs
-    * O(k/n) of the table, which is what makes continuous CDC apply
-    * affordable at 100 TB without a table format.
-    *
-    * `updates` carries the snapshot schema plus (optionally) `deleteCol`
-    * tombstones; the snapshot side is implicitly non-deleted.
-    * IDEMPOTENT: re-applying the same batch converges to the same state
-    * (latest-wins is), so a failed-and-retried apply is safe.
-    * Returns the rewritten bucket ids.
-    */
-  def applyPartitioned(spark: org.apache.spark.sql.SparkSession,
-      snapshotPath: String, updates: DataFrame, keyCols: Seq[String],
-      versionCol: String, nBuckets: Int,
-      deleteCol: Option[String] = None): Seq[Long] = {
-    val upd = updates.withColumn(BucketCol,
-      pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets)))
-    val affected = upd.select(BucketCol).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    if (affected.isEmpty) return affected
-    val cur0 = spark.read.parquet(snapshotPath)
-      .filter(col(BucketCol).isin(affected: _*))
-      .withColumn(BucketCol, col(BucketCol).cast("long"))
-    // align schemas: the on-disk snapshot has no tombstone column
-    val cur = deleteCol.fold(cur0)(d => cur0.withColumn(d, lit(false)))
-    val merged = latestWins(
-      cur.select(upd.columns.map(col): _*), upd, keyCols, versionCol,
-      deleteCol).persist()
-    try {
-      // this collect also MATERIALIZES the persisted merge before any
-      // write below truncates the same path the plan reads from
-      val surviving = merged.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)).toSet
-      if (!hasBucketDirs(spark, snapshotPath)) {
-        // previous state was the empty marker: replace it wholesale
-        // with a partitioned layout (a full overwrite clears the marker
-        // file; dynamic overwrite would leave it beside the new dirs
-        // and break partition discovery). An all-tombstone merge stays
-        // in marker form — zero partitioned rows write zero dirs.
-        if (surviving.isEmpty) writeEmptyMarker(merged, snapshotPath)
-        else merged.repartition(affected.size, col(BucketCol))
-          .write.partitionBy(BucketCol).mode("overwrite")
-          .parquet(snapshotPath)
-      } else {
-        // repartition by bucket before the dynamic overwrite: the merge
-        // output arrives partitioned by KEY hash (latestWins' groupBy),
-        // so every write task held rows of every affected bucket and the
-        // job emitted (#tasks × #buckets) small files — measured 3.6 s of
-        // a 6.3 s apply at 32 tasks × 16 buckets. Clustered by bucket,
-        // the write emits one file per bucket dir and the commit renames
-        // #buckets files, not #tasks × #buckets (guide §6: aim file
-        // count at the partition layout; §8 step 4: cluster by the
-        // output unit before the write). `affected.size` pins the
-        // exchange against AQE coalescing back to one task.
-        merged.repartition(affected.size, col(BucketCol))
-          .write.partitionBy(BucketCol).mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(snapshotPath)
-        // a bucket whose EVERY row was tombstoned contributes no
-        // partition dir to the write, and dynamic overwrite only
-        // replaces dirs PRESENT in the write — without an explicit
-        // delete the old rows would silently resurrect (caught by the
-        // streaming spec's tombstone-of-a-lone-key case)
-        val emptied = affected.filterNot(surviving)
-        if (emptied.nonEmpty) {
-          val root = new org.apache.hadoop.fs.Path(snapshotPath)
-          val fs = root.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          emptied.foreach(b => fs.delete(
-            new org.apache.hadoop.fs.Path(root, s"$BucketCol=$b"), true))
-          // if that removed the snapshot's last populated buckets, the
-          // dir now has no data files and the next read would die with
-          // UNABLE_TO_INFER_SCHEMA: degrade to the readable empty marker
-          if (!hasBucketDirs(spark, snapshotPath))
-            writeEmptyMarker(merged, snapshotPath)
-        }
-      }
-    } finally merged.unpersist()
-    affected
-  }
-
-  /** Standing CDC apply: each micro-batch of the change stream is merged
-    * into the bucketed snapshot via [[applyPartitioned]] inside
-    * `foreachBatch` — the streaming MERGE INTO pattern, with the same
-    * only-touched-buckets cost per batch. Exactly-once effect is
-    * layered: a batch-id fence ([[graft.streaming.TxnSink.fenced]],
-    * markers in the sibling `<snapshotPath>_txn` dir — the snapshot
-    * itself can be wholesale-overwritten by the empty-marker
-    * transition, so markers cannot live inside it) skips a replayed
-    * batch outright (restart between foreachBatch success and the
-    * checkpoint commit), and [[applyPartitioned]]'s latest-wins
-    * idempotence covers the remaining crash-MID-merge replay, where the
-    * fence correctly re-runs a half-applied batch. Out-of-order
-    * delivery converges too — a stale version arriving late loses to
-    * the state already written. The checkpoint dir carries source
-    * offsets; pass a durable one in production (markers are
-    * per-checkpoint-lineage: reprocessing from a fresh checkpoint needs
-    * a fresh snapshot + marker pair).
-    */
-  def applyStream(changes: DataFrame, snapshotPath: String,
-      keyCols: Seq[String], versionCol: String, nBuckets: Int,
-      deleteCol: Option[String], checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(changes.isStreaming, "applyStream: changes must be a stream")
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(graft.streaming.TxnSink.fenced(s"${snapshotPath}_txn") {
-        (batch: DataFrame, _: Long) =>
-          applyPartitioned(batch.sparkSession, snapshotPath, batch,
-            keyCols, versionCol, nBuckets, deleteCol)
-          ()
-      })
-      .start()
   }
 }

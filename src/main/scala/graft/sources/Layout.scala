@@ -71,9 +71,9 @@ object Layout {
     * the versioning record that tells a maintainer WHICH files belong
     * to which schema generation (and so which rewrite a retype must
     * touch). Footer reads happen on the driver over the layout's file
-    * list — O(#files) metadata, the same driver-resident class as
-    * [[statsSurvivingFiles]]; this is a maintenance-time audit, not a
-    * query-path op.
+    * list — O(#files) metadata, the same driver-resident class as a
+    * table-format planner's file list; this is a maintenance-time audit,
+    * not a query-path op.
     */
   def schemaGenerations(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -511,178 +511,5 @@ object Layout {
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
     df.withColumn("__h", graft.ext.PortableHash.hash60(canon))
       .agg(count(lit(1)).as("row_count"), aggs: _*)
-  }
-
-  /** Per-FILE min/max/count statistics sidecar — the data-skipping index
-    * of a plain-parquet lake (what the Delta/Iceberg transaction log
-    * stores per file): one row per part-file with `rows` and
-    * `min_c`/`max_c` for each named column, written as a tiny parquet
-    * table next to (never inside) the data. One aggregation pass over
-    * the data builds it; at 100 TB the sidecar is O(#files) rows —
-    * millions, not billions — so query-time pruning reads kilobytes of
-    * sidecar instead of opening every file's footer. The sidecar
-    * describes a SPECIFIC set of part-files: rebuild it after any
-    * rewrite of `dataPath` (cache both under one key, as
-    * [[ensureLayoutDir]] callers do). Flat (unpartitioned) layouts only
-    * — for `day=`-partitioned lakes, partition pruning already skips at
-    * directory granularity.
-    */
-  def writeFileStats(spark: SparkSession, dataPath: String,
-      cols: Seq[String], statsPath: String): Unit = {
-    require(cols.nonEmpty, "writeFileStats: empty column list")
-    val aggs = count(lit(1)).as("rows") +:
-      cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
-        max(col(c)).as(s"max_$c")))
-    val data = read(spark, dataPath)
-    data
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      // the schema the stats were built against, per row: the sidecar's
-      // version record — [[updateFileStats]] stamps appended files with
-      // THEIR schema hash, so distinct schema_hash values in one sidecar
-      // are exactly the layout's schema generations (the maintenance
-      // view [[schemaGenerations]] computes from footers, kept for free
-      // here)
-      .withColumn("schema_hash", lit(schemaHash(data.schema)))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(statsPath)
-  }
-
-  /** Incremental sidecar maintenance — what makes [[writeFileStats]]
-    * viable as a STANDING process: reconcile the sidecar against the
-    * directory's current part-files, scanning ONLY files the sidecar
-    * has never seen (an appending sink adds files; compaction/expiry
-    * remove them). Cost is O(new data) + O(sidecar), never a rescan of
-    * the table — at 100 TB the nightly update reads the day's arrivals,
-    * not the lake. Files are identified by part-file NAME (unique per
-    * directory by construction — writer UUIDs — and stable across
-    * `file:/` vs `file:///` URI renderings). The rewritten sidecar
-    * lands via temp-and-swap, so a concurrent [[skipScan]] can never
-    * read a PARTIALLY-written sidecar — but the delete→rename gap can
-    * surface to a racing reader as a transient missing path (plain
-    * filesystems have no rename-over-directory): run maintenance
-    * off-peak or give readers one retry; a table format's pointer-swap
-    * log is the fully atomic version of this step. Returns
-    * (kept, added, dropped) row counts.
-    */
-  def updateFileStats(spark: SparkSession, dataPath: String,
-      cols: Seq[String], statsPath: String): (Int, Int, Int) = {
-    require(cols.nonEmpty, "updateFileStats: empty column list")
-    val dataDir = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val onDisk = fs.listStatus(dataDir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => s.getPath.getName -> s.getPath.toUri.toString).toMap
-    val old0 = read(spark, statsPath)
-    // sidecars written before schema versioning lack the column: carry
-    // a NULL hash forward rather than failing the reconcile
-    val old = (if (old0.columns.contains("schema_hash")) old0
-      else old0.withColumn("schema_hash", lit(null).cast("string")))
-      .withColumn("__base", element_at(split(col("file"), "/"), -1))
-    val oldNames = old.select("__base").collect().map(_.getString(0)).toSet
-    val kept = old.filter(col("__base").isInCollection(
-      onDisk.keySet.toSeq match { case Nil => Seq("") case s => s }))
-    val newPaths = (onDisk.keySet -- oldNames).toSeq.sorted.map(onDisk)
-    val aggs = count(lit(1)).as("rows") +:
-      cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
-        max(col(c)).as(s"max_$c")))
-    val merged =
-      if (newPaths.isEmpty) kept.drop("__base")
-      else {
-        // appended files are stamped with THEIR schema: hash each new
-        // file's own footer (as [[schemaGenerations]] does) rather than
-        // one batch-level spark.read over all of them, which samples a
-        // single footer — wrong the day an update batch straddles a
-        // schema change. One stats scan per generation (usually 1,
-        // briefly 2 after a column ships), never per file.
-        val byGen = newPaths
-          .map(p => schemaHash(spark.read.parquet(p).schema) -> p)
-          .groupBy(_._1).toSeq.sortBy(_._1)
-        val freshStats = byGen.map { case (hash, ps) =>
-          spark.read.parquet(ps.map(_._2): _*)
-            .groupBy(input_file_name().as("file"))
-            .agg(aggs.head, aggs.tail: _*)
-            // a second distinct schema_hash in the sidecar is the
-            // recorded fact that the layout evolved (and which files
-            // are which generation — the [[readEvolved]] / rewrite
-            // decision input)
-            .withColumn("schema_hash", lit(hash))
-        }.reduce(_.unionByName(_))
-        kept.drop("__base").unionByName(freshStats)
-      }
-    // temp-and-swap: the merged frame READS statsPath, so it must land
-    // elsewhere first; the final rename is the atomic publish step
-    val statsDir = new org.apache.hadoop.fs.Path(statsPath)
-    val tmp = new org.apache.hadoop.fs.Path(statsPath + ".swap")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(statsDir, true)
-    fs.rename(tmp, statsDir)
-    val keptN = oldNames.count(onDisk.contains)
-    (keptN, newPaths.size, oldNames.size - keptN)
-  }
-
-  /** Files of the layout a closed range predicate `lo <= c <= hi` can
-    * possibly match, decided from the [[writeFileStats]] sidecar alone:
-    * a file survives iff its [min_c, max_c] overlaps [lo, hi]. All-null
-    * files carry null min/max and are skipped (a range predicate never
-    * matches NULL) — three-valued logic does this without a special
-    * case: `!(null || null)` is null, which filters. Returns
-    * (surviving file paths, total files in the sidecar); the survivor
-    * list is driver-resident by design — O(#files), the same thing
-    * every table-format planner holds to plan a scan.
-    */
-  def statsSurvivingFiles(spark: SparkSession, statsPath: String,
-      colName: String, lo: Column, hi: Column): (Seq[String], Int) = {
-    // ONE pass over the sidecar: every file name out, tagged keep/skip
-    // (a separate count() would be a second job on the query hot path)
-    val stats = readStatsWithRetry(spark, statsPath)
-    require(stats.columns.contains(s"min_$colName"),
-      s"stats sidecar at $statsPath has no min_$colName/max_$colName — " +
-        s"built with cols=${stats.columns.filter(_.startsWith("min_")).map(_.stripPrefix("min_")).mkString(",")}")
-    val tagged = stats
-      .select(col("file"),
-        coalesce(!(col(s"max_$colName") < lo || col(s"min_$colName") > hi),
-          lit(false)).as("__keep"))
-      .collect()
-    (tagged.filter(_.getBoolean(1)).map(_.getString(0)).toSeq, tagged.length)
-  }
-
-  /** [[updateFileStats]] publishes via delete-then-rename, so a racing
-    * reader can observe the sidecar path missing for one beat. One
-    * bounded retry bridges the gap so concurrent scans degrade to a
-    * ~100 ms stall instead of a PATH_NOT_FOUND failure; a second miss is
-    * a real absent sidecar and propagates.
-    */
-  private def readStatsWithRetry(spark: SparkSession,
-      statsPath: String): DataFrame =
-    try read(spark, statsPath)
-    catch {
-      // Retry ONLY the missing-path shape the rename race produces;
-      // schema errors and corrupt sidecars are real failures and must
-      // not pay a doomed sleep+reread before surfacing.
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            e.getMessage.contains("Path does not exist") =>
-        Thread.sleep(100L)
-        read(spark, statsPath)
-    }
-
-  /** Manifest-pruned range scan: answer `SELECT … WHERE lo <= c <= hi`
-    * over the layout by reading ONLY the files the sidecar says can
-    * match — file-level data skipping, one tier above parquet row-group
-    * pruning (skipped files are never opened: no footer read, no task).
-    * The predicate is re-applied to the surviving files (stats prune
-    * files, they don't evaluate rows), and still pushes down into them,
-    * so row-group pruning stacks on top. Exact by construction: a
-    * skipped file's [min,max] excludes the range, so it holds no
-    * matching row — the oracle replays the same predicate over the
-    * whole table and must hash-match.
-    */
-  def skipScan(spark: SparkSession, dataPath: String, statsPath: String,
-      colName: String, lo: Column, hi: Column): DataFrame = {
-    val (files, _) = statsSurvivingFiles(spark, statsPath, colName, lo, hi)
-    val pred = col(colName) >= lo && col(colName) <= hi
-    if (files.isEmpty) read(spark, dataPath).filter(pred).limit(0)
-    else spark.read.parquet(files: _*).filter(pred)
   }
 }

@@ -455,77 +455,36 @@ object SteadyState {
     docEnvelope(kind, b.rows, elapsedSec, b, parquetRows(spark, out))
   }
 
-  /** Keyspace of the two CDC sections. */
-  private val CdcKeys = 100000L
-
-  /** The CDC sections' seed snapshot: every key at version 0. */
-  private def cdcSeed(spark: SparkSession): DataFrame =
-    spark.range(CdcKeys).select(col("id"), lit(0L).as("ver"),
-      (col("id") % 997).cast("double").as("x"))
-
-  /** The CDC sections' deterministic change stream: rate-driven upserts
-    * scattered over [[CdcKeys]], every 50th row a tombstone.
-    */
-  private def cdcStream(spark: SparkSession, rowsPerBatch: Int): DataFrame =
-    rateClock(spark, rowsPerBatch).select(
-      pmod(col("value") * lit(2654435761L), lit(CdcKeys)).as("id"),
-      (col("value") + 1L).as("ver"),
-      col("value").cast("double").as("x"),
-      (col("value") % 50 === 0).as("del"))
-
-  /** CDC-apply envelope: a deterministic change stream (rate-driven
-    * upserts + periodic tombstones over a bounded keyspace) merged into a
-    * bucketed copy-on-write snapshot per micro-batch via `foreachBatch` +
-    * [[graft.ops.Upsert.applyPartitioned]]. msg/min INCLUDES the
-    * partition-pruned read + merge + rewrite of the touched buckets each
-    * batch — the standing-MERGE-INTO cost, not just a transform. A 50-row
-    * batch over 64 buckets touches most of them at this tiny scale; at
-    * production bucket counts (thousands) a batch touches the O(batch)
-    * few, which is the op's whole point.
-    */
-  def measureCdcApplyStream(spark: SparkSession,
-      rowsPerBatch: Int = 50, minBatches: Int = 10,
-      deadlineSec: Int = 180): DocEnvelope = {
-    val kind = "cdc_apply_stream"
-    val snap = Files.createTempDirectory("graft_cdc_snap").toString + "/snap"
-    val nBuckets = 64
-    graft.ops.Upsert.initPartitioned(cdcSeed(spark), Seq("id"), nBuckets,
-      snap)
-    val (elapsedSec, Seq(b)) = harness(spark, minBatches, deadlineSec,
-      Seq(() => writer(cdcStream(spark, rowsPerBatch), kind)
-        // batch-id fence included: the envelope prices the production
-        // applyStream shape (marker write per batch), not the bare merge
-        .foreachBatch(TxnSink.fenced(s"${snap}_txn") {
-          (batch: DataFrame, _: Long) =>
-            graft.ops.Upsert.applyPartitioned(batch.sparkSession, snap,
-              batch, Seq("id"), "ver", nBuckets, deleteCol = Some("del"))
-            ()
-        })
-        .start()))
-    docEnvelope(kind, b.rows, elapsedSec, b, spark.read.parquet(snap).count())
-  }
-
-  /** Envelope of the STREAMING MERGE (X129) at steady state — the same
-    * CDC shape as [[measureCdcApplyStream]] but applied INSIDE the
-    * table format: each rate-source micro-batch upserts into an OCC
-    * table through [[graft.sources.OccTable.mergeSink]] (SetTransaction
-    * fence, stats-discovered touched files, delete flags). The bucket
-    * store's apply touches only its keys' buckets; the format MERGE
-    * re-stages every candidate file — at this hot-table scale with
-    * scattered keys that is most of the table per batch, so this
-    * envelope prices the WORST-case merge cadence, not the clustered
-    * one. `out_rows` = live rows in the table at stop.
+  /** Envelope of the STREAMING MERGE (X129) at steady state — the CDC
+    * apply priced live: a deterministic change stream (rate-driven
+    * upserts scattered over a 100k keyspace, every 50th row a
+    * tombstone) upserts into an OCC table each micro-batch through
+    * [[graft.sources.OccTable.mergeSink]] (SetTransaction fence,
+    * stats-discovered touched files, delete flags). msg/min INCLUDES
+    * the discovery + rewrite of the touched files each batch. With
+    * scattered keys at this hot-table scale that is most of the table
+    * per batch, so this envelope prices the WORST-case merge cadence,
+    * not the clustered one. `out_rows` = live rows in the table at stop.
     */
   def measureOccMergeStream(spark: SparkSession,
       rowsPerBatch: Int = 50, minBatches: Int = 10,
       deadlineSec: Int = 180): DocEnvelope = {
     val kind = "occ_merge_stream"
     val table = Files.createTempDirectory("graft_occ_menv").toString + "/t"
+    val keys = 100000L
+    // seed: every key at version 0
     graft.sources.OccTable.init(
-      cdcSeed(spark).repartitionByRange(16, col("id")),
+      spark.range(keys).select(col("id"), lit(0L).as("ver"),
+        (col("id") % 997).cast("double").as("x"))
+        .repartitionByRange(16, col("id")),
       table, statsColumns = Seq("id"))
+    val changes = rateClock(spark, rowsPerBatch).select(
+      pmod(col("value") * lit(2654435761L), lit(keys)).as("id"),
+      (col("value") + 1L).as("ver"),
+      col("value").cast("double").as("x"),
+      (col("value") % 50 === 0).as("del"))
     val (elapsedSec, Seq(b)) = harness(spark, minBatches, deadlineSec,
-      Seq(() => writer(cdcStream(spark, rowsPerBatch), kind)
+      Seq(() => writer(changes, kind)
         .foreachBatch(graft.sources.OccTable.mergeSink(table,
           "occ_merge_env", Seq("id"), deleteCol = Some("del"),
           statsColumns = Seq("id")))

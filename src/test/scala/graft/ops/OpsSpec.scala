@@ -667,117 +667,6 @@ class UpsertSpec extends SparkSpec {
     assert(plan.split("Exchange").length - 1 <= 1, plan)
   }
 
-  test("applyPartitioned rewrites ONLY the touched buckets, converges to the monolithic merge, idempotently") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_upsnap").toString + "/snap"
-    val big = spark.range(1000)
-      .select(col("id"), lit(1L).as("v"),
-        concat(lit("r"), col("id")).as("tag"), col("id").cast("double").as("x"))
-    graft.ops.Upsert.initPartitioned(big, Seq("id"), nBuckets = 16, dir)
-    val bucketDirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("__bucket=")).map(_.getName).sorted
-    assert(bucketDirs.length === 16, bucketDirs.toSeq)
-    def dirState(name: String): Seq[(String, Long)] = {
-      val d = new java.io.File(dir, name)
-      d.listFiles().filter(_.getName.startsWith("part-"))
-        .map(f => (f.getName, f.lastModified)).toSeq.sorted
-    }
-    val before = bucketDirs.map(b => b -> dirState(b)).toMap
-
-    // one upserted key, one tombstoned key, one insert → ≤3 buckets
-    val updates = Seq(
-      (7L, 2L, "seven2", 7.7, false),
-      (8L, 2L, "gone", 0.0, true),
-      (2000L, 2L, "new", 2.0, false))
-      .toDF("id", "v", "tag", "x", "del")
-    val affected = graft.ops.Upsert.applyPartitioned(spark, dir, updates,
-      Seq("id"), "v", nBuckets = 16, deleteCol = Some("del"))
-    assert(affected.nonEmpty && affected.size <= 3, affected)
-
-    // untouched bucket directories are bit-for-bit untouched
-    val affectedNames = affected.map(b => s"__bucket=$b").toSet
-    bucketDirs.filterNot(affectedNames).foreach { b =>
-      assert(dirState(b) === before(b), s"untouched bucket $b changed")
-    }
-
-    // converged content = the monolithic latest-wins merge
-    def stateRows = spark.read.parquet(dir)
-      .select("id", "v", "tag", "x").orderBy("id").collect().toSeq
-    val expected = graft.ops.Upsert.latestWins(
-      big.withColumn("del", lit(false)), updates, Seq("id"), "v",
-      deleteCol = Some("del"))
-      .orderBy("id").collect().toSeq
-    assert(stateRows.map(_.toSeq) === expected.map(_.toSeq))
-    assert(spark.read.parquet(dir).filter(col("id") === 8L).count() === 0)
-    assert(spark.read.parquet(dir).filter(col("id") === 2000L).count() === 1)
-
-    // idempotent: re-applying the same batch changes nothing
-    graft.ops.Upsert.applyPartitioned(spark, dir, updates,
-      Seq("id"), "v", nBuckets = 16, deleteCol = Some("del"))
-    assert(stateRows.map(_.toSeq) === expected.map(_.toSeq))
-  }
-
-  test("applyStream: a CDC stream applied per micro-batch converges, out-of-order versions and all") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_upsnap").toString + "/live"
-    val ckpt = Files.createTempDirectory("graft_upsnap_ckpt").toString
-    graft.ops.Upsert.initPartitioned(
-      Seq((1L, 1L, "one", 1.0), (2L, 1L, "two", 2.0))
-        .toDF("id", "v", "tag", "x"),
-      Seq("id"), nBuckets = 4, dir)
-
-    val mem = MemoryStream[(Long, Long, String, Double, Boolean)]
-    val q = graft.ops.Upsert.applyStream(
-      mem.toDF().toDF("id", "v", "tag", "x", "del"), dir,
-      Seq("id"), "v", nBuckets = 4, deleteCol = Some("del"), ckpt)
-    try {
-      mem.addData((1L, 3L, "one-v3", 1.3, false)) // upsert
-      q.processAllAvailable()
-      assert(spark.read.parquet(dir).filter(col("id") === 1L)
-        .select("tag").collect().head.getString(0) === "one-v3")
-
-      mem.addData((1L, 2L, "stale", 0.0, false)) // LATE older version
-      mem.addData((2L, 3L, "gone", 0.0, true))   // tombstone
-      mem.addData((3L, 1L, "three", 3.0, false)) // insert
-      q.processAllAvailable()
-      val st = spark.read.parquet(dir).select("id", "v", "tag")
-        .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      // stale v2 lost to the already-applied v3; key 2 deleted; 3 inserted
-      assert(st.toSeq === Seq((1L, 3L, "one-v3"), (3L, 1L, "three")))
-    } finally q.stop()
-  }
-
-  test("applyPartitioned removes a bucket dir whose every key was tombstoned — no resurrect, still readable") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_upsnap").toString + "/lone"
-    graft.ops.Upsert.initPartitioned(
-      Seq((2L, 1L, "two", 2.0)).toDF("id", "v", "tag", "x"),
-      Seq("id"), nBuckets = 4, dir)
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("__bucket=")))
-    graft.ops.Upsert.applyPartitioned(spark, dir,
-      Seq((2L, 2L, "gone", 0.0, true)).toDF("id", "v", "tag", "x", "del"),
-      Seq("id"), "v", nBuckets = 4, deleteCol = Some("del"))
-    // the lone key's bucket contributed no rows to the rewrite: its
-    // directory must be DELETED, not left holding the old row...
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("__bucket=")))
-    // ...but the snapshot must stay READABLE (empty marker, not a bare
-    // dir that dies with UNABLE_TO_INFER_SCHEMA on the next read)
-    assert(spark.read.parquet(dir).count() === 0L)
-    // and a later insert resumes the partitioned layout cleanly
-    graft.ops.Upsert.applyPartitioned(spark, dir,
-      Seq((3L, 1L, "three", 3.0, false)).toDF("id", "v", "tag", "x", "del"),
-      Seq("id"), "v", nBuckets = 4, deleteCol = Some("del"))
-    val back = spark.read.parquet(dir).select("id", "tag").collect()
-    assert(back.map(r => (r.getLong(0), r.getString(1))).toSeq ===
-      Seq((3L, "three")))
-    assert(new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("__bucket=")))
-  }
-
   test("latestWins: a NULL delete flag means NOT deleted — the row upserts instead of vanishing") {
     val updates = Seq((1L, 20L, "upserted", 1.5, null.asInstanceOf[java.lang.Boolean]))
       .toDF("id", "v", "tag", "x", "del")
@@ -786,24 +675,5 @@ class UpsertSpec extends SparkSpec {
       deleteCol = Some("del"))
       .filter(col("id") === 1L).collect()
     assert(out.length === 1 && out.head.getString(2) === "upserted")
-  }
-
-  test("initPartitioned of an empty frame writes a readable empty snapshot") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_upsnap").toString + "/empty"
-    graft.ops.Upsert.initPartitioned(snap.filter(lit(false)).drop("del"),
-      Seq("id"), nBuckets = 4, dir)
-    assert(spark.read.parquet(dir).count() === 0L)
-  }
-
-  test("applyPartitioned with an empty batch touches nothing") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_upsnap").toString + "/snap2"
-    val base = Seq((1L, 1L, "a", 1.0, false)).toDF("id", "v", "tag", "x", "del")
-    graft.ops.Upsert.initPartitioned(base.drop("del"), Seq("id"), 4, dir)
-    val affected = graft.ops.Upsert.applyPartitioned(spark, dir,
-      base.filter(lit(false)), Seq("id"), "v", 4, Some("del"))
-    assert(affected.isEmpty)
-    assert(spark.read.parquet(dir).count() === 1)
   }
 }

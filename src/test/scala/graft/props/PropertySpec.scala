@@ -138,7 +138,7 @@ object GraftProperties extends Properties("graft") {
     }
 
   // random clustered layouts × random (possibly empty/degenerate) ranges:
-  // the sidecar-pruned scan must equal the full-table filter EXACTLY —
+  // the log-stats-pruned scan must equal the full-table filter EXACTLY —
   // the property that makes file skipping an optimization, not a filter
   private val skipCases: Gen[(List[Long], Int, Long, Long)] = for {
     vals <- Gen.listOfN(300, Gen.choose(0L, 1000L))
@@ -288,23 +288,22 @@ object GraftProperties extends Properties("graft") {
       pairs.contains((1L, 2L))
     }
 
-  property("skipScan equals the full filter on any layout and range") =
+  property("readPruned equals the full filter on any layout and range") =
     forAll(skipCases) { case (vals, nFiles, lo, hi) =>
-      import graft.sources.Layout
+      import graft.sources.OccTable
       import spark.implicits._
       val base = java.nio.file.Files.createTempDirectory("graft_skp")
-      val data = base.resolve("d").toString
-      val stats = base.resolve("s").toString
+      val t = base.resolve("t").toString
       try {
-        Layout.writeSorted(
+        OccTable.init(
           vals.zipWithIndex.map { case (v, i) => (v, i.toLong) }
-            .toDF("v", "id"),
-          "v", data, nFiles)
-        Layout.writeFileStats(spark, data, Seq("v"), stats)
-        val skip = Layout.skipScan(spark, data, stats, "v", lit(lo), lit(hi))
+            .toDF("v", "id")
+            .repartitionByRange(nFiles, col("v")).sortWithinPartitions("v"),
+          t, statsColumns = Seq("v"))
+        val skip = OccTable.readPruned(spark, t, "v", lo.toDouble, hi.toDouble)
           .agg(count(lit(1)), coalesce(sum("id"), lit(0L)))
           .collect().head.toSeq
-        val full = Layout.read(spark, data)
+        val full = OccTable.read(spark, t)()
           .filter(col("v").between(lo, hi))
           .agg(count(lit(1)), coalesce(sum("id"), lit(0L)))
           .collect().head.toSeq

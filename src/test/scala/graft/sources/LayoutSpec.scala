@@ -54,23 +54,6 @@ class LayoutSpec extends SparkSpec {
     assert(gens.map(_.getAs[String]("schema_hash")).distinct.length === 2)
     assert(gens.map(_.getAs[Int]("n_cols")).sorted.toSeq === Seq(2, 3))
 
-    // the sidecar records the generations too: the original build stamps
-    // one schema_hash, the incremental update stamps appended files with
-    // THEIRS — two distinct hashes = recorded schema evolution
-    val stats = dir + "_stats"
-    // replay the real sequence: sidecar built on gen-1, THEN the append
-    val g1 = Files.createTempDirectory("graft_evo_g1").toString + "/t"
-    Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
-      .repartition(1).write.mode("overwrite").parquet(g1)
-    Layout.writeFileStats(spark, g1, Seq("id"), stats)
-    Seq((5L, 50.0, "c")).toDF("id", "v", "tag")
-      .repartition(1).write.mode("append").parquet(g1)
-    Layout.updateFileStats(spark, g1, Seq("id"), stats)
-    val hashes = Layout.read(spark, stats)
-      .select("schema_hash").collect().map(_.getString(0))
-    assert(hashes.length === 2 && hashes.distinct.length === 2, // 2 gens
-      hashes.mkString(","))
-
     // the fingerprint moves on rename, retype, and reorder — the three
     // changes that are NOT additive and need a rewrite, not mergeSchema
     val base = Seq((1L, "x")).toDF("id", "s").schema
@@ -82,35 +65,6 @@ class LayoutSpec extends SparkSpec {
       Layout.schemaHash(Seq(("x", 1L)).toDF("s", "id").schema))
     assert(Layout.schemaHash(base) ===
       Layout.schemaHash(Seq((9L, "y")).toDF("id", "s").schema))
-  }
-
-  test("updateFileStats stamps a mixed-generation batch per FILE, not per batch") {
-    import spark.implicits._
-    // the day-after-a-column-ships scenario: ONE update batch contains
-    // files of TWO schema generations — each new file must get ITS OWN
-    // footer's hash, not one nondeterministically sampled batch hash
-    val dir = Files.createTempDirectory("graft_evo_mix").toString + "/t"
-    val stats = dir + "_stats"
-    Seq((1L, 10.0)).toDF("id", "v")
-      .repartition(1).write.mode("overwrite").parquet(dir)
-    Layout.writeFileStats(spark, dir, Seq("id"), stats)
-    // both generations land BEFORE the next sidecar reconcile
-    Seq((2L, 20.0)).toDF("id", "v")
-      .repartition(1).write.mode("append").parquet(dir)
-    Seq((3L, 30.0, "c")).toDF("id", "v", "tag")
-      .repartition(1).write.mode("append").parquet(dir)
-    val (kept, added, dropped) =
-      Layout.updateFileStats(spark, dir, Seq("id"), stats)
-    assert((kept, added, dropped) === (1, 2, 0))
-    // sidecar hashes must agree file-by-file with the footer audit
-    val fromSidecar = Layout.read(spark, stats)
-      .select(element_at(split(col("file"), "/"), -1).as("f"),
-        col("schema_hash"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val fromFooters = Layout.schemaGenerations(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(fromSidecar === fromFooters)
-    assert(fromSidecar.values.toSeq.distinct.length === 2) // 2 gens recorded
   }
 
   test("z-ordered layout prunes row groups on BOTH dims; single-sort only on its own") {
@@ -412,100 +366,21 @@ class LayoutSpec extends SparkSpec {
     assert(!shaped.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
-  test("file-stats sidecar skips non-overlapping files; skipScan equals the full filter") {
-    val base = Files.createTempDirectory("graft_fs").toString
-    val data = base + "/data"
-    val stats = base + "/stats"
-    Layout.writeSorted(grid, "y", data, nFiles = 64)
-    Layout.writeFileStats(spark, data, Seq("y", "x"), stats)
-
-    // y is the clustering column: a 5% range survives in a handful of
-    // the 64 files — file-level skipping, no file even opened
-    val (yFiles, total) =
-      Layout.statsSurvivingFiles(spark, stats, "y", lit(0L), lit(9L))
-    assert(total === 64, s"sidecar rows: $total")
-    assert(yFiles.nonEmpty && yFiles.size <= total / 4,
-      s"y-range survivors: ${yFiles.size} of $total")
-
-    // exact: the pruned scan answers identically to the full-table scan
+  test("fileskip fixture: the week read over fileStatsLayout opens fewer files than the snapshot holds and equals the plain filter") {
+    val t = graft.SparkEntry.fileStatsLayout(spark, sfDir)
+    val (lo, hi) = graft.SparkEntry.fileSkipWeek(spark)
+    val pruned = OccTable.readPruned(spark, t, "ts", lo.toDouble, hi.toDouble)
+    val total = OccTable.snapshot(spark, t).files.size
+    assert(pruned.inputFiles.nonEmpty && pruned.inputFiles.length < total,
+      s"week plans ${pruned.inputFiles.length} of $total files")
+    val week = col("ts").between(timestamp_micros(lit(lo)),
+      timestamp_micros(lit(hi)))
     def agg(df: DataFrame) =
-      df.agg(count(lit(1)).as("n"), sum("payload").as("s")).collect().toSeq
-    assert(agg(Layout.skipScan(spark, data, stats, "y", lit(0L), lit(9L))) ===
-      agg(Layout.read(spark, data).filter(col("y").between(0, 9))))
-
-    // x is uniform within every file: stats exclude nothing (the honest
-    // negative — min/max skipping needs clustering, same as row groups)
-    val (xFiles, _) =
-      Layout.statsSurvivingFiles(spark, stats, "x", lit(0L), lit(9L))
-    assert(xFiles.size === total)
-
-    // out-of-range query: zero survivors, empty frame, schema preserved
-    val none = Layout.skipScan(spark, data, stats, "y",
-      lit(10000L), lit(20000L))
-    assert(none.count() === 0L)
-    assert(none.columns.toSeq === Layout.read(spark, data).columns.toSeq)
-
-    // unknown column names its fix instead of pruning nothing silently
-    val err = intercept[IllegalArgumentException] {
-      Layout.statsSurvivingFiles(spark, stats, "payload", lit(0L), lit(1L))
-    }
-    assert(err.getMessage.contains("min_payload"))
-  }
-
-  test("updateFileStats scans only new files and converges to the full rebuild") {
-    val base = Files.createTempDirectory("graft_fs").toString
-    val data = base + "/data"
-    val stats = base + "/stats"
-    import spark.implicits._
-    val first = grid.filter(col("y") < 100)
-    val second = grid.filter(col("y") >= 100)
-    Layout.writeSorted(first, "y", data, nFiles = 8)
-    Layout.writeFileStats(spark, data, Seq("y"), stats)
-
-    // an appending sink adds files; the update reads ONLY those
-    second.repartitionByRange(4, col("y")).sortWithinPartitions("y")
-      .write.mode("append").parquet(data)
-    val (kept, added, dropped) =
-      Layout.updateFileStats(spark, data, Seq("y"), stats)
-    assert((kept, added, dropped) === (8, 4, 0))
-
-    // converged: identical rows to a from-scratch rebuild
-    val rebuilt = base + "/rebuilt"
-    Layout.writeFileStats(spark, data, Seq("y"), rebuilt)
-    def canon(path: String) = Layout.read(spark, path)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(canon(stats) === canon(rebuilt))
-
-    // a maintenance delete (expiry/compaction) drops sidecar rows too
-    val victim = Layout.partFiles(spark, data).sorted.head
-    new java.io.File(s"$data/$victim").delete()
-    val (kept2, added2, dropped2) =
-      Layout.updateFileStats(spark, data, Seq("y"), stats)
-    assert((kept2, added2, dropped2) === (11, 0, 1))
-    // and the pruned scan stays exact against the surviving data
-    val skip = Layout.skipScan(spark, data, stats, "y", lit(0L), lit(120L))
-      .agg(count(lit(1)), sum("payload")).collect().toSeq
-    val full = Layout.read(spark, data).filter(col("y").between(0, 120))
-      .agg(count(lit(1)), sum("payload")).collect().toSeq
-    assert(skip === full)
-    // idempotent: nothing changed, nothing scanned
-    assert(Layout.updateFileStats(spark, data, Seq("y"), stats) ===
-      ((11, 0, 0)))
-  }
-
-  test("all-null stats column skips every file for a range predicate") {
-    val base = Files.createTempDirectory("graft_fs").toString
-    val data = base + "/data"
-    val stats = base + "/stats"
-    grid.withColumn("y", lit(null).cast("long"))
-      .repartition(4).write.parquet(data)
-    Layout.writeFileStats(spark, data, Seq("y"), stats)
-    // null min/max = no non-null value in the file: a range predicate
-    // cannot match, three-valued logic drops every row of the sidecar
-    val (files, total) =
-      Layout.statsSurvivingFiles(spark, stats, "y", lit(0L), lit(9L))
-    assert(total === 4 && files.isEmpty, s"($total, ${files.size})")
-    assert(Layout.skipScan(spark, data, stats, "y",
-      lit(0L), lit(9L)).count() === 0L)
+      df.agg(count(lit(1)), round(sum("value"), 2), min("event_id"),
+        max("event_id"))
+        .collect().toSeq
+    val plain = agg(Tables.events(spark, sfDir).filter(week))
+    assert(plain.head.getLong(0) > 0L)
+    assert(agg(pruned) === plain)
   }
 }

@@ -661,4 +661,167 @@ class OccTableSpec extends SparkSpec {
       snap.copy(files = kept), "w", 7.0, 7.0)
     assert(keptBoth.size === 1)
   }
+
+  /** 1000 keys at version 1, key-clustered into 16 files with id stats. */
+  private def cdcBase(dir: String) = {
+    val big = spark.range(1000).select(col("id"), lit(1L).as("v"),
+      concat(lit("r"), col("id")).as("tag"), col("id").cast("double").as("x"))
+    OccTable.init(big.repartitionByRange(16, col("id")), dir,
+      statsColumns = Seq("id"))
+    big
+  }
+
+  private def cdcRows(dir: String) =
+    OccTable.read(spark, dir)().select("id", "v", "tag", "x")
+      .orderBy("id").collect().map(_.toSeq).toSeq
+
+  test("merge: a CDC batch converges to latestWins, rewrites only touched files, and re-applies as a no-op") {
+    val dir = freshDir()
+    val big = cdcBase(dir)
+    val before = OccTable.snapshot(spark, dir).files.toSet
+    // one upserted key, one tombstoned key, one insert
+    val updates = Seq(
+      (7L, 2L, "seven2", 7.7, false),
+      (8L, 2L, "gone", 0.0, true),
+      (2000L, 2L, "new", 2.0, false)).toDF("id", "v", "tag", "x", "del")
+    val r = OccTable.merge(spark, dir, updates, Seq("id"),
+      deleteCol = Some("del"), statsColumns = Seq("id"))
+    // 7 and 8 share one file; 2000 lies past every file's [min, max]
+    assert(r.candidateFiles === 1 && r.totalFiles === 16, r)
+    val after = OccTable.snapshot(spark, dir).files.toSet
+    assert((before -- after).size === 1)
+    val expected = graft.ops.Upsert.latestWins(
+      big.withColumn("del", lit(false)), updates, Seq("id"), "v",
+      deleteCol = Some("del"))
+      .orderBy("id").collect().map(_.toSeq).toSeq
+    assert(cdcRows(dir) === expected)
+    // idempotent: the same batch again changes no row
+    OccTable.merge(spark, dir, updates, Seq("id"), deleteCol = Some("del"),
+      statsColumns = Seq("id"))
+    assert(cdcRows(dir) === expected)
+  }
+
+  test("merge with an empty source commits no version and keeps every file") {
+    val dir = freshDir()
+    val big = cdcBase(dir)
+    val snap = OccTable.snapshot(spark, dir)
+    val rows = cdcRows(dir)
+    // the init frame's own schema: a source relaxing nullability would
+    // commit a metadata-only schema version, which is not this case
+    val empty = big.filter(lit(false)).withColumn("del", lit(false))
+    val r = OccTable.merge(spark, dir, empty, Seq("id"),
+      deleteCol = Some("del"))
+    assert(r.version === snap.version && r.candidateFiles === 0)
+    val after = OccTable.snapshot(spark, dir)
+    assert(after.version === snap.version && after.files === snap.files)
+    assert(cdcRows(dir) === rows)
+  }
+
+  test("merge: tombstoning every row of a file removes it, no resurrection; tombstoning the rest reads empty with its schema") {
+    val dir = freshDir()
+    OccTable.init(Seq((1L, 1L, "one"), (2L, 1L, "two")).toDF("id", "v", "tag")
+      .coalesce(1), dir, statsColumns = Seq("id"))
+    OccTable.append(Seq((3L, 1L, "three"), (4L, 1L, "four"))
+      .toDF("id", "v", "tag").coalesce(1), dir, statsColumns = Seq("id"))
+    val Seq(first, second) = OccTable.snapshot(spark, dir).files
+    def tombstones(ids: Long*) =
+      ids.map(i => (i, 2L, "gone", true)).toDF("id", "v", "tag", "del")
+    OccTable.merge(spark, dir, tombstones(1L, 2L), Seq("id"),
+      deleteCol = Some("del"))
+    val snap = OccTable.snapshot(spark, dir)
+    assert(!snap.files.contains(first) && snap.files.contains(second))
+    assert(OccTable.read(spark, dir)().select("id").as[Long].collect()
+      .sorted.toSeq === Seq(3L, 4L))
+    OccTable.merge(spark, dir, tombstones(3L, 4L), Seq("id"),
+      deleteCol = Some("del"))
+    val gone = OccTable.read(spark, dir)()
+    assert(gone.count() === 0L)
+    assert(gone.columns.toSeq === Seq("id", "v", "tag"))
+  }
+
+  test("init of an empty frame reads back empty with its schema") {
+    val dir = freshDir()
+    val empty = Seq.empty[(Long, Long, String, Double)]
+      .toDF("id", "v", "tag", "x")
+    OccTable.init(empty, dir, statsColumns = Seq("id"))
+    val back = OccTable.read(spark, dir)()
+    assert(back.count() === 0L)
+    assert(back.schema.map(f => (f.name, f.dataType)) ===
+      empty.schema.map(f => (f.name, f.dataType)))
+  }
+
+  test("mergeSink: a stream restarted on its checkpoint with the last batch replayed converges to latestWins of all changes") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val dir = freshDir()
+    val ckpt = Files.createTempDirectory("graft_occ_msink_ckpt").toString
+    val seed = Seq((1L, 0L, "one"), (2L, 0L, "two")).toDF("id", "ver", "tag")
+    OccTable.init(seed, dir, statsColumns = Seq("id"))
+    val sink = OccTable.mergeSink(dir, "cdc", Seq("id"),
+      deleteCol = Some("del"), statsColumns = Seq("id"))
+    val failOnce = new java.util.concurrent.atomic.AtomicInteger(0)
+    val mem = MemoryStream[(Long, Long, String, Boolean)]
+    def start() = mem.toDF().toDF("id", "ver", "tag", "del").writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        sink(batch, id)
+        // the kill: batch 1 merged, its checkpoint commit never happens
+        if (id == 1L && failOnce.getAndIncrement() == 0)
+          throw new RuntimeException("injected post-merge crash")
+      }
+      .start()
+    val changes = Seq(
+      Seq((1L, 1L, "one-v1", false), (3L, 1L, "three", false)),
+      Seq((2L, 2L, "gone", true), (1L, 2L, "one-v2", false)),
+      Seq((4L, 3L, "four", false), (3L, 3L, "three-v3", false)))
+    val q1 = start()
+    mem.addData(changes(0): _*)
+    q1.processAllAvailable()
+    mem.addData(changes(1): _*)
+    try q1.processAllAvailable() catch { case _: Throwable => () }
+    assert(q1.exception.isDefined)
+    q1.stop()
+    val q2 = start() // same checkpoint: batch 1 replays under the same id
+    try {
+      mem.addData(changes(2): _*)
+      q2.processAllAvailable()
+    } finally q2.stop()
+    // v0 init + three merges: the replayed batch committed nothing
+    assert(OccTable.snapshot(spark, dir).version === 3L)
+    val expected = graft.ops.Upsert.latestWins(
+      seed.withColumn("del", lit(false)),
+      changes.flatten.toDF("id", "ver", "tag", "del"), Seq("id"), "ver",
+      deleteCol = Some("del"))
+      .orderBy("id").collect().map(_.toSeq).toSeq
+    assert(OccTable.read(spark, dir)().select("id", "ver", "tag")
+      .orderBy("id").collect().map(_.toSeq).toSeq === expected)
+  }
+
+  test("readPruned on a y-clustered 64-file grid: a 5% range plans at most a quarter of the files and equals the full filter; unclustered x prunes nothing") {
+    val dir = freshDir()
+    // 40k rows over two independent uniform dims in [0, 200)
+    val grid = spark.range(40000).select(
+      (col("id") % 200).as("x"),
+      ((col("id") * 2654435761L % 40000) / 200).cast("long").as("y"),
+      col("id").as("payload"))
+    OccTable.init(grid.repartitionByRange(64, col("y"))
+      .sortWithinPartitions("y"), dir, statsColumns = Seq("y", "x"))
+    val total = OccTable.snapshot(spark, dir).files.size
+    assert(total === 64, s"live files: $total")
+    val yPruned = OccTable.readPruned(spark, dir, "y", 0.0, 9.0)
+    assert(yPruned.inputFiles.nonEmpty &&
+      yPruned.inputFiles.length <= total / 4,
+      s"y-range plans ${yPruned.inputFiles.length} of $total")
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)), sum("payload")).collect().toSeq
+    assert(agg(yPruned) ===
+      agg(OccTable.read(spark, dir)().filter(col("y").between(0, 9))))
+    // x is uniform within every file: stats exclude nothing
+    assert(OccTable.readPruned(spark, dir, "x", 0.0, 9.0)
+      .inputFiles.length === total)
+    // out-of-range: nothing planned, empty frame, the table's columns
+    val none = OccTable.readPruned(spark, dir, "y", 10000.0, 20000.0)
+    assert(none.count() === 0L)
+    assert(none.columns.toSeq === Seq("x", "y", "payload"))
+  }
 }
