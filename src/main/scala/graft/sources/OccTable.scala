@@ -1,9 +1,19 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, DecimalLogicalTypeAnnotation, IntLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{DOUBLE, FLOAT, INT32, INT64}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, input_file_name, lit, max, min, sum, unix_date, unix_micros, when}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, Decimal, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StructField, StructType, TimestampType}
 
 /** Optimistic-concurrency MULTI-WRITER commits over a plain-parquet
   * lake — the Delta-style transaction log the maintenance family
@@ -551,7 +561,7 @@ object OccTable {
     * cannot stat (a test's fabricated add, a racing delete) simply
     * commits size-less — readers fall back to listing for exactly
     * those files, never to a wrong answer. O(#adds) per commit, the
-    * same class as the staged-stats scan.
+    * same class as the staged-footer stats read.
     */
   private def statFsMeta(fsys: FileSystem, dir: String,
       name: String): Option[(Long, Long)] =
@@ -586,18 +596,24 @@ object OccTable {
     * with min/max as `Double.toString` of the column's STAT PROJECTION
     * (numerics cast to double; timestamps as epoch micros — exact in a
     * double below 2^53) and empty when the file's column is all-NULL.
-    * Deterministic and order-fixed, so checkpoints re-emit byte-equal
-    * lines.
+    * A zero bound is written `0.0` whatever its sign: -0.0 and 0.0
+    * compare equal in every interval test, and parquet footers report
+    * a zero min as -0.0. Deterministic and order-fixed, so checkpoints
+    * re-emit byte-equal lines.
     */
-  private def encodeStats(rows: Long,
+  private[sources] def encodeStats(rows: Long,
       cols: Seq[(String, Option[Double], Option[Double], Long)]): String =
     (s"rows=$rows" +: cols.map { case (c, mn, mx, nulls) =>
-      s"$c=${mn.map(_.toString).getOrElse("")}," +
-        s"${mx.map(_.toString).getOrElse("")},$nulls"
+      def bound(v: Option[Double]) = v.map(d => (d + 0.0).toString)
+        .getOrElse("")
+      s"$c=${bound(mn)},${bound(mx)},$nulls"
     }).mkString("|")
 
   /** Parse one column's (min, max) out of a stats string; None when the
-    * column is untracked, Some((None, None, …)) when all-NULL.
+    * column is untracked, Some((None, None, …)) when all-NULL. A NaN
+    * bound (logs written before stats came from footers recorded
+    * `max=NaN` for a NaN-bearing file) reads as untracked: every
+    * interval test against NaN is false, which would prune the file.
     */
   private[sources] def statsFor(stats: String, c: String)
       : Option[(Option[Double], Option[Double])] =
@@ -606,7 +622,7 @@ object OccTable {
         val parts = s.stripPrefix(s"$c=").split(",", -1)
         (Option(parts(0)).filter(_.nonEmpty).map(_.toDouble),
           Option(parts(1)).filter(_.nonEmpty).map(_.toDouble))
-    }
+    }.filterNot { case (mn, mx) => (mn ++ mx).exists(_.isNaN) }
 
   /** The column's recorded null count — what lets [[deleteRange]] prove
     * a file is ALL-match (droppable without reading): a null never
@@ -630,7 +646,7 @@ object OccTable {
     * this rule were written under the harness's pinned UTC session,
     * where the two formulas coincide.
     */
-  private def statProjection(schema: StructType, c: String): Column =
+  private[sources] def statProjection(schema: StructType, c: String): Column =
     schema(c).dataType match {
       case TimestampType => unix_micros(col(c)).cast("double")
       case DateType => unix_date(col(c)).cast("double") * lit(86400.0)
@@ -639,33 +655,10 @@ object OccTable {
         s"OccTable stats: unsupported type ${dt.simpleString} for column $c")
     }
 
-  /** X140 — single-pass post-stage validation + statistics (the
-    * guarantee of Delta's InvariantCheckExec, anchored on the staged
-    * bytes): the write batch's lineage executes EXACTLY ONCE — in the
-    * staging write — and every write-time contract (CHECK constraints,
-    * GENERATED-column agreement) is validated against the STAGED FILES
-    * in the same per-file scan that builds the X117 stats. This closes
-    * the validate/stage TOCTOU of the pre-X140 path, where a
-    * NONDETERMINISTIC batch (rand(), uncheckpointed sampling) could
-    * pass validation on one evaluation and stage different bytes on
-    * the next, and removes the up-to-3x re-evaluation of an expensive
-    * batch lineage (validate-gencols, validate-constraints, stage).
-    * Staged bytes live under PHYSICAL names (X137) while declared
-    * expressions speak LOGICAL names — the scan is renamed to logical
-    * space for evaluation (metadata-only projection; min/max/null
-    * stats are unaffected) and stats keys stay physical. On violation
-    * the staged part files are DELETED before the exception surfaces,
-    * so a refused write leaves no unreferenced garbage behind.
-    * Validating a COMPUTED generated column re-evaluates its
-    * expression over the staged bytes — sound because declared
-    * expressions are required deterministic (see
-    * [[requireDeterministic]]), and it upgrades "we computed it" to
-    * "the committed bytes satisfy name = expr", the X138 invariant.
-    */
   /** Staged files read back in LOGICAL column space: physical names
     * renamed through the mapping, log columns the batch legally omits
     * filled as typed nulls (so declared expressions analyze). Shared by
-    * the stats-only, validating, and fused stats+bloom passes.
+    * the validating and the bloom-building passes.
     */
   private def stagedLogicalScan(spark: SparkSession, dir: String,
       names: Seq[String], colmap: Map[String, String],
@@ -689,136 +682,127 @@ object OccTable {
     (scan, physToLog)
   }
 
-  private def validateStagedCollectStats(spark: SparkSession,
-      dir: String, names: Seq[String], colmap: Map[String, String],
-      constraints: Map[String, String], gencols: Map[String, String],
-      physStatsCols: Seq[String], what: String,
-      schemaJson: Option[String] = None): Map[String, String] = {
-    val needVal = constraints.nonEmpty || gencols.nonEmpty
-    if (names.isEmpty || (!needVal && physStatsCols.isEmpty))
-      return Map.empty
-    physStatsCols.foreach(c => require(!c.exists("|=,\t\n".contains(_)),
-      s"OccTable stats: column name '$c' contains a reserved character"))
-    val (scan, physToLog) = stagedLogicalScan(spark, dir, names, colmap,
-      schemaJson)
-    val schema = scan.schema
-    val statsCols = physStatsCols.map(p =>
-      (p, physToLog.getOrElse(p, p)))
-    val statAggs = statsCols.zipWithIndex.flatMap { case ((_, c), i) => Seq(
-      min(statProjection(schema, c)).as(s"__mn$i"),
-      max(statProjection(schema, c)).as(s"__mx$i"),
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nl$i"))
-    }
+  /** The declared rules a staged scan is checked against, as per-row
+    * violation indicators (1 = the row breaks the rule): the CHECK
+    * constraints, then the GENERATED columns. A generation rule whose
+    * column the staged schema lacks cannot be validated here (and
+    * cannot be violated — no bytes); callers compute absent generated
+    * columns into the batch, so that filter is a no-op on the write
+    * paths.
+    */
+  private def ruleIndicators(schema: StructType,
+      constraints: Map[String, String], gencols: Map[String, String])
+      : (Seq[(String, String)], Seq[(String, String)], Seq[Column]) = {
     val cNamed = constraints.toSeq.sortBy(_._1)
-    // a rule whose column the staged schema lacks cannot be validated
-    // here (and cannot be violated — no bytes); callers compute absent
-    // generated columns into the batch, so this filter is a no-op on
-    // the write paths and only guards the stats-only form
     val gNamed = gencols.toSeq.sortBy(_._1)
       .filter { case (n, _) => schema.fieldNames.contains(n) }
-    val valAggs =
-      cNamed.zipWithIndex.map { case ((_, e), i) =>
-        coalesce(sum(when(expr(e) === lit(false), 1L).otherwise(0L)),
-          lit(0L)).as(s"__c$i") } ++
-      gNamed.zipWithIndex.map { case ((n, e), i) =>
-        coalesce(sum(when(!(col(n) <=> expr(e)), 1L).otherwise(0L)),
-          lit(0L)).as(s"__g$i") }
-    val aggs = statAggs ++ valAggs
-    val rows = scan.groupBy(input_file_name().as("__f"))
-      .agg(count(lit(1)).as("__rows"), aggs: _*)
-      .collect()
-    if (valAggs.nonEmpty) {
-      def total(pfx: String, i: Int): Long =
-        rows.map(_.getAs[Long](s"$pfx$i")).sum
-      val cBad = cNamed.zipWithIndex.collect {
-        case ((n, e), i) if total("__c", i) > 0 =>
-          s"$n (${total("__c", i)} rows violate `$e`)" }
-      val gBad = gNamed.zipWithIndex.collect {
-        case ((n, e), i) if total("__g", i) > 0 =>
-          s"$n (${total("__g", i)} rows differ from `$e`)" }
-      if (cBad.nonEmpty || gBad.nonEmpty) {
-        val fsys = fs(spark, dir)
-        names.foreach(n => fsys.delete(new Path(dir, n), false))
-        if (cBad.nonEmpty) throw new ConstraintViolationException(
-          s"OccTable: $what violates CHECK constraint(s) " +
-            cBad.mkString("; "))
-        throw new ConstraintViolationException(
-          s"OccTable: $what violates GENERATED column(s) " +
-            gBad.mkString("; "))
-      }
-    }
-    if (physStatsCols.isEmpty) return Map.empty
-    rows.map { r =>
-      val fname = r.getAs[String]("__f").split('/').last
-      val entries = statsCols.zipWithIndex.map { case ((p, _), i) =>
-        val mn = Option(r.getAs[java.lang.Double](s"__mn$i")).map(_.doubleValue)
-        val mx = Option(r.getAs[java.lang.Double](s"__mx$i")).map(_.doubleValue)
-        (p, mn, mx, r.getAs[Long](s"__nl$i"))
-      }
-      fname -> encodeStats(r.getAs[Long]("__rows"), entries)
-    }.toMap
+    (cNamed, gNamed,
+      cNamed.map { case (_, e) =>
+        when(expr(e) === lit(false), 1L).otherwise(0L) } ++
+      gNamed.map { case (n, e) =>
+        when(!(col(n) <=> expr(e)), 1L).otherwise(0L) })
   }
 
-  /** FUSED stats + validation + bloom build over just-staged files
-    * (X126 + X140; guide §1.2: don't scan the same bytes twice): when a
-    * commit wants BOTH X117 stats and X126 blooms, ONE shuffled pass
-    * over the new batch grouped by file serves both — plus any CHECK /
-    * GENERATED validation — instead of the two staged-file scans the
-    * r19 shape paid (a declarative stats pass, then a separate bloom
-    * pass). Every per-row input (stat projections, violation
-    * indicators, bloom value strings) is computed as codegen
-    * expressions BEFORE the per-file grouping; the group fold is pure
-    * numeric accumulation plus the bloom bit sets streamed into
-    * fixed-size arrays (sized by the DECLARED `numItems`/`fpp`, so no
-    * key buffering), and the sidecars are written FROM THE EXECUTORS
-    * ([[OccBloom]] layout; the bits never centralize on the driver — a
-    * bulk init committing 10^6 files would otherwise ship a terabyte of
-    * bitsets through one JVM). Null values are not added (an equality
-    * lookup never matches NULL); sidecar writes are idempotent
-    * overwrites, so task retries re-emit identical bytes. Zero-row
-    * part files get no stats and no bloom (unprunable, safe). On
-    * violation the staged part files AND the sidecars already written
-    * are deleted before the exception surfaces. With no blooms
-    * requested this delegates to the declarative stats pass
-    * (partial-aggregating — the better plan when no per-file byte
-    * arrays force full-row grouping anyway).
+  /** Refuse a staged write whose rows break a declared rule; `total(i)`
+    * is the violating row count of [[ruleIndicators]]' i-th rule. The
+    * staged part files AND any bloom sidecars already written are
+    * deleted before the exception surfaces, so a refused write leaves
+    * no unreferenced garbage behind.
     */
-  private def stagedStatsAndBlooms(spark: SparkSession, dir: String,
+  private def refuseViolations(spark: SparkSession, dir: String,
+      names: Seq[String], blooms: Seq[OccBloom.BloomCol], what: String,
+      cNamed: Seq[(String, String)], gNamed: Seq[(String, String)],
+      total: Int => Long): Unit = {
+    val cBad = cNamed.zipWithIndex.collect {
+      case ((n, e), i) if total(i) > 0 =>
+        s"$n (${total(i)} rows violate `$e`)" }
+    val gBad = gNamed.zipWithIndex.collect {
+      case ((n, e), i) if total(cNamed.size + i) > 0 =>
+        s"$n (${total(cNamed.size + i)} rows differ from `$e`)" }
+    if (cBad.nonEmpty || gBad.nonEmpty) {
+      discardStaged(spark, dir, names, blooms)
+      if (cBad.nonEmpty) throw new ConstraintViolationException(
+        s"OccTable: $what violates CHECK constraint(s) " +
+          cBad.mkString("; "))
+      throw new ConstraintViolationException(
+        s"OccTable: $what violates GENERATED column(s) " +
+          gBad.mkString("; "))
+    }
+  }
+
+  /** X140 — post-stage validation (the guarantee of Delta's
+    * InvariantCheckExec, anchored on the staged bytes): the write
+    * batch's lineage executes EXACTLY ONCE — in the staging write — and
+    * every write-time contract (CHECK constraints, GENERATED-column
+    * agreement) is validated against the STAGED FILES in one global
+    * aggregation over them. This closes the validate/stage TOCTOU of
+    * the pre-X140 path, where a NONDETERMINISTIC batch (rand(),
+    * uncheckpointed sampling) could pass validation on one evaluation
+    * and stage different bytes on the next, and removes the up-to-3x
+    * re-evaluation of an expensive batch lineage (validate-gencols,
+    * validate-constraints, stage). Staged bytes live under PHYSICAL
+    * names (X137) while declared expressions speak LOGICAL names — the
+    * scan is renamed to logical space for evaluation. Validating a
+    * COMPUTED generated column re-evaluates its expression over the
+    * staged bytes — sound because declared expressions are required
+    * deterministic (see [[requireDeterministic]]), and it upgrades "we
+    * computed it" to "the committed bytes satisfy name = expr", the
+    * X138 invariant. No rules, no scan. Computes no stats: those come
+    * from the footers ([[footerStats]]).
+    */
+  private def validateStaged(spark: SparkSession, dir: String,
       names: Seq[String], colmap: Map[String, String],
       constraints: Map[String, String], gencols: Map[String, String],
-      physStatsCols: Seq[String], blooms: Seq[OccBloom.BloomCol],
-      what: String, schemaJson: Option[String] = None)
-      : (Map[String, String], Map[String, Map[String, (Int, Int)]]) = {
-    if (blooms.isEmpty)
-      return (validateStagedCollectStats(spark, dir, names, colmap,
-        constraints, gencols, physStatsCols, what, schemaJson), Map.empty)
-    if (names.isEmpty) return (Map.empty, Map.empty)
+      what: String, schemaJson: Option[String]): Unit = {
+    if (names.isEmpty || (constraints.isEmpty && gencols.isEmpty)) return
+    val (scan, _) = stagedLogicalScan(spark, dir, names, colmap,
+      schemaJson)
+    val (cNamed, gNamed, rules) =
+      ruleIndicators(scan.schema, constraints, gencols)
+    if (rules.isEmpty) return
+    val totals = rules.map(r => coalesce(sum(r), lit(0L)))
+    val row = scan.agg(totals.head, totals.tail: _*).head()
+    refuseViolations(spark, dir, names, Seq.empty, what, cNamed, gNamed,
+      row.getLong)
+  }
+
+  /** Bloom build + validation over just-staged files (X126 + X140;
+    * guide §1.2: don't scan the same bytes twice): ONE shuffled pass
+    * over the new batch grouped by file builds every requested bloom
+    * and totals any CHECK / GENERATED violations. Every per-row input
+    * (violation indicators, bloom value strings) is computed as codegen
+    * expressions BEFORE the per-file grouping; the group fold streams
+    * the bloom bit sets into fixed-size arrays (sized by the DECLARED
+    * `numItems`/`fpp`, so no key buffering), and the sidecars are
+    * written FROM THE EXECUTORS ([[OccBloom]] layout; the bits never
+    * centralize on the driver — a bulk init committing 10^6 files would
+    * otherwise ship a terabyte of bitsets through one JVM). Null values
+    * are not added (an equality lookup never matches NULL); sidecar
+    * writes are idempotent overwrites, so task retries re-emit
+    * identical bytes. Zero-row part files get no bloom (unprunable,
+    * safe). Computes no stats: those come from the footers
+    * ([[footerStats]]).
+    */
+  private def stagedBlooms(spark: SparkSession, dir: String,
+      names: Seq[String], colmap: Map[String, String],
+      constraints: Map[String, String], gencols: Map[String, String],
+      blooms: Seq[OccBloom.BloomCol], what: String,
+      schemaJson: Option[String])
+      : Map[String, Map[String, (Int, Int)]] = {
     require(blooms.map(_.col).distinct.size == blooms.size,
       s"OccTable blooms: duplicate column in ${blooms.map(_.col)}")
-    physStatsCols.foreach(c => require(!c.exists("|=,\t\n".contains(_)),
-      s"OccTable stats: column name '$c' contains a reserved character"))
     val (scan, physToLog) = stagedLogicalScan(spark, dir, names, colmap,
       schemaJson)
-    val schema = scan.schema
-    val statsCols = physStatsCols.map(p => (p, physToLog.getOrElse(p, p)))
-    val cNamed = constraints.toSeq.sortBy(_._1)
-    val gNamed = gencols.toSeq.sortBy(_._1)
-      .filter { case (n, _) => schema.fieldNames.contains(n) }
+    val (cNamed, gNamed, rules) =
+      ruleIndicators(scan.schema, constraints, gencols)
     val specs = blooms.map(b =>
       (b.col, OccBloom.params(b.numItems, b.fpp))).toArray
-    val statCols = statsCols.map { case (_, c) => statProjection(schema, c) }
-    val consCols = cNamed.map { case (_, e) =>
-      when(expr(e) === lit(false), 1L).otherwise(0L) }
-    val genCols = gNamed.map { case (n, e) =>
-      when(!(col(n) <=> expr(e)), 1L).otherwise(0L) }
     val valCols = specs.toSeq.map { case (c, _) =>
       col(physToLog.getOrElse(c, c)).cast("string") }
     val projected = scan.select(
-      (input_file_name() +: (statCols ++ consCols ++ genCols ++ valCols))
+      (input_file_name() +: (rules ++ valCols))
         .zipWithIndex.map { case (c, i) => c.as(s"__p$i") }: _*)
-    val nStats = statsCols.size
-    val nCons = cNamed.size
-    val nRules = nCons + gNamed.size
+    val nRules = rules.size
     val dirStr = dir
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -827,39 +811,18 @@ object OccTable {
       .groupByKey(_.getString(0))
       .mapGroups { (fpath, rows) =>
         val fname = fpath.split('/').last
-        var n = 0L
-        val mn = new Array[Double](nStats)
-        val mnSet = new Array[Boolean](nStats)
-        val mx = new Array[Double](nStats)
-        val mxSet = new Array[Boolean](nStats)
-        val nulls = new Array[Long](nStats)
         val viol = new Array[Long](nRules)
         val bits = specs.map { case (_, (m, _)) =>
           new Array[Byte]((m + 7) / 8) }
         rows.foreach { r =>
-          n += 1
-          var i = 0
-          while (i < nStats) {
-            if (r.isNullAt(1 + i)) nulls(i) += 1
-            else {
-              val v = r.getDouble(1 + i)
-              if (!mnSet(i) || java.lang.Double.compare(v, mn(i)) < 0) {
-                mn(i) = v; mnSet(i) = true
-              }
-              if (!mxSet(i) || java.lang.Double.compare(v, mx(i)) > 0) {
-                mx(i) = v; mxSet(i) = true
-              }
-            }
-            i += 1
-          }
           var j = 0
           while (j < nRules) {
-            viol(j) += r.getLong(1 + nStats + j)
+            viol(j) += r.getLong(1 + j)
             j += 1
           }
           var b = 0
           while (b < specs.length) {
-            val v = r.getString(1 + nStats + nRules + b)
+            val v = r.getString(1 + nRules + b)
             if (v != null) {
               val (c, (m, k)) = specs(b)
               OccBloom.add(bits(b), c, v, m, k)
@@ -872,43 +835,168 @@ object OccTable {
           OccBloom.write(fsysT,
             OccBloom.sidecarPath(dirStr, fname, c), m, k, bits(b))
         }
-        (fname, n, mn, mnSet, mx, mxSet, nulls, viol)
+        (fname, viol)
       }.collect()
-    if (nRules > 0) {
-      def total(i: Int): Long = perFile.map(_._8(i)).sum
-      val cBad = cNamed.zipWithIndex.collect {
-        case ((nm, e), i) if total(i) > 0 =>
-          s"$nm (${total(i)} rows violate `$e`)" }
-      val gBad = gNamed.zipWithIndex.collect {
-        case ((nm, e), i) if total(nCons + i) > 0 =>
-          s"$nm (${total(nCons + i)} rows differ from `$e`)" }
-      if (cBad.nonEmpty || gBad.nonEmpty) {
-        val fsys = fs(spark, dir)
-        names.foreach { nm =>
-          fsys.delete(new Path(dir, nm), false)
-          blooms.foreach(b => fsys.delete(
-            OccBloom.sidecarPath(dir, baseName(nm), b.col), false))
-        }
-        if (cBad.nonEmpty) throw new ConstraintViolationException(
-          s"OccTable: $what violates CHECK constraint(s) " +
-            cBad.mkString("; "))
-        throw new ConstraintViolationException(
-          s"OccTable: $what violates GENERATED column(s) " +
-            gBad.mkString("; "))
-      }
-    }
+    refuseViolations(spark, dir, names, blooms, what, cNamed, gNamed,
+      i => perFile.map(_._2(i)).sum)
     val paramMap = specs.map { case (c, (m, k)) => c -> ((m, k)) }.toMap
-    val bloomMap = perFile.map(t => t._1 -> paramMap).toMap
-    val statsMap =
-      if (physStatsCols.isEmpty) Map.empty[String, String]
-      else perFile.map { t =>
-        val entries = statsCols.zipWithIndex.map { case ((p, _), i) =>
-          (p, if (t._4(i)) Some(t._3(i)) else None,
-            if (t._6(i)) Some(t._5(i)) else None, t._7(i))
+    perFile.map(t => t._1 -> paramMap).toMap
+  }
+
+  /** X117 per-file stats off the staged files' PARQUET FOOTERS: the
+    * writer already recorded, per row group, the row count and, per
+    * column chunk, the null count and min/max — the numbers a grouped
+    * scan of the just-written bytes would recompute (Iceberg collects
+    * file metrics from footers for the same reason). Keyed by staged
+    * name, in [[encodeStats]]' format; zero-row files get no stats.
+    * Footers of up to `driverMax` files are read on the driver (no
+    * Spark job); above it ONE job reads them across executors, the
+    * [[bloomPrunedFiles]] pattern (`driverMax` is a knob for tests).
+    */
+  private[sources] def footerStats(spark: SparkSession, dir: String,
+      names: Seq[String], physStatsCols: Seq[String],
+      driverMax: Int = BloomProbeDriverMax): Map[String, String] = {
+    if (physStatsCols.isEmpty) return Map.empty
+    val paths = names.map(n => n -> resolvePath(dir, n))
+    val cols = physStatsCols
+    val perFile =
+      if (paths.size <= driverMax) {
+        val conf = spark.sparkContext.hadoopConfiguration
+        paths.flatMap { case (n, p) =>
+          fileFooterStats(conf, p, cols).map(n -> _) }
+      } else {
+        val conf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration)
+        val slices = math.max(1, math.min(paths.size,
+          spark.sparkContext.defaultParallelism * 2))
+        spark.sparkContext.parallelize(paths, slices).flatMap {
+          case (n, p) => fileFooterStats(conf.value, p, cols).map(n -> _)
+        }.collect().toSeq
+      }
+    perFile.toMap
+  }
+
+  /** One file's footer folded into its stats string; None for a
+    * zero-row file. Per stats column (physical name) the row groups'
+    * null counts sum and their min/max fold in the stat projection's
+    * double ([[footerProjection]]). A column the file lacks is
+    * all-NULL (the log schema serves it as null). A column is
+    * UNTRACKED — no entry, so [[statsFor]] never prunes the file — when
+    * a row group holding non-null values has no usable min/max: INT96
+    * or another type without a projection, statistics missing, or a
+    * NaN present (parquet-mr then leaves the chunk's min/max undefined;
+    * the NaN test here guards writers that do not).
+    */
+  private def fileFooterStats(conf: Configuration, path: String,
+      cols: Seq[String]): Option[String] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), conf))
+    val footer = try reader.getFooter finally reader.close()
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    if (rows == 0L) return None
+    val schema = footer.getFileMetaData.getSchema
+    def colStats(c: String): Option[(Option[Double], Option[Double], Long)] =
+      if (!schema.containsField(c)) Some((None, None, rows))
+      else {
+        val t = schema.getType(schema.getFieldIndex(c))
+        val proj =
+          if (t.isPrimitive) footerProjection(t.asPrimitiveType) else None
+        val cp = ColumnPath.get(c)
+        blocks.foldLeft(Option((Option.empty[Double], Option.empty[Double],
+            0L))) {
+          case (None, _) => None
+          case (Some((mn, mx, nulls)), b) =>
+            b.getColumns.asScala.find(_.getPath == cp)
+              .map(_.getStatistics)
+              .filter(st => st != null && st.isNumNullsSet)
+              .flatMap { st =>
+                val n = nulls + st.getNumNulls
+                if (!st.hasNonNullValue)
+                  // no bounds: usable only when the chunk is all-NULL
+                  if (st.getNumNulls >= b.getRowCount) Some((mn, mx, n))
+                  else None
+                else proj
+                  .map(f => (f(st.genericGetMin.asInstanceOf[AnyRef]),
+                    f(st.genericGetMax.asInstanceOf[AnyRef])))
+                  .filterNot { case (lo, hi) => lo.isNaN || hi.isNaN }
+                  .map { case (lo, hi) =>
+                    (Some(mn.fold(lo)(math.min(_, lo))),
+                      Some(mx.fold(hi)(math.max(_, hi))), n)
+                  }
+              }
         }
-        t._1 -> encodeStats(t._2, entries)
-      }.toMap
-    (statsMap, bloomMap)
+      }
+    Some(encodeStats(rows, cols.flatMap(c =>
+      colStats(c).map { case (mn, mx, n) => (c, mn, mx, n) })))
+  }
+
+  /** A footer min/max value in [[statProjection]]'s units, by the
+    * column's parquet type: TIMESTAMP(MICROS) as is and (MILLIS)
+    * × 1000, DATE days × 86400, signed integers and floats as is,
+    * DECIMAL through Spark's own `Decimal.toDouble` (what the read
+    * side's `cast("double")` computes). None — untracked — for every
+    * other type (INT96, unsigned, NANOS, non-numeric).
+    */
+  private def footerProjection(t: PrimitiveType): Option[AnyRef => Double] =
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (_, d: DecimalLogicalTypeAnnotation) => Some { v =>
+        val unscaled = v match {
+          case b: Binary => new java.math.BigInteger(b.getBytes)
+          case n => java.math.BigInteger.valueOf(
+            n.asInstanceOf[Number].longValue)
+        }
+        Decimal(new java.math.BigDecimal(unscaled, d.getScale),
+          d.getPrecision, d.getScale).toDouble
+      }
+      case (INT64, ts: TimestampLogicalTypeAnnotation) => ts.getUnit match {
+        case TimeUnit.MICROS =>
+          Some(v => v.asInstanceOf[Number].longValue.toDouble)
+        case TimeUnit.MILLIS =>
+          Some(v => (v.asInstanceOf[Number].longValue * 1000L).toDouble)
+        case _ => None
+      }
+      case (INT32, _: DateLogicalTypeAnnotation) =>
+        Some(v => v.asInstanceOf[Number].intValue * 86400.0)
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned =>
+        Some(v => v.asInstanceOf[Number].doubleValue)
+      case (INT32 | INT64 | FLOAT | DOUBLE, null) =>
+        Some(v => v.asInstanceOf[Number].doubleValue)
+      case _ => None
+    }
+
+  /** Everything a commit records about its just-staged files beyond
+    * their names: X117 stats read off the parquet footers
+    * ([[footerStats]] — no Spark job), X126 blooms from one grouped
+    * pass ([[stagedBlooms]]) that also validates, and CHECK / GENERATED
+    * validation alone ([[validateStaged]]) when no bloom is asked. A
+    * scan runs only for that row-level work. Validation runs first: a
+    * refused write has deleted its staged files before any footer is
+    * read. A stats column the table schema cannot project is refused
+    * before any IO (a silently-untracked column would read as "never
+    * prunable").
+    */
+  private def stagedStatsAndBlooms(spark: SparkSession, dir: String,
+      names: Seq[String], colmap: Map[String, String],
+      constraints: Map[String, String], gencols: Map[String, String],
+      physStatsCols: Seq[String], blooms: Seq[OccBloom.BloomCol],
+      what: String, schemaJson: Option[String])
+      : (Map[String, String], Map[String, Map[String, (Int, Int)]]) = {
+    if (names.isEmpty) return (Map.empty, Map.empty)
+    physStatsCols.foreach(c => require(!c.exists("|=,\t\n".contains(_)),
+      s"OccTable stats: column name '$c' contains a reserved character"))
+    val physToLog = colmap.map(_.swap)
+    schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .foreach(st => physStatsCols.foreach(p =>
+        statProjection(st, physToLog.getOrElse(p, p))))
+    val bloomMap =
+      if (blooms.isEmpty) {
+        validateStaged(spark, dir, names, colmap, constraints, gencols,
+          what, schemaJson)
+        Map.empty[String, Map[String, (Int, Int)]]
+      } else stagedBlooms(spark, dir, names, colmap, constraints, gencols,
+        blooms, what, schemaJson)
+    (footerStats(spark, dir, names, physStatsCols), bloomMap)
   }
 
   /** Planning-time EQUALITY file skipping off the bloom index (X126):
@@ -1955,12 +2043,12 @@ object OccTable {
       s"OccTable: log already exists at $dir")
     fsys.mkdirs(new Path(s"$dir/$LogDirName"))
     val (names, pvs) = stagePartitioned(df, dir, partitionBy)
+    val schemaJson = df.schema.json
     val (stats, blooms) = stagedStatsAndBlooms(spark, dir, names,
       Map.empty, Map.empty, Map.empty, statsColumns, bloomColumns,
-      "staged batch")
+      "staged batch", Some(schemaJson))
     val sizes = names.flatMap(n =>
       statFsMeta(fsys, dir, n).map(n -> _)).toMap
-    val schemaJson = df.schema.json
     val body = ("op init" +: (names.map(n =>
       addLine(n, stats.get(n), pvs.get(n), blooms.get(n),
         fsMeta = sizes.get(n))) ++
@@ -2310,7 +2398,7 @@ object OccTable {
     // X140 stage-first: the batch lineage executes EXACTLY ONCE — in
     // the staging write. Absent generated columns (X138) are computed
     // INTO the staged bytes; supplied ones and CHECK constraints are
-    // validated off the STAGED FILES in the stats scan, so the
+    // validated off the STAGED FILES after staging, so the
     // validated bytes ARE the committed bytes even when the batch
     // lineage is nondeterministic.
     val df2 = withGenerated(alignWidened(df, snap.schemaJson), snap.gencols)
@@ -2359,8 +2447,8 @@ object OccTable {
             // (violations propagate as ConstraintViolationException)
             val added = snap.constraints.filterNot { case (n, e) =>
               cons0.get(n).contains(e) }
-            if (added.nonEmpty) validateStagedCollectStats(spark, dir,
-              names, colmap0, added, Map.empty, Seq.empty, "append batch",
+            if (added.nonEmpty) validateStaged(spark, dir, names,
+              colmap0, added, Map.empty, "append batch",
               evolved.orElse(snap.schemaJson))
           } catch {
             case e: Throwable =>
@@ -2425,9 +2513,10 @@ object OccTable {
     val (names, pvs) = stagePartitioned(toPhysical(df2, snap.colmap), dir,
       partitionBy.map(snap.physName))
     val stats =
-      try validateStagedCollectStats(spark, dir, names, snap.colmap,
+      try stagedStatsAndBlooms(spark, dir, names, snap.colmap,
         snap.constraints, snap.gencols, statsColumns.map(snap.physName),
-        s"streaming batch $batchId", evolved.orElse(snap.schemaJson))
+        Seq.empty, s"streaming batch $batchId",
+        evolved.orElse(snap.schemaJson))._1
       catch {
         case e: Throwable =>
           discardStaged(spark, dir, names, Seq.empty); throw e
@@ -2453,9 +2542,9 @@ object OccTable {
             checkNewColumns(snap, evolved)
             val added = snap.constraints.filterNot { case (n, e) =>
               cons0.get(n).contains(e) }
-            if (added.nonEmpty) validateStagedCollectStats(spark, dir,
-              names, colmap0, added, Map.empty, Seq.empty,
-              s"streaming batch $batchId", evolved.orElse(snap.schemaJson))
+            if (added.nonEmpty) validateStaged(spark, dir, names,
+              colmap0, added, Map.empty, s"streaming batch $batchId",
+              evolved.orElse(snap.schemaJson))
           } catch {
             case e: Throwable =>
               discardStaged(spark, dir, names, Seq.empty)
@@ -2549,7 +2638,7 @@ object OccTable {
         else snap.colmap
       // X140 stage-first: the (full-table) transform executes ONCE —
       // in the staging write; constraints + generated-column agreement
-      // are validated off the staged bytes in the stats scan
+      // are validated off the staged bytes
       val names = stage(toPhysical(out, effMap), dir)
       val physBlooms = bloomColumns.map(b =>
         b.copy(col = effMap.getOrElse(b.col, b.col)))
@@ -2678,27 +2767,42 @@ object OccTable {
     // materializes an unbounded key set. Under the cap the collected
     // groups are COMPLETE, so the dup scan happens driver-side; only
     // the over-cap (backfill-shaped) path still runs the dedicated dup
-    // probe, against the persisted source.
+    // probe, against the persisted source. The key columns ride along
+    // (first `nk` fields): under the cap they ARE the source's distinct
+    // key set, which the anti-join below needs too.
+    val nk = keyCols.size
     val grouped = source.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__n"))
-      .select(col(headKey).cast("string").as("__s"),
+      .select(keyCols.map(col) ++ Seq(
+        col(headKey).cast("string").as("__s"),
         (if (statTyped) statProjection(source.schema, headKey)
          else lit(null).cast("double")).as("__d"),
-        col("__n"))
+        col("__n")): _*)
     val keyRows = grouped.limit(maxDriverKeys + 1).collect()
     val overCap = keyRows.length > maxDriverKeys
-    val dup = keyRows.find(_.getLong(2) > 1L).orElse(
+    val dup = keyRows.find(_.getLong(nk + 2) > 1L).orElse(
       if (!overCap) None
       else grouped.filter(col("__n") > 1).limit(1).collect().headOption)
     require(dup.isEmpty, s"OccTable.merge: source has duplicate keys " +
-      s"on (${keyCols.mkString(", ")}), e.g. ${dup.map(_.mkString(", "))
-        .getOrElse("")}")
+      s"on (${keyCols.mkString(", ")}), e.g. ${dup.map(r =>
+        (0 until nk).map(r.get).mkString(", ")).getOrElse("")}")
     val keyStrs = if (overCap) Seq.empty[String]
-      else keyRows.flatMap(r => Option(r.getString(0))).distinct.toSeq
+      else keyRows.flatMap(r => Option(r.getString(nk))).distinct.toSeq
     val keyDoubles = if (overCap) Array.empty[Double]
-      else keyRows.filter(!_.isNullAt(0)).flatMap(r =>
+      else keyRows.filter(!_.isNullAt(nk)).flatMap(r =>
         Option(r.getAs[java.lang.Double]("__d")).map(_.doubleValue))
         .distinct.sorted
+    // the source's distinct keys for the discovery semi-join and the
+    // survivors' anti-join: under the cap, a local relation of the
+    // collected groups (no recomputation of the set; a NULL key matches
+    // nothing, so its rows are left out); over it, the distributed
+    // distinct
+    val srcKeys =
+      if (overCap) source.select(keyCols.map(col): _*).distinct()
+      else spark.createDataFrame(keyRows.toSeq
+        .filter(r => (0 until nk).forall(i => !r.isNullAt(i)))
+        .map(r => Row.fromSeq(r.toSeq.take(nk))).asJava,
+        StructType(grouped.schema.fields.take(nk)))
     // fallback pre-pruning: the source's OVERALL key range, one small
     // aggregation — a file whose stats interval misses [srcLo, srcHi]
     // entirely provably holds no source key
@@ -2750,7 +2854,6 @@ object OccTable {
         withGenerated(sourceData, snap.gencols).schema)
       checkNewColumns(snap, evolved)
       val physKey = snap.physName(headKey)
-      val srcKeys = source.select(keyCols.map(col): _*).distinct()
       val candidates =
         if (overCap) {
           // distributed discovery: range-admitted files scanned with
@@ -2907,7 +3010,7 @@ object OccTable {
         snap.colmap, Map.empty, Map.empty,
         statsColumns.map(snap.physName),
         bloomColumns.map(b => b.copy(col = snap.physName(b.col))),
-        "staged batch")
+        "staged batch", snap.schemaJson)
       try return DeleteResult(
         commitActions(spark, dir, names, dropped ++ toRewrite,
           snap.version, schemaInForce = snap.schemaJson,
@@ -2953,7 +3056,7 @@ object OccTable {
         snap.colmap, Map.empty, Map.empty,
         statsColumns.map(snap.physName),
         bloomColumns.map(b => b.copy(col = snap.physName(b.col))),
-        "staged batch")
+        "staged batch", snap.schemaJson)
       try return DeleteResult(
         commitActions(spark, dir, names, candidates, snap.version,
           schemaInForce = snap.schemaJson,
@@ -3175,7 +3278,7 @@ object OccTable {
         snap.colmap, Map.empty, Map.empty,
         statsColumns.map(snap.physName),
         bloomColumns.map(b => b.copy(col = snap.physName(b.col))),
-        "staged batch")
+        "staged batch", snap.schemaJson)
       try return commitActions(spark, dir, names, marked, snap.version,
         schemaInForce = snap.schemaJson,
         addStats = stats, addBlooms = blooms, op = Some("purge_dv"))
@@ -3238,8 +3341,10 @@ object OccTable {
     while (true) {
       val snap = snapshot(spark, dir)
       requireWritable(snap)
-      val sized = snap.files.map(f =>
-        f -> fsys.getFileStatus(new Path(resolvePath(dir, f))).getLen)
+      // X148: sizes come from the log; only adds committed size-less
+      // (legacy logs) cost a filesystem stat
+      val sized = snap.files.map(f => f -> snap.sizes.get(f).map(_._1)
+        .getOrElse(fsys.getFileStatus(new Path(resolvePath(dir, f))).getLen))
       val selected =
         if (zorderBy.nonEmpty) sized // re-clustering rewrites the partition
         else sized.filter(_._2 < smallFileBytes)
@@ -3268,7 +3373,7 @@ object OccTable {
         snap.colmap, Map.empty, Map.empty,
         statsColumns.map(snap.physName),
         bloomColumns.map(b => b.copy(col = snap.physName(b.col))),
-        "staged batch")
+        "staged batch", snap.schemaJson)
       try return OptimizeResult(
         commitActions(spark, dir, adds, removes, snap.version,
           schemaInForce = snap.schemaJson,

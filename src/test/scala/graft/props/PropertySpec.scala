@@ -3,7 +3,7 @@ package graft.props
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.ops.{Anomaly, Rollups, Trend, WindowedAgg}
 
@@ -309,6 +309,107 @@ object GraftProperties extends Properties("graft") {
           .collect().head.toSeq
         skip == full
       } finally {
+        def rm(f: java.io.File): Unit = {
+          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+        }
+        rm(base.toFile)
+      }
+    }
+
+  // footer-stats cases: raw values of every stat-projectable type (None =
+  // NULL) — byte, short, int, long, float, double, date (epoch days),
+  // timestamp (epoch micros), decimal(9,2), decimal(18,4), decimal(38,10)
+  // — then the write's shape
+  private type StatRow = (Option[Int], Option[Int], Option[Int],
+    Option[Long], Option[Float], Option[Double], Option[Int], Option[Long],
+    Option[String], Option[String], Option[String])
+  private final case class FooterCase(rows: List[StatRow], nFiles: Int,
+      emptyFile: Boolean, millis: Boolean, smallGroups: Boolean,
+      driverMax: Int)
+
+  private def nullable[T](g: Gen[T], pNull: Double): Gen[Option[T]] =
+    Gen.choose(0.0, 1.0).flatMap(u =>
+      if (u < pNull) Gen.const(None) else g.map(Some(_)))
+
+  private def decimalStr(precision: Int, scale: Int): Gen[String] = for {
+    n <- Gen.choose(1, precision)
+    digits <- Gen.listOfN(n, Gen.numChar)
+    neg <- Gen.oneOf(true, false)
+  } yield {
+    val d = BigDecimal(BigInt(digits.mkString), scale)
+    (if (neg) -d else d).bigDecimal.toPlainString
+  }
+
+  private val footerCases: Gen[FooterCase] = for {
+    p <- Gen.listOfN(11, Gen.frequency((4, 0.0), (4, 0.25), (1, 1.0)))
+    n <- Gen.choose(0, 60)
+    rows <- Gen.listOfN(n, for {
+      b <- nullable(Gen.choose(-128, 127), p(0))
+      s <- nullable(Gen.choose(-32768, 32767), p(1))
+      i <- nullable(Gen.frequency((8, Gen.choose(-1000, 1000)),
+        (1, Gen.oneOf(Int.MinValue, Int.MaxValue))), p(2))
+      l <- nullable(Gen.frequency((8, Gen.choose(-1000000000000L,
+        1000000000000L)), (1, Gen.oneOf(Long.MinValue, Long.MaxValue))), p(3))
+      f <- nullable(Gen.frequency((10, Gen.choose(-1e4, 1e4).map(_.toFloat)),
+        (2, Gen.oneOf(0.0f, -0.0f)),
+        (1, Gen.oneOf(Float.NaN, Float.PositiveInfinity, Float.MaxValue))),
+        p(4))
+      d <- nullable(Gen.frequency((10, Gen.choose(-1e6, 1e6)),
+        (2, Gen.oneOf(0.0, -0.0)),
+        (1, Gen.oneOf(Double.NaN, Double.NegativeInfinity, Double.MaxValue))),
+        p(5))
+      dt <- nullable(Gen.choose(-40000, 40000), p(6)) // 1860 .. 2079
+      ts <- nullable(Gen.choose(-4000000000000000L, 4000000000000000L), p(7))
+      d9 <- nullable(decimalStr(9, 2), p(8))
+      d18 <- nullable(decimalStr(18, 4), p(9))
+      d38 <- nullable(decimalStr(38, 10), p(10))
+    } yield (b, s, i, l, f, d, dt, ts, d9, d18, d38))
+    nFiles <- Gen.choose(1, 4)
+    emptyFile <- Gen.oneOf(true, false)
+    millis <- Gen.oneOf(true, false)
+    smallGroups <- Gen.oneOf(true, false)
+    driverMax <- Gen.oneOf(0, 64)
+  } yield FooterCase(rows, nFiles, emptyFile, millis, smallGroups, driverMax)
+
+  property("footer stats ≡ the scan-computed reference stats; NaN columns come out untracked") =
+    forAll(footerCases) { fc =>
+      import graft.sources.OccStatsReference
+      import spark.implicits._
+      val cols = Seq("b", "s", "i", "l", "f", "d", "dt", "ts", "d9", "d18",
+        "d38")
+      val frame = fc.rows.toDF(cols: _*).select(
+        col("b").cast("byte").as("b"), col("s").cast("short").as("s"),
+        col("i"), col("l"), col("f"), col("d"),
+        expr("date_from_unix_date(dt)").as("dt"),
+        expr("timestamp_micros(ts)").as("ts"),
+        col("d9").cast("decimal(9,2)").as("d9"),
+        col("d18").cast("decimal(18,4)").as("d18"),
+        col("d38").cast("decimal(38,10)").as("d38"))
+      val base = java.nio.file.Files.createTempDirectory("graft_fst")
+      val dir = base.resolve("t").toString
+      val tsKey = "spark.sql.parquet.outputTimestampType"
+      val tsPrev = spark.conf.getOption(tsKey)
+      spark.conf.set(tsKey,
+        if (fc.millis) "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS")
+      try {
+        val w = frame.repartition(fc.nFiles).write.mode("append")
+        // at most 4 rows a row group: files of 5+ rows hold several
+        (if (!fc.smallGroups) w
+         else w.option("parquet.block.row.count.limit", "4")).parquet(dir)
+        if (fc.emptyFile) frame.limit(0).write.mode("append").parquet(dir)
+        val names = new java.io.File(dir).list().toSeq
+          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        val got = OccStatsReference.footerStats(spark, dir, names, cols,
+          fc.driverMax)
+        val want = OccStatsReference.scanStats(spark, dir, names, cols)
+          .map { case (f, st) =>
+            f -> st.split('|').filterNot(_.contains("NaN")).mkString("|") }
+        val grouped = !fc.smallGroups || fc.rows.size < 20 ||
+          names.exists(n => OccStatsReference.rowGroups(spark, s"$dir/$n") > 1)
+        ((got == want) :| s"footer $got != reference $want") &&
+          (grouped :| "small block size wrote no multi-row-group file")
+      } finally {
+        tsPrev.fold(spark.conf.unset(tsKey))(spark.conf.set(tsKey, _))
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
         }

@@ -641,6 +641,29 @@ class OccTableSpec extends SparkSpec {
       .count() === 11L)
   }
 
+  test("stats: a NaN-bearing file is never pruned — readPruned, merge and deleteRange match the full filter") {
+    val dir = freshDir()
+    OccTable.init(Seq((1L, 1.0), (2L, 5.0), (3L, Double.NaN))
+      .toDF("id", "x").coalesce(1), dir, statsColumns = Seq("x"))
+    val full = OccTable.read(spark, dir)().filter(col("x").between(0.5, 2.0))
+    assert(full.count() === 1L)
+    assert(OccTable.readPruned(spark, dir, "x", 0.5, 2.0).count() === 1L)
+    // the column is untracked, and a NaN bound in an older log reads so
+    val snap = OccTable.snapshot(spark, dir)
+    assert(OccTable.statsFor(snap.stats(snap.files.head), "x") === None)
+    assert(OccTable.statsFor("rows=3|x=1.0,NaN,0", "x") === None)
+    // NaN = NaN in a Spark join: the NaN-keyed row's file is a candidate
+    OccTable.merge(spark, dir, Seq((30L, Double.NaN)).toDF("id", "x"),
+      Seq("x"), statsColumns = Seq("x"))
+    assert(OccTable.read(spark, dir)().select("id").as[Long].collect()
+      .sorted.toSeq === Seq(1L, 2L, 30L))
+    // [0, 10] holds 1.0 and 5.0 but not NaN: the file is rewritten, not
+    // dropped whole
+    OccTable.deleteRange(spark, dir, "x", 0.0, 10.0)
+    assert(OccTable.read(spark, dir)().select("id").as[Long].collect()
+      .toSeq === Seq(30L))
+  }
+
   test("readPrunedMulti: conjunction prunes on every column and filters exactly") {
     val dir = freshDir()
     // two files: (v in [0,99], w all 5) and (v in [100,199], w all 7)
