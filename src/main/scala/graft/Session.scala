@@ -16,13 +16,17 @@ import org.apache.spark.sql.SparkSession
   *     pushdown).
   *   - UTC session timezone — window/oracle arithmetic must not depend on
   *     the host zone.
+  *   - `spark.sql.extensions=graft.plans.GraftExtensions` — graft's
+  *     native functions, the cosine rewrite, and the analysis rule that
+  *     applies deletion vectors to batch `graft-occ` reads (without it
+  *     such a read refuses loudly instead of resurrecting deleted rows).
   *   - `spark.sql.shuffle.partitions` sized to the given parallelism
   *     instead of the 200 default (for local/test use; on a real cluster
   *     leave AQE coalescing to size reducers and pass the executor core
   *     count).
   *
-  * `graft.Verify` / `Bench` / `StreamBench` / `Explain` all build their
-  * sessions here.
+  * `graft.Verify` / `Bench` / `StreamBench` / `Explain`, the benchmark
+  * and the test suites all build their sessions here.
   */
 object Session {
 
@@ -35,6 +39,8 @@ object Session {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions",
+        classOf[graft.plans.GraftExtensions].getName)
       .config(graft.sources.Tables.NanosAsLongConf, "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       // write timestamps as annotated INT64 micros, not the deprecated

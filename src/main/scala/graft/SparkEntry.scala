@@ -3244,11 +3244,12 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
     }),
 
-    // ---- X151: the DV-delete survivors served BY FORMAT NAME through
-    //      the V1 lane — same build as q_occ_delete_dv minus the purge,
-    //      so the table still CARRIES its deletion vectors and the
-    //      relation must compose the sidecar anti-join itself; result ≡
-    //      the doubly-negated filter, deleted rows never resurrected ----
+    // ---- X151: the DV-delete survivors served BY FORMAT NAME — same
+    //      build as q_occ_delete_dv minus the purge, so the table still
+    //      CARRIES its deletion vectors and the read plan must compose
+    //      the sidecar anti-join itself (OccDvRewrite, installed with
+    //      the session's extensions); result ≡ the doubly-negated
+    //      filter, deleted rows never resurrected ----
     "q_occ_dsv2_dv" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -3266,17 +3267,9 @@ object SparkEntry {
         .select(col("user_id").cast("string")).distinct()
         .collect().map(_.getString(0)).toSeq
       OccTable.deleteEqualityDv(s, t, "user_id", victims)
-      // route THIS load through the V1 lane (relation resolution is
-      // eager, so the conf only needs to cover the load call); append
-      // to the default list — replacing it would flip the plain
-      // parquet scans the anti-join builds on to V2
-      val ck = "spark.sql.sources.useV1SourceList"
-      val prevList = s.conf.get(ck)
-      s.conf.set(ck, prevList + ",graft-occ")
-      try s.read.format("graft-occ").load(t)
+      s.read.format("graft-occ").load(t)
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(col("value"), 6).as("value"))
-      finally s.conf.set(ck, prevList)
     }),
 
     // ---- X143: lossless TYPE WIDENING as pure metadata — gen-1 files

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Optimizer rule rewriting the declarative higher-order-function cosine
@@ -51,8 +52,11 @@ object CosineRewrite extends Rule[LogicalPlan] {
     case _ => false
   }
 
+  // graft.Session installs this rule for every query: skip plans with
+  // no higher-order function without walking their expressions
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(
+        _.containsPattern(TreePattern.HIGH_ORDER_FUNCTION)) {
       case Divide(
           HofDot(a, b),
           Sqrt(Multiply(HofDot(a2, a3), HofDot(b2, b3), _)), _)

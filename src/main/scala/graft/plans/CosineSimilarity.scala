@@ -94,10 +94,13 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 /** Declarative injection point: sessions built with
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) get graft's native functions in
-  * every new session, the standard deployment path for a cluster-wide
-  * install. [[GraftFunctions.register]] remains for sessions the library
-  * doesn't construct (e.g. the test driver's).
+  * `.withExtensions(new GraftExtensions)`) get graft's native functions,
+  * the [[CosineRewrite]] optimizer rule and the
+  * [[graft.sources.OccDvRewrite]] analysis rule (batch `graft-occ` reads
+  * over deletion vectors) in every new session, the standard deployment
+  * path for a cluster-wide install; [[graft.Session.builder]] sets it.
+  * [[GraftFunctions.register]] remains for sessions the library doesn't
+  * construct (functions only).
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -107,6 +110,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         builder))
     }
     ext.injectOptimizerRule(_ => CosineRewrite)
+    ext.injectPostHocResolutionRule(graft.sources.OccDvRewrite)
   }
 }
 

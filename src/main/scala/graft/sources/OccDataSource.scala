@@ -6,24 +6,24 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet,
-  LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And,
+  AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
+  In, InSet, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.execution.datasources.{FileIndex,
-  HadoopFsRelation, PartitionDirectory, PartitioningAwareFileIndex,
-  PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation,
+  FileScanBuilder}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister,
-  PrunedFilteredScan, RelationProvider}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -38,27 +38,33 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `ts >=` range over the telemetry table) becomes a plain filtered
   * read that file-skips without knowing the verb exists.
   *
-  * Two integration paths, ONE pruning brain:
-  *   - DataSource V2 (the default): [[TableProvider]] → a
-  *     `SupportsRead` table whose ScanBuilder wraps Spark's own
-  *     `ParquetScanBuilder` over the log-backed [[OccFileIndex]] — the
-  *     builder carries filter pushdown (`SupportsPushDownCatalystFilters`
-  *     → `pushedFilters` on the scan) and column pruning
-  *     (`readDataSchema`), [[OccScanBuilder]] translates logical↔
-  *     physical names under a column mapping (X149), and
-  *     `FileScan.partitions` hands the pushed data filters to
-  *     [[OccFileIndex.listFiles]], which is where the log-level file
-  *     skipping happens. The scan also serves
-  *     `spark.readStream.format("graft-occ")` (X150,
-  *     [[OccDataMicroBatchStream]]).
-  *   - V1 fallback ([[RelationProvider]] → [[HadoopFsRelation]] over
-  *     the SAME index — Delta's own read architecture), selected via
-  *     `spark.sql.sources.useV1SourceList` (APPEND `graft-occ` to the
-  *     default list rather than replacing it). Same files, same
-  *     skipping, FileSourceScanExec plan shape; DV-carrying snapshots
-  *     serve HERE through [[OccDvRelation]] (X151), which composes the
-  *     sidecar anti-join a plain scan cannot.
-  * Both inherit parquet row-group pushdown and whole-stage codegen;
+  * ONE read lane, DataSource V2: [[TableProvider]] → a `SupportsRead`
+  * table whose ScanBuilder wraps Spark's own `ParquetScanBuilder` over
+  * the log-backed [[OccFileIndex]] — the builder carries filter
+  * pushdown (`SupportsPushDownCatalystFilters` → `pushedFilters` on the
+  * scan) and column pruning (`readDataSchema`), [[OccScanBuilder]]
+  * translates logical↔physical names under a column mapping (X149),
+  * and `FileScan.partitions` hands the pushed data filters to
+  * [[OccFileIndex.listFiles]], which is where the log-level file
+  * skipping happens. The scan also serves
+  * `spark.readStream.format("graft-occ")` (X150,
+  * [[OccDataMicroBatchStream]]). A path-named read and a SQL catalog
+  * table (`CREATE TABLE … USING graft-occ`) resolve the same way.
+  *
+  * Deletion vectors (X151): a plain parquet scan would resurrect
+  * DV-deleted rows, so a BATCH relation over a DV-carrying snapshot
+  * never reaches a scan builder — [[OccDvRewrite]], an analysis rule
+  * in [[graft.plans.GraftExtensions]] (which [[graft.Session]]
+  * installs), replaces it with the plan
+  * [[OccTable.applyDvs]] builds: a file relation over the SAME
+  * [[OccFileIndex]] anti-joined with the DV sidecars, so pushed
+  * filters still reach `listFiles` and prune with the same brain,
+  * under any column mapping. [[OccV2Table.newScanBuilder]] refuses a
+  * DV-carrying snapshot loudly; only streaming reads and sessions
+  * without the extension reach that refusal, so DV correctness never
+  * silently depends on the rule being installed.
+  *
+  * Parquet row-group pushdown and whole-stage codegen carry over;
   * every pruning layer is free of false negatives and Spark re-applies
   * the full residual filter above the scan, so results are identical
   * to the unpruned scan regardless of translation gaps. File metadata
@@ -69,17 +75,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Read options (Delta parity): `versionAsOf` / `timestampAsOf` (epoch
   * millis or ISO instant) time-travel the relation; mutually
   * exclusive; streaming adds `startingVersion`/`startingTimestamp`/
-  * `maxVersionsPerTrigger`/`onRewrite`. The one state a lane cannot
-  * serve correctly still refuses loudly with a pointer at the lane
-  * that can: deletion vectors on V2 (the plain parquet scan would
-  * resurrect deleted rows → the V1 lane), an active column mapping on
-  * V1 (the raw relation would surface physical names → the V2 lane).
+  * `maxVersionsPerTrigger`/`onRewrite`.
   */
-class OccDataSource extends TableProvider with RelationProvider
-    with DataSourceRegister {
+class OccDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-occ"
 
-  // --- DataSource V2 ---
   override def supportsExternalMetadata(): Boolean = false
 
   /** ONE snapshot per read: Spark calls inferSchema then getTable on
@@ -122,42 +122,13 @@ class OccDataSource extends TableProvider with RelationProvider
     val (dir, snap, st) = resolveCached(spark, params)
     new OccV2Table(spark, dir, snap, st)
   }
-
-  // --- V1 fallback (spark.sql.sources.useV1SourceList=graft-occ) ---
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val (dir, snap, schema) =
-      OccDataSource.resolve(spark, parameters, allowDvs = true)
-    // the V1 relation hands files straight to ParquetFileFormat, which
-    // would surface the files' PHYSICAL names verbatim — X149's
-    // rename-above-the-scan needs the V2 lane, so mapped tables refuse
-    // here (the DEFAULT path serves them)
-    require(!snap.colmap.exists { case (l, p) => l != p },
-      s"graft-occ: table at $dir has an active column mapping — read " +
-        "it through the default V2 path or OccTable.read")
-    // X151: a DV-carrying snapshot cannot be a plain file relation (the
-    // scan would resurrect deleted rows) — serve it through a
-    // PrunedFilteredScan that composes the SAME pruning brain with the
-    // sidecar anti-join [[OccTable.readFiltered]] applies
-    if (snap.dvs.nonEmpty)
-      return new OccDvRelation(spark, dir, snap, schema)
-    HadoopFsRelation(
-      location = new OccFileIndex(spark, dir, snap, schema),
-      partitionSchema = StructType(Nil),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-  }
 }
 
 private[sources] object OccDataSource {
-  /** Shared option handling: path, time travel, refusal gates. Returns
-    * (dir, snapshot, logical schema).
+  /** Option handling: path and time travel. Returns (dir, snapshot,
+    * logical schema).
     */
-  def resolve(spark: SparkSession, parameters: Map[String, String],
-      allowDvs: Boolean = false)
+  def resolve(spark: SparkSession, parameters: Map[String, String])
       : (String, OccTable.Snapshot, StructType) = {
     val params = parameters.map { case (k, v) => k.toLowerCase -> v }
     val dir = params.getOrElse("path",
@@ -175,11 +146,6 @@ private[sources] object OccDataSource {
         OccTable.snapshotAt(spark, dir,
           OccTable.versionAsOf(spark, dir, t))))
       .getOrElse(OccTable.snapshot(spark, dir))
-    require(allowDvs || snap.dvs.isEmpty,
-      s"graft-occ: table at $dir carries deletion vectors — the V2 " +
-        "parquet scan would resurrect deleted rows; read it through " +
-        "the V1 lane (spark.sql.sources.useV1SourceList=graft-occ) or " +
-        "OccTable.read/readFiltered, which apply them")
     val schema = snap.schema.getOrElse(throw new IllegalStateException(
       s"graft-occ: legacy log at $dir records no schema"))
     (dir, snap, schema)
@@ -198,8 +164,9 @@ private[sources] object OccDataSource {
   * in, so a pushed filter on a RENAMED column prunes the identical
   * file set the verb API prunes.
   */
-final class OccV2Table(spark: SparkSession, dir: String,
-    snap: OccTable.Snapshot, logicalSchema: StructType)
+final class OccV2Table(spark: SparkSession,
+    private[sources] val dir: String,
+    private[sources] val snap: OccTable.Snapshot, logicalSchema: StructType)
     extends Table with SupportsRead {
   override def name(): String = s"graft-occ($dir@v${snap.version})"
   override def schema(): StructType = logicalSchema
@@ -208,6 +175,17 @@ final class OccV2Table(spark: SparkSession, dir: String,
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder = {
+    // batch reads over DVs are rewritten by OccDvRewrite before any
+    // scan is built; what reaches here is streaming, or a session
+    // without the extension
+    require(snap.dvs.isEmpty,
+      s"graft-occ: table at $dir carries deletion vectors at " +
+        s"v${snap.version} — a plain parquet scan would resurrect " +
+        "deleted rows. Batch reads apply them through " +
+        "graft.plans.GraftExtensions (spark.sql.extensions; " +
+        "graft.Session installs it); streaming reads cannot — read " +
+        "through OccTable.read/readFiltered or purge them " +
+        "(OccTable.purgeDvs)")
     val physSchema = OccTable.physicalSchema(logicalSchema, snap.colmap)
     new OccScanBuilder(spark, dir, snap,
       new OccFileIndex(spark, dir, snap, physSchema),
@@ -216,6 +194,45 @@ final class OccV2Table(spark: SparkSession, dir: String,
         f.name -> snap.physName(f.name)).toMap,
       options)
   }
+}
+
+/** X151 — deletion vectors in the one read lane: replaces a batch
+  * [[OccV2Table]] relation whose snapshot carries DVs with the plan
+  * [[OccTable.applyDvs]] builds — a parquet file relation over the
+  * log-backed [[OccFileIndex]] (physical schema, renamed to logical
+  * names under a column mapping) LEFT ANTI joined with the DV sidecars
+  * on (`_metadata.file_name`, `row_index`) — projected back onto the
+  * relation's own output attributes, so the plan above never notices
+  * the swap. Pushed filters cross the rename and the anti-join into
+  * the file scan, whose `listFiles` prunes with
+  * [[OccFilterTranslation]] exactly as the V2 scan does. Streaming
+  * relations are a different node and stay on the V2 scan (which
+  * refuses DVs). Injected at post-hoc resolution by
+  * [[graft.plans.GraftExtensions]], modelled on
+  * [[graft.plans.CosineRewrite]].
+  */
+final case class OccDvRewrite(session: SparkSession)
+    extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.resolveOperatorsUp {
+      case r @ DataSourceV2Relation(t: OccV2Table, _, _, _, _, _)
+          if t.snap.dvs.nonEmpty =>
+        val physSchema = OccTable.physicalSchema(t.schema(), t.snap.colmap)
+        val scan = session.baseRelationToDataFrame(HadoopFsRelation(
+          location = new OccFileIndex(session, t.dir, t.snap, physSchema),
+          partitionSchema = StructType(Nil),
+          dataSchema = physSchema,
+          bucketSpec = None,
+          fileFormat = new ParquetFileFormat,
+          options = Map.empty)(session))
+        // analyzed here, so its `_metadata` references are resolved
+        val served = OccTable.applyDvs(session, t.dir, t.snap,
+          OccTable.logicalView(t.snap, t.schema(), scan))
+          .queryExecution.analyzed
+        // both outputs follow the logical schema's column order
+        Project(r.output.zip(served.output).map { case (a, s) =>
+          Alias(s, a.name)(exprId = a.exprId) }, served)
+    }
 }
 
 /** X149 — the logical↔physical translation layer over Spark's own
@@ -267,11 +284,13 @@ final class OccScanBuilder(spark: SparkSession, dir: String,
   }
 }
 
-/** The scan both graft-occ V2 lanes produce: Spark's `ParquetScan`
-  * (whole-stage codegen, row-group pushdown, `FileScan.partitions` →
-  * the log-backed index) with `readSchema()` renamed back to LOGICAL
-  * names under a column mapping — the rows are positional, so the
-  * rename is plan-level metadata only.
+/** The scan the graft-occ lane produces for DV-free snapshots, batch
+  * and streaming: Spark's `ParquetScan` (whole-stage codegen,
+  * row-group pushdown, `FileScan.partitions` → the log-backed index)
+  * with `readSchema()` renamed back to LOGICAL names under a column
+  * mapping — the rows are positional, so the rename is plan-level
+  * metadata only. (DV-carrying batch reads are served by
+  * [[OccDvRewrite]] over the same index instead.)
   */
 final class OccParquetScan(spark: SparkSession, dir: String,
     snap: OccTable.Snapshot,
@@ -306,10 +325,12 @@ final class OccParquetScan(spark: SparkSession, dir: String,
       onRewrite = Option(options.get("onRewrite")).getOrElse("fail"))
 }
 
-/** The log-backed file index behind BOTH `graft-occ` paths: the file
-  * LIST is the snapshot (never a directory listing — staged or
-  * orphaned files are invisible by construction; one root listing only
-  * resolves sizes), and [[listFiles]] applies the
+/** The log-backed file index of the `graft-occ` lane, under both of
+  * its scans — the V2 [[OccParquetScan]] and, for DV-carrying
+  * snapshots, the file relation [[OccDvRewrite]] plans: the file LIST
+  * is the snapshot (never a directory listing — staged or orphaned
+  * files are invisible by construction; one root listing only
+  * resolves sizes of legacy adds), and [[listFiles]] applies the
   * [[OccTable.pruneFileSet]] survival decision to the translated data
   * filters. Extends [[PartitioningAwareFileIndex]] so Spark's V2
   * parquet ScanBuilder accepts it; the partition spec is empty (the
@@ -514,151 +535,6 @@ private[sources] object OccFilterTranslation {
     case StringType => Some(v.toString)
     case ByteType | ShortType | IntegerType | LongType => Some(v.toString)
     case BooleanType => Some(v.toString)
-    case _ => None
-  }
-}
-
-/** X151 — the DV-carrying table as a V1 relation
-  * (`spark.sql.sources.useV1SourceList=graft-occ`): a plain file
-  * relation would resurrect DV-deleted rows, so this lane builds the
-  * scan the way [[OccTable.readFiltered]] does — translate the pushed
-  * V1 filters into the pruning vocabulary, plan only the surviving
-  * files, and compose the sidecar LEFT ANTI join on
-  * (`_metadata.file_name`, `row_index`) above them. The sidecar read
-  * itself pushes an `In(file_name, …)` filter (only currently-marked
-  * files' positions apply). Expressible filters also re-apply INSIDE
-  * the scan so parquet row-group pushdown still fires; Spark
-  * re-evaluates the full predicate above regardless, so translation
-  * gaps cost pruning, never correctness.
-  */
-final class OccDvRelation(spark: SparkSession, dir: String,
-    snap: OccTable.Snapshot, logicalSchema: StructType)
-    extends BaseRelation with PrunedFilteredScan {
-  override def sqlContext: SQLContext = spark.sqlContext
-  override def schema: StructType = logicalSchema
-  // X148 sizes feed join planning; a size-less LEGACY log must fall
-  // back to the conservative default (huge), never to ~0 — a tiny
-  // sizeInBytes would nominate a 100 TB table for broadcast
-  override def sizeInBytes: Long =
-    if (snap.sizesComplete)
-      snap.files.flatMap(snap.sizes.get).map(_._1).sum max 1L
-    else super.sizeInBytes
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : org.apache.spark.rdd.RDD[Row] = {
-    val (pvEq, intervals, equality) = OccV1FilterTranslation
-      .translate(filters)
-    val kept = OccTable.pruneFileSet(spark, dir, snap, pvEq, intervals,
-      equality)
-    val base: DataFrame =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], logicalSchema)
-      else OccTable.applyDvs(spark, dir, snap,
-        OccTable.scanFiles(spark, dir, snap, kept))
-    // re-apply the expressible filters inside the scan so parquet
-    // row-group pushdown fires; the engine re-applies the full
-    // predicate above this relation either way
-    val filtered = filters.flatMap(OccV1FilterTranslation.toColumn)
-      .foldLeft(base)(_ filter _)
-    filtered.select(requiredColumns.toIndexedSeq.map(col): _*).rdd
-  }
-}
-
-/** V1 `sources.Filter` → the [[OccTable.pruneFileSet]] vocabulary —
-  * the [[OccFilterTranslation]] twin for the lane Spark hands
-  * translated public Filter objects instead of Catalyst expressions.
-  * Same conservatism: anything not provably convertible simply does
-  * not prune.
-  */
-private[sources] object OccV1FilterTranslation {
-  import org.apache.spark.sql.sources.{And => SAnd, EqualTo => SEq,
-    Filter, GreaterThan => SGt, GreaterThanOrEqual => SGe,
-    In => SIn, IsNotNull => SNotNull, IsNull => SNull,
-    LessThan => SLt, LessThanOrEqual => SLe}
-
-  def translate(filters: Array[Filter])
-      : (Seq[(String, String)], Seq[(String, Double, Double)],
-         Seq[(String, Seq[String])]) = {
-    val pvEq = Seq.newBuilder[(String, String)]
-    val intervals = Seq.newBuilder[(String, Double, Double)]
-    val equality = Seq.newBuilder[(String, Seq[String])]
-    def walk(f: Filter): Unit = f match {
-      case SAnd(l, r) => walk(l); walk(r)
-      case SGe(a, v) => bound(v).foreach(lo =>
-        intervals += ((a, lo, Double.PositiveInfinity)))
-      case SGt(a, v) => bound(v).foreach(lo =>
-        intervals += ((a, lo, Double.PositiveInfinity)))
-      case SLe(a, v) => bound(v).foreach(hi =>
-        intervals += ((a, Double.NegativeInfinity, hi)))
-      case SLt(a, v) => bound(v).foreach(hi =>
-        intervals += ((a, Double.NegativeInfinity, hi)))
-      case SEq(a, v) if v != null =>
-        bound(v).foreach(d => intervals += ((a, d, d)))
-        str(v).foreach { sv => pvEq += ((a, sv)); equality += ((a, Seq(sv))) }
-      case SIn(a, vs) if vs.nonEmpty && !vs.contains(null) =>
-        val ds = vs.toSeq.map(bound)
-        if (ds.forall(_.nonEmpty)) {
-          val flat = ds.flatten
-          intervals += ((a, flat.min, flat.max))
-        }
-        val ss = vs.toSeq.map(str)
-        if (ss.forall(_.nonEmpty)) equality += ((a, ss.flatten))
-      case _ => () // residual-only, never wrong
-    }
-    filters.foreach(walk)
-    (pvEq.result(), intervals.result(), equality.result())
-  }
-
-  /** The V1 filter as a Column, where losslessly expressible — lets the
-    * relation re-apply pushed predicates inside the scan (parquet
-    * row-group pushdown) without waiting for the engine's outer
-    * re-evaluation.
-    */
-  def toColumn(f: Filter): Option[Column] = f match {
-    case SAnd(l, r) => for (a <- toColumn(l); b <- toColumn(r)) yield a && b
-    case SEq(a, v) if v != null => Some(col(a) === lit(v))
-    case SGt(a, v) => Some(col(a) > lit(v))
-    case SGe(a, v) => Some(col(a) >= lit(v))
-    case SLt(a, v) => Some(col(a) < lit(v))
-    case SLe(a, v) => Some(col(a) <= lit(v))
-    case SIn(a, vs) if vs.nonEmpty => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case SNull(a) => Some(col(a).isNull)
-    case SNotNull(a) => Some(col(a).isNotNull)
-    case _ => None
-  }
-
-  /** JVM-object literal → stat-projection units (the V1 twin of
-    * [[OccFilterTranslation.bound]]): timestamps to epoch micros,
-    * dates to zone-independent epoch-days seconds, numerics to double.
-    */
-  private def bound(v: Any): Option[Double] = v match {
-    case t: java.sql.Timestamp =>
-      Some(t.getTime * 1000.0 + (t.getNanos / 1000) % 1000)
-    case i: java.time.Instant =>
-      Some(i.getEpochSecond * 1e6 + i.getNano / 1000.0)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay * 86400.0)
-    case d: java.time.LocalDate => Some(d.toEpochDay * 86400.0)
-    case n: java.lang.Byte => Some(n.doubleValue)
-    case n: java.lang.Short => Some(n.doubleValue)
-    case n: java.lang.Integer => Some(n.doubleValue)
-    case n: java.lang.Long => Some(n.doubleValue)
-    case n: java.lang.Float => Some(n.doubleValue)
-    case n: java.lang.Double => Some(n)
-    case n: java.math.BigDecimal => Some(n.doubleValue)
-    case n: BigDecimal => Some(n.doubleValue)
-    case _ => None
-  }
-
-  /** The literal in the write-time `cast("string")` form — same type
-    * restrictions as [[OccFilterTranslation.str]].
-    */
-  private def str(v: Any): Option[String] = v match {
-    case s: String => Some(s)
-    case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
-         _: java.lang.Long => Some(v.toString)
-    case b: java.lang.Boolean => Some(b.toString)
     case _ => None
   }
 }

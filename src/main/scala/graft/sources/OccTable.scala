@@ -1762,15 +1762,21 @@ object OccTable {
       s: Snapshot, names: Seq[String]): DataFrame = {
     val paths = names.map(f => resolvePath(dir, f))
     s.schema match {
-      case Some(st) =>
-        val base = spark.read.schema(physicalSchema(st, s.colmap))
-          .parquet(paths: _*)
-        if (s.colmap.isEmpty) base
-        else base.select(st.fields.map(f =>
-          col(s.physName(f.name)).as(f.name)).toIndexedSeq: _*)
+      case Some(st) => logicalView(s, st,
+        spark.read.schema(physicalSchema(st, s.colmap)).parquet(paths: _*))
       case None => spark.read.parquet(paths: _*)
     }
   }
+
+  /** A scan of snapshot `s`'s files in PHYSICAL names, aliased back to
+    * the LOGICAL schema `st` (identity without a column mapping). A
+    * Project, so `_metadata` still resolves through it.
+    */
+  private[sources] def logicalView(s: Snapshot, st: StructType,
+      phys: DataFrame): DataFrame =
+    if (s.colmap.isEmpty) phys
+    else phys.select(st.fields.map(f =>
+      col(s.physName(f.name)).as(f.name)).toIndexedSeq: _*)
 
   /** Read `names` — files added under era snapshot `at` — and serve
     * them in `cur`'s LOGICAL space: each of cur's logical columns
@@ -3571,15 +3577,15 @@ object OccTable {
     * many files carry deletion vectors or bloom indexes, declared
     * partition columns (from the log's pv state), CHECK-constraint
     * count, and the vacuum horizon. Pure metadata: O(#live files)
-    * driver work off the snapshot fold plus one `getFileStatus` per
-    * file for bytes (skipped files' sizes are log-external by design —
-    * the log records names, not lengths).
+    * driver work off the snapshot fold; bytes sum the sizes the log
+    * records per add (X148), with one `getFileStatus` only for a
+    * size-less add of a legacy log.
     */
   def detail(spark: SparkSession, dir: String): DataFrame = {
     val fsys = fs(spark, dir)
     val s = snapshot(spark, dir)
-    val bytes = s.files.map(f =>
-      fsys.getFileStatus(new Path(resolvePath(dir, f))).getLen).sum
+    val bytes = s.files.map(f => s.sizes.get(f).map(_._1).getOrElse(
+      fsys.getFileStatus(new Path(resolvePath(dir, f))).getLen)).sum
     // pv keys are physical names (X137) — report the logical view
     val physToLogical = s.colmap.map(_.swap)
     val partCols = s.pvs.values.flatMap(_.keys).toSeq.distinct

@@ -46,10 +46,30 @@ class CosineSimilaritySpec extends SparkSpec {
           .as("a"),
         expr("transform(sequence(1, 64), i -> cast(xxhash64(id + 7, i) % 1000 as double) / 991.0)")
           .as("b"))
-    val both = df.select(
-      call_function(GraftFunctions.CosineName, col("a"), col("b")).as("native"),
-      Similarity.cosine(col("a"), col("b")).as("builtin"))
-    assert(both.filter(col("native") =!= col("builtin")).count() === 0)
+    val native = df.select(col("id"),
+      call_function(GraftFunctions.CosineName, col("a"), col("b")).as("c"))
+      .orderBy("id").select("c").as[Double].collect()
+    // the session carries GraftExtensions, whose CosineRewrite would turn
+    // the reference into graft_cosine too: evaluate it with the rule off
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val prior = spark.conf.getOption(excluded)
+    spark.conf.set(excluded, CosineRewrite.ruleName)
+    val builtin = try {
+      val q = df.select(col("id"), Similarity.cosine(col("a"), col("b")).as("c"))
+      assert(!q.queryExecution.optimizedPlan.toString.contains("graft_cosine"),
+        s"reference was rewritten:\n${q.queryExecution.optimizedPlan}")
+      q.orderBy("id").select("c").as[Double].collect()
+    } finally prior match {
+      case Some(v) => spark.conf.set(excluded, v)
+      case None => spark.conf.unset(excluded)
+    }
+    assert(native.length === 200 && builtin.length === 200)
+    val differ = native.indices.filter(i =>
+      java.lang.Double.doubleToLongBits(native(i)) !=
+        java.lang.Double.doubleToLongBits(builtin(i)))
+    assert(differ.isEmpty,
+      s"rows ${differ.take(5).mkString(",")}: native ${differ.take(5).map(native(_))} " +
+        s"vs builtin ${differ.take(5).map(builtin(_))}")
   }
 
   test("CosineRewrite upgrades the HOF cosine pattern to the native expression") {

@@ -16,16 +16,10 @@ object GraftProperties extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
 
-  // same builder as SparkSpec (incl. temp warehouse): whichever suite wins
-  // the shared-session race must not plant a spark-warehouse in the repo
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .getOrCreate()
+  // the one test session builder (graft.Session's, plus a temp
+  // warehouse): whichever suite wins the shared-session race fixes the
+  // static confs for all of them
+  private lazy val spark: SparkSession = graft.SparkSpec.session
 
   private val values: Gen[List[Double]] =
     Gen.listOfN(40, Gen.choose(-100.0, 100.0)).suchThat(_.nonEmpty)

@@ -4,25 +4,28 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkSpec
 
 /** X142 `graft-occ` connector: `spark.read.format("graft-occ")` serves
   * the current snapshot through a log-backed FileIndex, so an ad-hoc
   * `WHERE` file-skips AUTOMATICALLY with exactly the
-  * [[OccTable.pruneFileSet]] survival decision the verb API uses. The
-  * default path is DataSource V2 (Spark's ParquetScanBuilder — filter
-  * pushdown + column pruning — over the index); the V1 relation
-  * fallback serves the same files under
-  * `spark.sql.sources.useV1SourceList`. Unservable snapshot states
-  * (DVs, column mapping) refuse loudly; versionAsOf/timestampAsOf
+  * [[OccTable.pruneFileSet]] survival decision the verb API uses. One
+  * lane, DataSource V2 (Spark's ParquetScanBuilder — filter pushdown +
+  * column pruning — over the index); a DV-carrying snapshot is served
+  * by [[OccDvRewrite]] (the session's extensions) as a file scan over
+  * the same index anti-joined with its DV sidecars, under any column
+  * mapping. Streaming over DVs refuses loudly; versionAsOf/timestampAsOf
   * time-travel.
   */
-class OccDataSourceSpec extends SparkSpec {
+class OccDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def freshDir(): String =
@@ -58,6 +61,16 @@ class OccDataSourceSpec extends SparkSpec {
   private def indexOf(scan: ParquetScan): OccFileIndex =
     scan.fileIndex.asInstanceOf[OccFileIndex]
 
+  /** The file scan [[OccDvRewrite]] plans for a DV-carrying snapshot
+    * (the anti-join may put it inside an adaptive query stage).
+    */
+  private def dvScanOf(df: DataFrame): FileSourceScanExec =
+    collect(executed(df)) {
+      case f: FileSourceScanExec
+          if f.relation.location.isInstanceOf[OccFileIndex] => f
+    }.headOption
+      .getOrElse(fail("no FileSourceScanExec over OccFileIndex in the plan"))
+
   test("V2 load() serves the snapshot; a pushed range prunes the verb's file set") {
     val dir = freshDir()
     buildSliced(dir)
@@ -81,33 +94,21 @@ class OccDataSourceSpec extends SparkSpec {
     assert(slimScan.readDataSchema.fieldNames.toSet === Set("id", "key"))
   }
 
-  test("V1 fallback (useV1SourceList) serves the same files through HadoopFsRelation") {
+  test("useV1SourceList naming graft-occ fails loudly at load(): no second lane") {
     val dir = freshDir()
     buildSliced(dir)
     val key = "spark.sql.sources.useV1SourceList"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "graft-occ")
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, prev + ",graft-occ")
     try {
-      val q = spark.read.format("graft-occ").load(dir)
-        .filter(col("id") >= 10L && col("id") <= 19L)
-      assert(q.select("id").as[Long].collect().sorted.toSeq ===
-        (10L to 19L))
-      val scan = executed(q).collectLeaves().collectFirst {
-        case f: FileSourceScanExec => f
-      }.getOrElse(fail("V1 fallback must plan a FileSourceScanExec"))
-      val idx = scan.relation.location.asInstanceOf[OccFileIndex]
-      val snap = OccTable.snapshot(spark, dir)
-      val expected = OccTable.pruneFileSet(spark, dir, snap, Seq.empty,
-        Seq(("id", 10.0, 19.0)), Seq.empty)
-      assert(idx.lastKept.toSet === expected.toSet)
-      assert(scan.metadata("PushedFilters")
-        .contains("GreaterThanOrEqual(id,10)"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+      val e = intercept[Exception] {
+        spark.read.format("graft-occ").load(dir)
       }
-    }
+      assert(e.getMessage.contains("graft-occ"),
+        s"the refusal must name the source: ${e.getMessage}")
+    } finally spark.conf.set(key, prev)
+    // the default lane is untouched by the failed attempt
+    assert(spark.read.format("graft-occ").load(dir).count() === 40L)
   }
 
   test("a pushed equality probes the bloom sidecars like the verb does") {
@@ -209,58 +210,52 @@ class OccDataSourceSpec extends SparkSpec {
     OccTable.init((0 until 10).map(i => (i.toLong, s"k$i"))
       .toDF("id", "key").coalesce(1), dir, statsColumns = Seq("id"))
     OccTable.deleteRangeDv(spark, dir, "id", 0.0, 2.0)
-    val e1 = intercept[IllegalArgumentException] {
-      spark.read.format("graft-occ").load(dir).collect()
+    // streaming stays on the V2 scan, which cannot apply DVs
+    val sq = spark.readStream.format("graft-occ").load(dir)
+      .writeStream.format("memory").queryName("occ_dv_refuse").start()
+    val e1 = try intercept[StreamingQueryException] {
+      sq.processAllAvailable()
+    } finally sq.stop()
+    assert(e1.getCause.getMessage.contains("deletion vectors"))
+    // a scan builder reached without the analysis rule refuses and
+    // names the extension that serves DVs
+    val (d, snap, st) = OccDataSource.resolve(spark, Map("path" -> dir))
+    val e2 = intercept[IllegalArgumentException] {
+      new OccV2Table(spark, d, snap, st)
+        .newScanBuilder(CaseInsensitiveStringMap.empty())
     }
-    assert(e1.getMessage.contains("deletion vectors") &&
-      e1.getMessage.contains("useV1SourceList"),
-      "the refusal must point at the lane that serves DVs")
+    assert(e2.getMessage.contains("deletion vectors") &&
+      e2.getMessage.contains("GraftExtensions"),
+      "the refusal must point at the rule that serves DVs")
   }
 
-  test("X151: a DV-carrying table serves through the V1 lane — DVs applied, pruning intact") {
+  test("X151: a DV-carrying table serves through the default lane — DVs applied, pruning intact") {
     val dir = freshDir()
     buildSliced(dir) // 4 files (ids 0-9 / 10-19 / 20-29 / 30-39)
     OccTable.deleteRangeDv(spark, dir, "id", 5.0, 14.0)
-    val key = "spark.sql.sources.useV1SourceList"
-    val prev = spark.conf.getOption(key)
-    // APPEND to the default list: replacing it would flip the plain
-    // parquet reads the DV anti-join builds on to V2 mid-lane
-    spark.conf.set(key, spark.conf.get(key) + ",graft-occ")
-    try {
-      val t = spark.read.format("graft-occ").load(dir)
-      // hash-equal to the verb read: deleted positions never surface
-      assert(t.as[(Long, String, Double)].collect().toSet ===
-        OccTable.read(spark, dir)()
-          .as[(Long, String, Double)].collect().toSet)
-      assert(t.select("id").as[Long].collect().sorted.toSeq ===
-        ((0L to 4L) ++ (15L to 39L)))
-      // a pushed range composes with the DV anti-join
-      val q = t.filter(col("id") >= 10L && col("id") <= 19L)
-      assert(q.select("id").as[Long].collect().sorted.toSeq ===
-        (15L to 19L))
-      // pruning brain parity: the V1 filter translation feeds the
-      // SAME pruneFileSet decision the verb uses
-      val snap = OccTable.snapshot(spark, dir)
-      val (pv, iv, eq) = OccV1FilterTranslation.translate(Array(
-        org.apache.spark.sql.sources.GreaterThanOrEqual("id", 10L),
-        org.apache.spark.sql.sources.LessThanOrEqual("id", 19L)))
-      assert(pv.isEmpty && eq.isEmpty &&
-        iv === Seq(("id", 10.0, Double.PositiveInfinity),
-          ("id", Double.NegativeInfinity, 19.0)))
-      assert(OccTable.pruneFileSet(spark, dir, snap, pv, iv, eq).size === 1)
-      // the sidecar lookup pushes its file filter into the sidecar scan
-      val composed = OccTable.applyDvs(spark, dir, snap,
-        OccTable.scanFiles(spark, dir, snap, snap.files))
-      composed.collect()
-      assert(composed.queryExecution.executedPlan.toString
-        .contains("file_name"),
-        "the sidecar anti-join must key on the scan's file identity")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val t = spark.read.format("graft-occ").load(dir)
+    // hash-equal to the verb read: deleted positions never surface
+    assert(t.as[(Long, String, Double)].collect().toSet ===
+      OccTable.read(spark, dir)()
+        .as[(Long, String, Double)].collect().toSet)
+    assert(t.select("id").as[Long].collect().sorted.toSeq ===
+      ((0L to 4L) ++ (15L to 39L)))
+    // a pushed range crosses the DV anti-join into the file scan
+    val q = t.filter(col("id") >= 10L && col("id") <= 19L)
+    assert(q.select("id").as[Long].collect().sorted.toSeq ===
+      (15L to 19L))
+    val scan = dvScanOf(q)
+    val snap = OccTable.snapshot(spark, dir)
+    val expected = OccTable.pruneFileSet(spark, dir, snap, Seq.empty,
+      Seq(("id", 10.0, 19.0)), Seq.empty)
+    assert(expected.size === 1 && snap.files.size === 4)
+    assert(scan.relation.location.asInstanceOf[OccFileIndex]
+      .lastKept.toSet === expected.toSet,
+      "the DV lane must skip exactly the files the verb API skips")
+    assert(scan.metadata("PushedFilters")
+      .contains("GreaterThanOrEqual(id,10)"))
+    // the sidecar anti-join keys on the scan's file identity
+    assert(executed(q).toString.contains("file_name"))
   }
 
   test("X149: a column-mapped table SERVES through V2 — logical names out, physical pruning in") {
@@ -304,21 +299,35 @@ class OccDataSourceSpec extends SparkSpec {
     assert(v2ScanOf(slim).readDataSchema.fieldNames.toSet ===
       Set("id", "key"))
     assert(slim.as[String].collect().toSeq === Seq("k5"))
-    // the V1 relation lane cannot rename above its scan — refuses
-    val key = "spark.sql.sources.useV1SourceList"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "graft-occ")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        spark.read.format("graft-occ").load(dir).collect()
-      }
-      assert(e.getMessage.contains("column mapping"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+  }
+
+  test("X149 × X151: a renamed, DV-deleted table reads by format name — verb parity, pruning intact") {
+    val dir = freshDir()
+    buildSliced(dir) // 4 files, id stats + key blooms, ids 0–39
+    OccTable.renameColumn(spark, dir, "id", "ident")
+    OccTable.deleteRangeDv(spark, dir, "ident", 5.0, 14.0)
+    val t = spark.read.format("graft-occ").load(dir)
+    assert(t.columns.toSeq === Seq("ident", "key", "v"),
+      "the relation must surface LOGICAL names")
+    assert(t.as[(Long, String, Double)].collect().toSet ===
+      OccTable.read(spark, dir)()
+        .as[(Long, String, Double)].collect().toSet)
+    assert(t.select("ident").as[Long].collect().sorted.toSeq ===
+      ((0L to 4L) ++ (15L to 39L)))
+    // a pushed range on the RENAMED column reaches the file scan in
+    // physical space and prunes the verb's file set
+    val q = t.filter(col("ident") >= 10L && col("ident") <= 19L)
+    assert(q.select("ident").as[Long].collect().sorted.toSeq ===
+      (15L to 19L))
+    val snap = OccTable.snapshot(spark, dir)
+    val expected = OccTable.pruneFileSet(spark, dir, snap, Seq.empty,
+      Seq(("ident", 10.0, 19.0)), Seq.empty)
+    assert(expected.size === 1 && snap.files.size === 4)
+    val scan = dvScanOf(q)
+    assert(scan.relation.location.asInstanceOf[OccFileIndex]
+      .lastKept.toSet === expected.toSet)
+    assert(scan.metadata("PushedFilters")
+      .contains("GreaterThanOrEqual(id,10)"))
   }
 
   test("X149: rename-back and colmapclear windows still serve exact bytes") {

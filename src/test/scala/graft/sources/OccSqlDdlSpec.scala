@@ -58,20 +58,35 @@ class OccSqlDdlSpec extends SparkSpec {
     assert(OccTable.read(spark, dir)().count() === 30L)
   }
 
-  test("_metadata resolves through the V1 lane (file identity for audits)") {
+  test("CREATE TABLE USING graft-occ over a DV-carrying table: SQL serves the survivors") {
+    val dir = fresh()
+    def slice(r: Range) =
+      r.map(i => (i.toLong, s"k$i")).toDF("id", "key").coalesce(1)
+    OccTable.init(slice(0 until 10), dir, statsColumns = Seq("id"))
+    OccTable.append(slice(10 until 20), dir, statsColumns = Seq("id"))
+    OccTable.deleteRangeDv(spark, dir, "id", 3.0, 12.0)
+    spark.sql("DROP TABLE IF EXISTS occ_sql_dv")
+    spark.sql(s"CREATE TABLE occ_sql_dv USING `graft-occ` OPTIONS (path '$dir')")
+    try {
+      assert(spark.table("occ_sql_dv").as[(Long, String)].collect().toSet ===
+        OccTable.read(spark, dir)().as[(Long, String)].collect().toSet)
+      assert(spark.sql("SELECT id FROM occ_sql_dv WHERE id >= 10")
+        .as[Long].collect().sorted.toSeq === (13L until 20L))
+      // a later DV delete is visible to the next query (the pointer)
+      OccTable.deleteRangeDv(spark, dir, "id", 19.0, 19.0)
+      assert(spark.sql("SELECT count(*) FROM occ_sql_dv")
+        .head().getLong(0) === 9L)
+    } finally spark.sql("DROP TABLE IF EXISTS occ_sql_dv")
+  }
+
+  test("_metadata resolves through OccTable.read (file identity for audits)") {
     val dir = fresh()
     OccTable.init((0 until 10).map(i => (i.toLong, s"k$i"))
       .toDF("id", "key").coalesce(1), dir)
-    val key = "spark.sql.sources.useV1SourceList"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, prev + ",graft-occ")
-    try {
-      val m = spark.read.format("graft-occ").load(dir)
-        .select(col("_metadata.file_name")).distinct()
-      val names = m.as[String].collect()
-      assert(names.length === 1 &&
-        OccTable.snapshot(spark, dir).files.map(_.split('/').last)
-          .contains(names.head))
-    } finally spark.conf.set(key, prev)
+    val names = OccTable.read(spark, dir)()
+      .select(col("_metadata.file_name")).distinct().as[String].collect()
+    assert(names.length === 1 &&
+      OccTable.snapshot(spark, dir).files.map(_.split('/').last)
+        .contains(names.head))
   }
 }

@@ -847,4 +847,31 @@ class OccTableSpec extends SparkSpec {
     assert(none.count() === 0L)
     assert(none.columns.toSeq === Seq("x", "y", "payload"))
   }
+
+  test("detail: size_bytes equals the live files' on-disk lengths through append, DV delete, optimize and clone") {
+    val dir = freshDir()
+    def onDisk(d: String): Long = {
+      val fsys = new org.apache.hadoop.fs.Path(d)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      OccTable.snapshot(spark, d).files.map(f =>
+        fsys.getFileStatus(new org.apache.hadoop.fs.Path(
+          OccTable.resolvePath(d, f))).getLen).sum
+    }
+    def sizeBytes(d: String): Long =
+      OccTable.detail(spark, d).select("size_bytes").as[Long].head()
+    OccTable.init((0L until 20L).map(i => (i, i * 10)).toDF("id", "v")
+      .coalesce(2), dir, statsColumns = Seq("id"))
+    OccTable.append((20L until 30L).map(i => (i, i * 10)).toDF("id", "v")
+      .coalesce(1), dir, statsColumns = Seq("id"))
+    assert(sizeBytes(dir) === onDisk(dir))
+    OccTable.deleteRangeDv(spark, dir, "id", 0.0, 4.0)
+    assert(sizeBytes(dir) === onDisk(dir))
+    OccTable.optimize(spark, dir)
+    assert(OccTable.snapshot(spark, dir).files.size === 1)
+    assert(sizeBytes(dir) === onDisk(dir))
+    val fork = freshDir()
+    OccTable.clone(spark, dir, fork)
+    assert(sizeBytes(fork) === onDisk(fork) && onDisk(fork) === onDisk(dir))
+    assert(onDisk(dir) > 0L)
+  }
 }
