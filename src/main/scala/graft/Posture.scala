@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Classifier, Curate, Dedup, Mixture, Similarity, TextStats}
+import graft.obs.Telemetry
 import graft.sources.{Layout, OccBloom, OccTable, Tables}
 
 /** Empirical 10×-scale posture check for the dedup family — the backstop
@@ -28,31 +28,6 @@ import graft.sources.{Layout, OccBloom, OccTable, Tables}
   */
 object Posture {
 
-  private final class Metrics extends SparkListener {
-    @volatile var peakTaskMem = 0L
-    @volatile var spilledBytes = 0L
-    @volatile var shuffleWritten = 0L
-    @volatile var maxTaskMs = 0L
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        peakTaskMem = math.max(peakTaskMem, m.peakExecutionMemory)
-        spilledBytes += m.memoryBytesSpilled
-        shuffleWritten += m.shuffleWriteMetrics.bytesWritten
-      }
-      if (e.taskInfo != null)
-        maxTaskMs = math.max(maxTaskMs, e.taskInfo.duration)
-    }
-    def snapshot(): (Long, Long) = { Thread.sleep(1000); (peakTaskMem, spilledBytes) }
-    def shuffled(): Long = { Thread.sleep(1000); shuffleWritten }
-    def maxTask(): Long = { Thread.sleep(1000); maxTaskMs }
-    def reset(): Unit = {
-      Thread.sleep(1000)
-      peakTaskMem = 0L; spilledBytes = 0L; shuffleWritten = 0L
-      maxTaskMs = 0L
-    }
-  }
-
   /** `stride` must exceed every base doc_id so shard id ranges stay
     * disjoint — derived from the observed max in main(), not assumed,
     * because SPARK_GRAFT_SF_DIR is env-configurable and an overlap would
@@ -71,26 +46,34 @@ object Posture {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark: SparkSession = Session.local(cpus)
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
+
+    // one run's wall seconds and the telemetry of exactly its jobs
+    def timed(f: () => Unit): (Double, Telemetry.Records) =
+      Telemetry.window(spark) { _ =>
+        val t0 = System.nanoTime()
+        f()
+        (System.nanoTime() - t0) / 1e9
+      }
 
     // min of 3 timed runs per measurement: the host shows multi-ten-second
     // stalls that land on random queries (same defense as graft.Bench).
-    // Metrics reset per run; the reported peak/spill is the MAX single-run
-    // value — a sum across runs would triple-count — and the 1 s listener
-    // drain (best-effort: very late TaskEnd events can still slip into the
-    // next run's window) rides each run boundary. ONE definition for every
-    // measured family so the protocol cannot diverge between sections.
+    // Each run is its own telemetry window; a section reports the MIN wall
+    // seconds and the MAX single-run figure of each metric — a sum across
+    // runs would triple-count. ONE definition for every measured family
+    // so the protocol cannot diverge between sections.
+    def minOf3(f: () => Unit): (Double, Seq[Telemetry.Records]) = {
+      val runs = (1 to 3).map(_ => timed(f))
+      (runs.map(_._1).min, runs.map(_._2))
+    }
     def timedRuns(f: () => Unit): (Double, Long, Long) = {
-      val samples = (1 to 3).map { _ =>
-        metrics.reset()
-        val t0 = System.nanoTime()
-        f()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val (peak, spill) = metrics.snapshot()
-        (sec, peak, spill)
-      }
-      (samples.map(_._1).min, samples.map(_._2).max, samples.map(_._3).max)
+      val (sec, rs) = minOf3(f)
+      (sec, rs.map(_.peakTaskMem).max, rs.map(_.spill).max)
+    }
+    // one warm run, then one timed run's wall seconds and shuffle write
+    def warmShuffle(f: () => Unit): (Double, Long) = {
+      f()
+      val (sec, r) = timed(f)
+      (sec, r.shuffleWrite)
     }
 
     val base = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
@@ -521,6 +504,23 @@ object Posture {
     // being measured; the noop write materializes every output column
     def consume(d: DataFrame): Unit =
       d.write.format("noop").mode("overwrite").save()
+    // the drift and behavior families' grid: every (variant, scale)
+    // warmed, then per variant the min-of-3 wall and the max single-run
+    // shuffle write at 1x and 10x, one JSON row each
+    def shuffleGrid(scales: Seq[(String, DataFrame)],
+        variants: Seq[(String, DataFrame => DataFrame)]): Seq[String] = {
+      variants.foreach { case (_, f) =>
+        scales.foreach { case (_, d) => consume(f(d)) }
+      }
+      variants.map { case (name, f) =>
+        val Seq((s1, sh1), (s10, sh10)) = scales.map { case (_, d) =>
+          val (sec, rs) = minOf3(() => consume(f(d)))
+          (sec, rs.map(_.shuffleWrite).max)
+        }
+        f""""$name": {"sec_1x": $s1%.2f, "sec_10x": $s10%.2f, "time_growth": ${s10 / s1}%.2f,
+           |      "shuffle_mb_1x": ${sh1 / 1048576}, "shuffle_mb_10x": ${sh10 / 1048576}}""".stripMargin
+      }
+    }
     val temporal = temporalOps.map { case (name, f) =>
       consume(f()) // warmup
       val (sec, peak, spill) = timedRuns(() => consume(f()))
@@ -598,18 +598,16 @@ object Posture {
         graft.ops.Temporal.intervalJoinBucketed(
           hotWins.drop("user_id"), "window_id", "w_start", "w_end",
           hotEv, "ts", "value", bucketSec)
+    def withConfs[A](kvs: (String, String)*)(body: => A): A =
+      StatePosture.withProvider(spark, kvs.toMap)(body)
     // at this synthetic size AQE broadcasts one side of every hot join
     // and the probe parallelism follows the STREAMED side — the
     // single-cell funnel never materializes. At 100 TB neither a year of
     // windows nor a year of events broadcasts, so the at-scale plan is
     // the shuffled one: the hot scenarios disable broadcast to measure
     // THAT plan (the 1x/10x health rows keep the default planner).
-    def noBroadcast[A](body: => A): A = {
-      val k = "spark.sql.autoBroadcastJoinThreshold"
-      val prev = spark.conf.get(k)
-      spark.conf.set(k, "-1")
-      try body finally spark.conf.set(k, prev)
-    }
+    def noBroadcast[A](body: => A): A =
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
     // the doc rule closed into a recommendation: tuneBucketSec on the
     // hot fixture's windows frame — measured below next to the manual
     // 60 s pick it should land on (one-minute windows → 60)
@@ -922,13 +920,6 @@ object Posture {
           .write.mode("overwrite").parquet(p)
         spark.read.parquet(p)
       }
-      def consumeJ(d: DataFrame): Unit =
-        d.write.format("noop").mode("overwrite").save()
-      def withConf[A](k: String, v: String)(body: => A): A = {
-        val prev = spark.conf.get(k)
-        spark.conf.set(k, v)
-        try body finally spark.conf.set(k, prev)
-      }
       val RtFilter = "spark.sql.optimizer.runtime.bloomFilter.enabled"
       val blocks = Seq(("1x", ev), ("10x", evTenX)).map { case (lbl, d) =>
         val dim = dimOf(lbl, d)
@@ -937,18 +928,12 @@ object Posture {
         // at 10x and inflate the explicit lane's false-positive traffic
         val dimKeys = math.max(64L, dim.count())
         noBroadcast {
-          def measure(body: () => Unit): (Double, Long) = {
-            body() // warm
-            metrics.reset()
-            val t0 = System.nanoTime(); body()
-            ((System.nanoTime() - t0) / 1e9, metrics.shuffled())
-          }
-          val (secN, shN) = withConf(RtFilter, "false")(
-            measure(() => consumeJ(d.join(dim, Seq("user_id")))))
-          val (secE, shE) = withConf(RtFilter, "true")(
-            measure(() => consumeJ(d.join(dim, Seq("user_id")))))
-          val (secX, shX) = withConf(RtFilter, "false")(
-            measure(() => consumeJ(
+          val (secN, shN) = withConfs(RtFilter -> "false")(
+            warmShuffle(() => consume(d.join(dim, Seq("user_id")))))
+          val (secE, shE) = withConfs(RtFilter -> "true")(
+            warmShuffle(() => consume(d.join(dim, Seq("user_id")))))
+          val (secX, shX) = withConfs(RtFilter -> "false")(
+            warmShuffle(() => consume(
               graft.ops.Joins.bloomReducedJoin(d, dim, "user_id",
                 expectedDimKeys = dimKeys))))
           f""""$lbl": {"naive_shuffle_mb": ${shN / 1048576.0}%.2f, "engine_shuffle_mb": ${shE / 1048576.0}%.2f, "explicit_shuffle_mb": ${shX / 1048576.0}%.2f,
@@ -1184,17 +1169,9 @@ object Posture {
         Layout.writeBucketed(spark.read.parquet(fp), tf, "user_id", 32)
         Layout.writeBucketed(spark.read.parquet(up), tu, "user_id", 32)
         noBroadcast {
-          def measure(body: () => Unit): (Double, Long) = {
-            body() // warm
-            metrics.reset()
-            val t0 = System.nanoTime(); body()
-            ((System.nanoTime() - t0) / 1e9, metrics.shuffled())
-          }
-          def consumeJ(x: DataFrame): Unit =
-            x.write.format("noop").mode("overwrite").save()
-          val (secP, shP) = measure(() => consumeJ(
+          val (secP, shP) = warmShuffle(() => consume(
             spark.read.parquet(fp).join(spark.read.parquet(up), "user_id")))
-          val (secB, shB) = measure(() => consumeJ(
+          val (secB, shB) = warmShuffle(() => consume(
             spark.table(tf).hint("merge").join(spark.table(tu), "user_id")))
           f""""$lbl": {"plain_shuffle_mb": ${shP / 1048576.0}%.2f, "bucketed_shuffle_mb": ${shB / 1048576.0}%.2f,
              |      "plain_sec": $secP%.2f, "bucketed_sec": $secB%.2f}""".stripMargin
@@ -1270,31 +1247,12 @@ object Posture {
         .write.mode("overwrite").parquet(dimP)
       val dim = spark.read.parquet(dimP)
       val facts = Seq(("1x", factOf("1x", ev)), ("10x", factOf("10x", evTenX)))
-      def consumeJ(d: DataFrame): Unit =
-        d.write.format("noop").mode("overwrite").save()
-      def withConfs[A](kvs: (String, String)*)(body: => A): A = {
-        val prev = kvs.map { case (kk, _) => kk -> spark.conf.getOption(kk) }
-        kvs.foreach { case (kk, v) => spark.conf.set(kk, v) }
-        try body
-        finally prev.foreach {
-          case (kk, Some(v)) => spark.conf.set(kk, v)
-          case (kk, None) => spark.conf.unset(kk)
-        }
-      }
       // min-of-3 wall (host-stall defense, same as timedRuns); max
       // single-run hot-task time — the skew observable (naive's hot
       // task recurs every run, so max across runs is stable)
       def measure3(body: () => Unit): (Double, Long, Long) = {
-        val samples = (1 to 3).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          body()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val mt = metrics.maxTask()
-          val (pm, _) = metrics.snapshot()
-          (sec, mt, pm)
-        }
-        (samples.map(_._1).min, samples.map(_._2).max, samples.map(_._3).max)
+        val (sec, rs) = minOf3(body)
+        (sec, rs.map(_.maxTaskMs).max, rs.map(_.peakTaskMem).max)
       }
       val variants: Seq[(String, Seq[(String, String)], DataFrame => DataFrame)] = Seq(
         ("naive",
@@ -1315,12 +1273,12 @@ object Posture {
         // warmup once per (variant, scale) so codegen/footers are charged
         // to nobody, exactly like every other family
         variants.foreach { case (_, confs, f) =>
-          withConfs(confs: _*)(facts.foreach { case (_, d) => consumeJ(f(d)) })
+          withConfs(confs: _*)(facts.foreach { case (_, d) => consume(f(d)) })
         }
         variants.map { case (name, confs, f) =>
           val runs = withConfs(confs: _*) {
             facts.map { case (lbl, d) =>
-              lbl -> measure3(() => consumeJ(f(d)))
+              lbl -> measure3(() => consume(f(d)))
             }.toMap
           }
           val (s1, t1, m1) = runs("1x")
@@ -1364,12 +1322,12 @@ object Posture {
                 .as("med"))))
         variants.foreach { case (_, confs, f) =>
           withConfs(confs: _*)(
-            facts.foreach { case (_, d) => consumeJ(f(d)) }) // warmup
+            facts.foreach { case (_, d) => consume(f(d)) }) // warmup
         }
         variants.map { case (name, confs, f) =>
           val runs = withConfs(confs: _*) {
             facts.map { case (lbl, d) =>
-              lbl -> measure3(() => consumeJ(f(d)))
+              lbl -> measure3(() => consume(f(d)))
             }.toMap
           }
           val (s1, t1, m1) = runs("1x")
@@ -1399,17 +1357,6 @@ object Posture {
           .withColumn("user_id", col("user_id") + lit(i * uMax))
           .withColumn("value", col("value") + lit(i * 1e-7)))
         .reduce(_ unionByName _)
-      def consumeD(d: DataFrame): Unit =
-        d.write.format("noop").mode("overwrite").save()
-      def measureS(body: () => Unit): (Double, Long) = {
-        val samples = (1 to 3).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          body()
-          ((System.nanoTime() - t0) / 1e9, metrics.shuffled())
-        }
-        (samples.map(_._1).min, samples.map(_._2).max)
-      }
       val scales = Seq(("1x", ev), ("10x", evTenXv))
       val variants: Seq[(String, DataFrame => DataFrame)] = Seq(
         "kll_build" -> (d => d.groupBy(col("event_type"))
@@ -1420,19 +1367,7 @@ object Posture {
           d, "event_type", "value", graft.ops.Drift.secondHalf(d, "ts"), 256)),
         "cusum" -> (d => graft.ops.Drift.cusumChangepoint(
           d, "event_type", "ts", "value", "event_id")))
-      // warmup per (variant, scale), same protocol as every family
-      variants.foreach { case (_, f) =>
-        scales.foreach { case (_, d) => consumeD(f(d)) }
-      }
-      val blocks = variants.map { case (name, f) =>
-        val runs = scales.map { case (lbl, d) =>
-          lbl -> measureS(() => consumeD(f(d)))
-        }.toMap
-        val (s1, sh1) = runs("1x")
-        val (s10, sh10) = runs("10x")
-        f""""$name": {"sec_1x": $s1%.2f, "sec_10x": $s10%.2f, "time_growth": ${s10 / s1}%.2f,
-           |      "shuffle_mb_1x": ${sh1 / 1048576}, "shuffle_mb_10x": ${sh10 / 1048576}}""".stripMargin
-      }
+      val blocks = shuffleGrid(scales, variants)
       s"""  "drift": {
          |    "what": "value-distribution operators at 1x/10x events (values perturbed per shard so distinct values scale with rows): kll_build = per-key KLL sketch aggregation (X107), ks_exact = exact two-sample KS via distinct-value cumulative windows (X108), ks_sketch = KS off two KLL sketches, cusum = integer CUSUM changepoint windows (X109). Healthy = kll_build/ks_sketch shuffle ~flat (constant-size sketch states cross the wire, not values) while ks_exact shuffle grows with distinct values; cusum/ks_exact time ~linear",
          |    ${blocks.mkString(",\n    ")}}""".stripMargin
@@ -1453,17 +1388,6 @@ object Posture {
           .withColumn("user_id", col("user_id") + lit(i * uMax))
           .withColumn("value", col("value") + lit(i * 1000.0)))
         .reduce(_ unionByName _)
-      def consumeB(d: DataFrame): Unit =
-        d.write.format("noop").mode("overwrite").save()
-      def measureB(body: () => Unit): (Double, Long) = {
-        val samples = (1 to 3).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          body()
-          ((System.nanoTime() - t0) / 1e9, metrics.shuffled())
-        }
-        (samples.map(_._1).min, samples.map(_._2).max)
-      }
       val scales = Seq(("1x", ev), ("10x", evTenXb))
       val variants: Seq[(String, DataFrame => DataFrame)] = Seq(
         "funnel" -> (d => graft.ops.Behavior.funnel(
@@ -1483,18 +1407,7 @@ object Posture {
           d.filter(col("value").isNotNull)
             .withColumn("__w", (floor(col("value")) + lit(1L)).cast("long")),
           "event_id", "__w", "ps1", m = 1000, nParts = 32)))
-      variants.foreach { case (_, f) =>
-        scales.foreach { case (_, d) => consumeB(f(d)) }
-      }
-      val blocks = variants.map { case (name, f) =>
-        val runs = scales.map { case (lbl, d) =>
-          lbl -> measureB(() => consumeB(f(d)))
-        }.toMap
-        val (s1, sh1) = runs("1x")
-        val (s10, sh10) = runs("10x")
-        f""""$name": {"sec_1x": $s1%.2f, "sec_10x": $s10%.2f, "time_growth": ${s10 / s1}%.2f,
-           |      "shuffle_mb_1x": ${sh1 / 1048576}, "shuffle_mb_10x": ${sh10 / 1048576}}""".stripMargin
-      }
+      val blocks = shuffleGrid(scales, variants)
       s"""  "behavior_freq": {
          |    "what": "behavioral analytics + frequency sketch at 1x/10x events (user_id shifted per shard so users scale with rows; value shifted +1000/shard so MG item cardinality scales): funnel = 3-step 24h conversion (X113), cohort = retention matrix (X114), transitions = first-order event pairs (X115), mg_build = per-type Misra-Gries k=64 over floor(value) buckets (X112), rfm = ntile-quartile segmentation (X118, windows over the 1-row-per-user frame), weighted_sample = m=1000 integer stride selection (X116, two-pass range-partitioned prefix sums). Healthy = funnel/cohort/transitions/rfm/weighted_sample time+shuffle ~linear (user- or range-keyed, no global window over raw events); mg_build shuffle ~flat (k counters per group cross the wire, never items)",
          |    ${blocks.mkString(",\n    ")}}""".stripMargin

@@ -2859,6 +2859,10 @@ object OccTable {
       val evolved = resolveSchema(snap.schemaJson,
         withGenerated(sourceData, snap.gencols).schema)
       checkNewColumns(snap, evolved)
+      // a zero-row source commits nothing, whatever its schema: no row
+      // depends on the shape it would evolve the table to
+      if (keyRows.isEmpty)
+        return MergeResult(snap.version, 0, snap.files.size)
       val physKey = snap.physName(headKey)
       val candidates =
         if (overCap) {
@@ -2896,8 +2900,6 @@ object OccTable {
           bloomPrunedFiles(spark, dir, snap.copy(files = byStats),
             headKey, keyStrs)
         }
-      if (!overCap && keyStrs.isEmpty && evolved.isEmpty)
-        return MergeResult(snap.version, 0, snap.files.size) // empty batch
       val touched =
         if (candidates.isEmpty) None
         else Some(readSnapshot(spark, dir,

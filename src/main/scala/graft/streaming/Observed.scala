@@ -1,10 +1,9 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.obs.Telemetry
 
 /** In-flight data-quality metrics via `Dataset.observe` — the counters a
   * standing pipeline exports per micro-batch WITHOUT a second
@@ -31,8 +30,8 @@ object Observed {
     * `valueCol`, and out-of-domain count vs [lo, hi]. Composes with any
     * plan, batch or streaming (batch reads land in
     * `df.queryExecution.observedMetrics` after an action; streaming
-    * lands per micro-batch in `QueryProgress.observedMetrics`, captured
-    * by [[QualityListener]]).
+    * lands per micro-batch in `QueryProgress.observedMetrics`, read
+    * back by [[quality]]).
     */
   def withQuality(df: DataFrame, valueCol: String,
       lo: Double, hi: Double): DataFrame =
@@ -42,34 +41,16 @@ object Observed {
       sum(when(col(valueCol) < lo || col(valueCol) > hi, 1L)
         .otherwise(0L)).as("n_out_of_range"))
 
-  /** Collects each micro-batch's [[MetricName]] observation row as a
-    * plain (n_rows, n_null, n_out_of_range) map — the bridge from the
-    * engine's listener bus to whatever metrics store the deployment
-    * exports to. Batches that moved no data publish no observation and
-    * are skipped.
+  /** A micro-batch's [[MetricName]] observation as a plain (n_rows,
+    * n_null, n_out_of_range) map — the bridge from the engine's progress
+    * reports (collected by [[graft.obs.Telemetry]]) to whatever metrics
+    * store the deployment exports to. Batches that moved no data
+    * publish no observation and give `None`.
     */
-  final class QualityListener extends StreamingQueryListener {
-    private val buf =
-      new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]()
-
-    def batches: Seq[Map[String, Long]] = buf.asScala.toSeq
-
-    override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val m = e.progress.observedMetrics.get(MetricName)
-      if (m != null)
-        buf.add(m.schema.fieldNames.zipWithIndex
-          // a watermark-only batch can still execute the plan and publish
-          // count=0 with null sums; read those as 0, not a getLong NPE
-          // (which the listener bus would swallow, silently dropping the
-          // batch)
-          .map { case (f, i) =>
-            f -> (if (m.isNullAt(i)) 0L else m.getLong(i))
-          }.toMap)
-    }
-  }
+  def quality(p: Telemetry.Progress): Option[Map[String, Long]] =
+    p.observed.get(MetricName).map(m => m.schema.fieldNames.zipWithIndex
+      // a watermark-only batch can still execute the plan and publish
+      // count=0 with null sums; read those as 0, not a getLong NPE
+      .map { case (f, i) => f -> (if (m.isNullAt(i)) 0L else m.getLong(i)) }
+      .toMap)
 }

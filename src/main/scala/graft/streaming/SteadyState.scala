@@ -1,18 +1,16 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
-  StreamingQueryListener, Trigger}
-import org.apache.spark.sql.streaming.StreamingQueryListener._
+  Trigger}
+
+import graft.obs.Telemetry
 
 /** Measures the steady-state envelope of the real dual-sink pipeline
   * (raw parquet append + watermarked windowed agg) under the deterministic
@@ -31,7 +29,8 @@ object SteadyState {
       rows: Long, elapsedSec: Double, msgPerMin: Double,
       rawBatches: Int, rawMedianMs: Long, rawMaxMs: Long,
       aggBatches: Int, aggMedianMs: Long, aggMaxMs: Long,
-      aggWindowsFlushed: Long, rowsPerBatch: Int, advanceMsPerBatch: Long) {
+      aggWindowsFlushed: Long, rowsPerBatch: Int, advanceMsPerBatch: Long,
+      rawPhaseMs: Seq[(String, Long)], aggPhaseMs: Seq[(String, Long)]) {
     /** One diffable JSON line, targets included so the artifact is
       * self-describing.
       */
@@ -42,8 +41,13 @@ object SteadyState {
         s""""agg_batches":$aggBatches,"agg_latency_ms":{"median":$aggMedianMs,"max":$aggMaxMs},""" +
         s""""agg_windows_flushed":$aggWindowsFlushed,""" +
         s""""sim":{"rows_per_batch":$rowsPerBatch,"advance_ms_per_batch":$advanceMsPerBatch},""" +
-        s""""target":{"msg_per_min":300,"latency_ms":10000}}"""
+        s""""target":{"msg_per_min":300,"latency_ms":10000},""" +
+        s""""raw_phase_ms":${phaseJson(rawPhaseMs)},"agg_phase_ms":${phaseJson(aggPhaseMs)}}"""
   }
+
+  /** A section's per-phase medians as one JSON object. */
+  private def phaseJson(phaseMs: Seq[(String, Long)]): String =
+    phaseMs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 
   def median(xs: Seq[Long]): Long = xs.sorted.apply(xs.length / 2)
 
@@ -55,30 +59,37 @@ object SteadyState {
     */
   final case class DocEnvelope(kind: String, docs: Long, elapsedSec: Double,
       msgPerMin: Double, batches: Int, medianMs: Long, maxMs: Long,
-      outRows: Long) {
+      outRows: Long, phaseMs: Seq[(String, Long)]) {
     def json: String =
       s""""$kind":{"msg_per_min":${math.round(msgPerMin)},"docs":$docs,""" +
         s""""elapsed_sec":${math.round(elapsedSec * 10) / 10.0},"batches":$batches,""" +
-        s""""latency_ms":{"median":$medianMs,"max":$maxMs},"out_rows":$outRows}"""
+        s""""latency_ms":{"median":$medianMs,"max":$maxMs},"out_rows":$outRows,""" +
+        s""""phase_ms":${phaseJson(phaseMs)}}"""
   }
 
-  /** The productive micro-batches (`numInputRows > 0`) of one query, each
-    * as (numInputRows, triggerExecution ms). Latency quantiles are over
-    * these only: empty triggers cost ~nothing and would flatter the median.
+  /** The productive micro-batches (`numInputRows > 0`) of one query, as
+    * the engine reported them. Latency quantiles are over these only:
+    * empty triggers cost ~nothing and would flatter the median.
     */
-  private final case class Batches(samples: Seq[(Long, Long)]) {
+  private final case class Batches(samples: Seq[Telemetry.Progress]) {
     def count: Int = samples.length
-    def rows: Long = samples.map(_._1).sum
-    private def lat = samples.map(_._2)
+    def rows: Long = samples.map(_.numInputRows).sum
+    private def lat = samples.map(_.durationMs("triggerExecution"))
     /** -1 when no batch was productive (the honest zero envelope) */
     def medianMs: Long = if (lat.isEmpty) -1 else median(lat)
     def maxMs: Long = if (lat.isEmpty) -1 else lat.max
+    /** the median of each `durationMs` phase over the batches that
+      * report it, keys sorted
+      */
+    def phaseMs: Seq[(String, Long)] =
+      samples.flatMap(_.durationMs.keys).distinct.sorted.map(k =>
+        k -> median(samples.flatMap(_.durationMs.get(k))))
   }
 
   private def docEnvelope(kind: String, docs: Long, elapsedSec: Double,
       b: Batches, outRows: Long): DocEnvelope =
     DocEnvelope(kind, docs, elapsedSec, docs / elapsedSec * 60, b.count,
-      b.medianMs, b.maxMs, outRows)
+      b.medianMs, b.maxMs, outRows, b.phaseMs)
 
   /** An external producer run beside the queries: `step(n)` for
     * n = 0, 1, … with `everyMs` between steps.
@@ -86,10 +97,9 @@ object SteadyState {
   private final case class Feed(everyMs: Long, step: Long => Unit)
 
   /** The one measurement harness every section runs through:
-    *  1. registers ONE listener recording each query's productive
-    *     progress by query id — before any start, so the first
-    *     micro-batch can't slip past, and accumulated rather than read
-    *     back from the query's progress ring buffer, which keeps only
+    *  1. opens a [[Telemetry.window]], so every progress report of the
+    *     queries started below is collected — accumulated rather than
+    *     read back from a query's progress ring buffer, which keeps only
     *     the last 100 entries and would silently undercount long runs;
     *  2. runs `starts` in order — the LAST query gates the wait;
     *  3. runs `feed`, if any, on one producer thread;
@@ -98,27 +108,14 @@ object SteadyState {
     *  5. captures elapsed BEFORE stop, so shutdown cost never dilutes
     *     msg/min;
     *  6. in one `finally` — a start that throws included — stops the
-    *     feed, every query that started and the listener, then runs
-    *     `cleanup`.
+    *     feed and every query that started, then runs `cleanup`; the
+    *     window then detaches its collector.
     * Returns elapsed seconds and each started query's batches, in
     * `starts` order.
     */
   private def harness(spark: SparkSession, minBatches: Int, deadlineSec: Int,
       starts: Seq[() => StreamingQuery], feed: Option[Feed] = None,
       cleanup: () => Unit = () => ()): (Double, Seq[Batches]) = {
-    val productive =
-      new ConcurrentHashMap[UUID, ConcurrentLinkedQueue[(Long, Long)]]()
-    def of(id: UUID) = productive.computeIfAbsent(id,
-      _ => new ConcurrentLinkedQueue[(Long, Long)]())
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.numInputRows > 0)
-          of(e.progress.id).add((e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toLong))
-    }
-    val queries = ArrayBuffer.empty[StreamingQuery]
     @volatile var feeding = true
     val producer = feed.map(f => new Thread(() => {
       var n = 0L
@@ -128,25 +125,26 @@ object SteadyState {
         Thread.sleep(f.everyMs)
       }
     }, "graft-envelope-feed"))
-    var elapsedSec = 0.0
-    spark.streams.addListener(listener)
-    try {
-      starts.foreach(start => queries += start())
-      producer.foreach(_.start())
-      val gate = of(queries.last.id)
-      val t0 = System.nanoTime()
-      val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
-      while (gate.size < minBatches && System.nanoTime() < deadline)
-        Thread.sleep(200)
-      elapsedSec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      feeding = false
-      producer.foreach(_.join(10000))
-      queries.foreach(_.stop())
-      spark.streams.removeListener(listener)
-      cleanup()
+    val ((elapsedSec, ids), rec) = Telemetry.window(spark) { t =>
+      val queries = ArrayBuffer.empty[StreamingQuery]
+      try {
+        starts.foreach(start => queries += start())
+        producer.foreach(_.start())
+        val gate = queries.last.id
+        val t0 = System.nanoTime()
+        val deadline = t0 + deadlineSec * 1000L * 1000 * 1000
+        while (t.records.productive(gate).size < minBatches &&
+          System.nanoTime() < deadline)
+          Thread.sleep(200)
+        ((System.nanoTime() - t0) / 1e9, queries.map(_.id).toSeq)
+      } finally {
+        feeding = false
+        producer.foreach(_.join(10000))
+        queries.foreach(_.stop())
+        cleanup()
+      }
     }
-    (elapsedSec, queries.map(q => Batches(of(q.id).asScala.toSeq)).toSeq)
+    (elapsedSec, ids.map(id => Batches(rec.productive(id))))
   }
 
   /** An append writer named after the section, on a fresh checkpoint,
@@ -638,6 +636,7 @@ object SteadyState {
       aggBatches = agg.count, aggMedianMs = agg.medianMs,
       aggMaxMs = agg.maxMs,
       aggWindowsFlushed = parquetRows(spark, s"$out/agg"),
-      rowsPerBatch = rowsPerBatch, advanceMsPerBatch = advanceMsPerBatch)
+      rowsPerBatch = rowsPerBatch, advanceMsPerBatch = advanceMsPerBatch,
+      rawPhaseMs = raw.phaseMs, aggPhaseMs = agg.phaseMs)
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import scala.collection.mutable
+import graft.obs.Telemetry
 
 /** Per-query job-level profiler (measurement tooling, guide §1): runs the
   * named registered queries once (after one warmup execution) and prints,
@@ -13,46 +12,11 @@ import scala.collection.mutable
   * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like graft.Bench.
   */
 object Profile {
-  private final class JobLog extends SparkListener {
-    final case class Job(id: Int, desc: String, var started: Long = 0L,
-        var ended: Long = 0L, var tasks: Int = 0,
-        var shufRead: Long = 0L, var shufWrite: Long = 0L,
-        var inputBytes: Long = 0L, var stages: Int = 0)
-    val jobs = mutable.LinkedHashMap[Int, Job]()
-    private val stageToJob = mutable.HashMap[Int, Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("")
-      val j = Job(e.jobId, desc, started = e.time)
-      j.stages = e.stageIds.size
-      e.stageIds.foreach(s => stageToJob(s) = e.jobId)
-      jobs(e.jobId) = j
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      jobs.get(e.jobId).foreach(_.ended = e.time)
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      for (jid <- stageToJob.get(e.stageId); j <- jobs.get(jid)) {
-        j.tasks += 1
-        val m = e.taskMetrics
-        if (m != null) {
-          j.shufRead += m.shuffleReadMetrics.totalBytesRead
-          j.shufWrite += m.shuffleWriteMetrics.bytesWritten
-          j.inputBytes += m.inputMetrics.bytesRead
-        }
-      }
-    }
-    def reset(): Unit = synchronized { jobs.clear(); stageToJob.clear() }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
     val names =
       if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     def run(name: String): Unit =
@@ -60,19 +24,17 @@ object Profile {
         .write.format("noop").mode("overwrite").save()
     names.foreach { n =>
       run(n) // warmup (JIT, codegen, footer cache) — same as Bench
-      Thread.sleep(300); log.reset(); Thread.sleep(100)
-      val t0 = System.nanoTime()
-      run(n)
-      val wallMs = (System.nanoTime() - t0) / 1e6
-      Thread.sleep(500) // drain listener
+      val (wallMs, rec) = Telemetry.window(spark) { _ =>
+        val t0 = System.nanoTime()
+        run(n)
+        (System.nanoTime() - t0) / 1e6
+      }
       println(f"\n===== $n  wall=${wallMs}%.0f ms =====")
-      val rows = log.synchronized { log.jobs.values.toSeq }
-      val jobsMs = rows.map(j => (j.ended - j.started).max(0L)).sum
-      println(f"  jobs=${rows.size} sum(job ms)=$jobsMs  gap(driver) ms=${wallMs - jobsMs}%.0f")
-      rows.foreach { j =>
-        val ms = (j.ended - j.started).max(0L)
-        println(f"  job ${j.id}%4d ${ms}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d " +
-          f"in=${j.inputBytes / 1024}%7d KiB  sR=${j.shufRead / 1024}%6d KiB sW=${j.shufWrite / 1024}%6d KiB  ${j.desc.take(60)}")
+      val jobsMs = rec.jobs.map(_.ms).sum
+      println(f"  jobs=${rec.jobs.size} sum(job ms)=$jobsMs  gap(driver) ms=${wallMs - jobsMs}%.0f")
+      rec.jobs.foreach { j =>
+        println(f"  job ${j.id}%4d ${j.ms}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d " +
+          f"in=${j.inputBytes / 1024}%7d KiB  sR=${j.shuffleRead / 1024}%6d KiB sW=${j.shuffleWrite / 1024}%6d KiB  ${j.desc.take(60)}")
       }
     }
     spark.stop()

@@ -2,7 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
@@ -729,15 +731,29 @@ class OccTableSpec extends SparkSpec {
     val big = cdcBase(dir)
     val snap = OccTable.snapshot(spark, dir)
     val rows = cdcRows(dir)
-    // the init frame's own schema: a source relaxing nullability would
-    // commit a metadata-only schema version, which is not this case
     val empty = big.filter(lit(false)).withColumn("del", lit(false))
-    val r = OccTable.merge(spark, dir, empty, Seq("id"),
-      deleteCol = Some("del"))
-    assert(r.version === snap.version && r.candidateFiles === 0)
-    val after = OccTable.snapshot(spark, dir)
-    assert(after.version === snap.version && after.files === snap.files)
-    assert(cdcRows(dir) === rows)
+    val nullable = spark.createDataFrame(java.util.List.of[Row](),
+      StructType(empty.schema.map(_.copy(nullable = true))))
+    Seq(empty, nullable).foreach { src =>
+      val r = OccTable.merge(spark, dir, src, Seq("id"),
+        deleteCol = Some("del"))
+      assert(r.version === snap.version && r.candidateFiles === 0)
+      val after = OccTable.snapshot(spark, dir)
+      assert(after.version === snap.version && after.files === snap.files)
+      assert(after.schemaJson === snap.schemaJson)
+      assert(cdcRows(dir) === rows)
+    }
+  }
+
+  test("merge inserts a source whose every key is NULL") {
+    val dir = freshDir()
+    OccTable.init(Seq((Option(1L), 1L)).toDF("id", "v"), dir)
+    val r = OccTable.merge(spark, dir,
+      Seq((Option.empty[Long], 2L)).toDF("id", "v"), Seq("id"))
+    assert(r.version === 1L)
+    assert(OccTable.read(spark, dir)().select("id", "v")
+      .as[(Option[Long], Long)].collect().toSet ===
+      Set((Some(1L), 1L), (None, 2L)))
   }
 
   test("merge: tombstoning every row of a file removes it, no resurrection; tombstoning the rest reads empty with its schema") {

@@ -4,12 +4,16 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{FloatType, IntegerType}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{FloatType, IntegerType, LongType,
+  StructField, StructType}
 
 import graft.SparkSpec
 import graft.model.SensorReading
+import graft.obs.Telemetry
 import graft.ops.WindowedAgg
 
 /** Streaming-semantics tests (SURVEY §5.2 layer 3): MemoryStream replay of
@@ -460,27 +464,32 @@ class StreamingPipelineSpec extends SparkSpec {
     // streaming: two micro-batches with known nulls / out-of-domain rows
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Option[Double])]
-    val listener = new Observed.QualityListener
-    spark.streams.addListener(listener)
-    val q = Observed.withQuality(
-        mem.toDF().toDF("id", "v"), "v", lo = 0.0, hi = 100.0)
-      .writeStream.format("noop").outputMode("append").start()
+    var q: StreamingQuery = null
     try {
-      mem.addData((1L, Some(5.0)), (2L, None), (3L, Some(500.0)))
-      q.processAllAvailable()
-      mem.addData((4L, Some(50.0)))
-      q.processAllAvailable()
-      // listener events are async; the observation itself is per-batch
-      val deadline = System.currentTimeMillis() + 20000
-      while (listener.batches.size < 2 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
-      val Seq(b1, b2) = listener.batches.take(2)
-      assert(b1 === Map("n_rows" -> 3L, "n_null" -> 1L, "n_out_of_range" -> 1L))
-      assert(b2 === Map("n_rows" -> 1L, "n_null" -> 0L, "n_out_of_range" -> 0L))
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-    }
+      // the window's closing drain, not a poll: every progress report of
+      // a batch is posted before processAllAvailable returns
+      val (_, rec) = Telemetry.window(spark) { _ =>
+        q = Observed.withQuality(
+            mem.toDF().toDF("id", "v"), "v", lo = 0.0, hi = 100.0)
+          .writeStream.format("noop").outputMode("append").start()
+        mem.addData((1L, Some(5.0)), (2L, None), (3L, Some(500.0)))
+        q.processAllAvailable()
+        mem.addData((4L, Some(50.0)))
+        q.processAllAvailable()
+      }
+      assert(rec.productive(q.id).flatMap(Observed.quality) === Seq(
+        Map("n_rows" -> 3L, "n_null" -> 1L, "n_out_of_range" -> 1L),
+        Map("n_rows" -> 1L, "n_null" -> 0L, "n_out_of_range" -> 0L)))
+    } finally if (q != null) q.stop()
+
+    // a batch that only advances the watermark can publish count=0 with
+    // null sums: those read as 0
+    val watermarkOnly = new GenericRowWithSchema(Array[Any](0L, null, null),
+      StructType(Seq("n_rows", "n_null", "n_out_of_range")
+        .map(StructField(_, LongType))))
+    assert(Observed.quality(Telemetry.Progress(java.util.UUID.randomUUID(),
+      0L, Map.empty, Map(Observed.MetricName -> watermarkOnly))) ===
+      Some(Map("n_rows" -> 0L, "n_null" -> 0L, "n_out_of_range" -> 0L)))
 
     // batch: same observation surfaces on the QueryExecution
     val df = Observed.withQuality(
