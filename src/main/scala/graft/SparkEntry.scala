@@ -773,10 +773,10 @@ object SparkEntry {
     * cleared before the rebuild (init refuses a live log). Returns the
     * table path.
     */
-  private def occLayout(s: SparkSession, prefix: String, cacheKey: String,
+  private def occLayout(prefix: String, cacheKey: String,
       statsColumns: Seq[String])(frame: => DataFrame): String = {
     val root = Layout.ensureLayoutDir(prefix, cacheKey) { p =>
-      deleteTree(s, p)
+      Scratch.delete(p)
       OccTable.init(frame, s"$p/t", statsColumns = statsColumns)
       new java.io.File(p, "_SUCCESS").createNewFile()
     }
@@ -790,7 +790,7 @@ object SparkEntry {
     */
   private[graft] def fileStatsLayout(s: SparkSession, dir: String): String = {
     val src = new java.io.File(s"$dir/events.parquet")
-    occLayout(s, "fileskip",
+    occLayout("fileskip",
       s"$dir:${src.length}:${src.lastModified}:occ32:ts:us1", Seq("ts"))(
       Tables.events(s, dir)
         .repartitionByRange(32, col("ts")).sortWithinPartitions("ts"))
@@ -929,36 +929,6 @@ object SparkEntry {
         .withColumn("dim_tag", concat(lit("u"), col("user_id")))
         .write.mode("overwrite").parquet(p)
     }
-  }
-
-  /** Deterministic per-(user, source-dir) scratch path — truncated by
-    * the query's own full-overwrite init, so repeated runs rebuild in
-    * place instead of leaking a state copy per invocation.
-    */
-  private def scratchDir(prefix: String, dir: String): String = {
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_${prefix}_$user/$key").toString
-  }
-
-  /** Recursively delete `path`, if present. */
-  private def deleteTree(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
-  /** [[scratchDir]] of (`prefix`, `key`), deleted on entry — the fresh
-    * per-run root an OCC query builds its tables under (init refuses a
-    * live log).
-    */
-  private def freshScratch(s: SparkSession, prefix: String,
-      key: String): String = {
-    val root = scratchDir(prefix, key)
-    deleteTree(s, root)
-    root
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2793,7 +2763,7 @@ object SparkEntry {
     //      idempotent by rebuilding ----
     "q_agg_incremental" -> ((s, dir) => {
       // rebuild-per-run keeps the query idempotent (increments add)
-      val path = scratchDir("incagg", dir)
+      val path = Scratch.path("incagg", dir)
       val ev = Tables.events(s, dir)
       Rollups.initDailyAgg(ev.filter(col("event_id") % 2 === 0),
         "ts", "event_type", "value", path)
@@ -2808,7 +2778,7 @@ object SparkEntry {
     //      day) approximate medians without history rescans; the oracle
     //      replays the identical binning + interpolation ----
     "q_hist_quantile" -> ((s, dir) => {
-      val path = scratchDir("inchist", dir)
+      val path = Scratch.path("inchist", dir)
       val ev = Tables.events(s, dir)
       Rollups.initDailyHist(ev.filter(col("event_id") % 2 === 0),
         "ts", "event_type", "value", lo = 0.0, hi = 500.0, bins = 50, path)
@@ -3063,10 +3033,10 @@ object SparkEntry {
       val src = new java.io.File(s"$dir/events.parquet")
       val base = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val snap = occLayout(s, "upsnap",
+      val snap = occLayout("upsnap",
         s"$dir:${src.length}:${src.lastModified}:occ16:us1",
         Seq("event_id"))(base.repartitionByRange(16, col("event_id")))
-      val t = freshScratch(s, "occ_upsert", s"$dir|upsert") + "/t"
+      val t = Scratch.fresh("occ_upsert", s"$dir|upsert") + "/t"
       OccTable.clone(s, snap, t)
       val updates = base.filter(col("event_id") % 10 === 0)
         .withColumn("ts", col("ts") + expr("INTERVAL 60 DAYS"))
@@ -3088,7 +3058,7 @@ object SparkEntry {
     "q_occ_table" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val root = freshScratch(s, "occ_q", dir)
+      val root = Scratch.fresh("occ_q", dir)
       val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 3 === 0), t)
       OccTable.append(base.filter(col("event_id") % 3 === 1), t)
@@ -3112,7 +3082,7 @@ object SparkEntry {
     "q_occ_skip" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_skip", s"$dir|skip")
+      val root = Scratch.fresh("occ_skip", s"$dir|skip")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3143,7 +3113,7 @@ object SparkEntry {
     "q_occ_dsv2" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_dsv2", s"$dir|dsv2")
+      val root = Scratch.fresh("occ_dsv2", s"$dir|dsv2")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3179,7 +3149,7 @@ object SparkEntry {
     "q_occ_dsv2_mapped" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_dsv2map", s"$dir|dsv2map")
+      val root = Scratch.fresh("occ_dsv2map", s"$dir|dsv2map")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3219,7 +3189,7 @@ object SparkEntry {
     "q_occ_dsv2_clone" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_dsv2cl", s"$dir|dsv2clone")
+      val root = Scratch.fresh("occ_dsv2cl", s"$dir|dsv2clone")
       val t = s"$root/t"
       val c = s"$root/fork"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
@@ -3253,7 +3223,7 @@ object SparkEntry {
     "q_occ_dsv2_dv" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val root = freshScratch(s, "occ_dsv2dv", s"$dir|dsv2dv")
+      val root = Scratch.fresh("occ_dsv2dv", s"$dir|dsv2dv")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3280,7 +3250,7 @@ object SparkEntry {
     //      flat events table ----
     "q_occ_widen" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("event_id")
-      val root = freshScratch(s, "occ_widen", s"$dir|widen")
+      val root = Scratch.fresh("occ_widen", s"$dir|widen")
       val t = s"$root/t"
       OccTable.init(ev.filter(col("event_id") % 2 === 0)
         .withColumn("metric", (col("event_id") % 1000).cast("int"))
@@ -3302,7 +3272,7 @@ object SparkEntry {
     "q_occ_partition_prune" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_pv", s"$dir|pvprune")
+      val root = Scratch.fresh("occ_pv", s"$dir|pvprune")
       val t = s"$root/t"
       // two partitioned commits so pruning spans init AND append adds
       OccTable.init(ev.filter(col("event_id") % 2 === 0), t,
@@ -3325,7 +3295,7 @@ object SparkEntry {
     "q_occ_bloom_skip" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_bloom", s"$dir|bloomskip")
+      val root = Scratch.fresh("occ_bloom", s"$dir|bloomskip")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3358,7 +3328,7 @@ object SparkEntry {
     "q_occ_optimize" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_opt", s"$dir|optimize")
+      val root = Scratch.fresh("occ_opt", s"$dir|optimize")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3390,7 +3360,7 @@ object SparkEntry {
     "q_occ_merge" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val root = freshScratch(s, "occ_merge", s"$dir|merge")
+      val root = Scratch.fresh("occ_merge", s"$dir|merge")
       val t = s"$root/t"
       val maxId = ev.agg(max("event_id")).head.getLong(0)
       val qId = maxId / 4
@@ -3422,7 +3392,7 @@ object SparkEntry {
     "q_occ_merge_backfill" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val root = freshScratch(s, "occ_mergebf", s"$dir|mergebf")
+      val root = Scratch.fresh("occ_mergebf", s"$dir|mergebf")
       val t = s"$root/t"
       val maxId = ev.agg(max("event_id")).head.getLong(0)
       val qId = maxId / 4
@@ -3454,7 +3424,7 @@ object SparkEntry {
     "q_occ_pruned_composed" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val root = freshScratch(s, "occ_prc", s"$dir|prunedcomp")
+      val root = Scratch.fresh("occ_prc", s"$dir|prunedcomp")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3492,7 +3462,7 @@ object SparkEntry {
     "q_occ_rename" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val root = freshScratch(s, "occ_cm", s"$dir|colmap")
+      val root = Scratch.fresh("occ_cm", s"$dir|colmap")
       val t = s"$root/t"
       OccTable.init(ev.repartitionByRange(4, col("event_id")), t,
         statsColumns = Seq("event_id", "value"))
@@ -3517,7 +3487,7 @@ object SparkEntry {
     "q_occ_generated" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "event_type", "value")
-      val root = freshScratch(s, "occ_gen", s"$dir|gencol")
+      val root = Scratch.fresh("occ_gen", s"$dir|gencol")
       val t = s"$root/t"
       val rule = "unix_micros(ts) div 86400000000"
       OccTable.init(ev.filter(col("event_id") % 2 === 0)
@@ -3540,7 +3510,7 @@ object SparkEntry {
     //      makes the file counts deterministic) ----
     "q_occ_vacuum_audit" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("event_id", "value")
-      val root = freshScratch(s, "occ_vac", s"$dir|vacaudit")
+      val root = Scratch.fresh("occ_vac", s"$dir|vacaudit")
       val t = s"$root/t"
       OccTable.init(ev.filter(col("event_id") % 2 === 0).coalesce(1), t)
       OccTable.append(ev.filter(col("event_id") % 2 === 1).coalesce(1), t)
@@ -3573,7 +3543,7 @@ object SparkEntry {
     "q_occ_delete_dv" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val root = freshScratch(s, "occ_dv", s"$dir|deletedv")
+      val root = Scratch.fresh("occ_dv", s"$dir|deletedv")
       val t = s"$root/t"
       val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head
@@ -3602,7 +3572,7 @@ object SparkEntry {
     "q_occ_detail" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val root = freshScratch(s, "occ_detail", s"$dir|detail")
+      val root = Scratch.fresh("occ_detail", s"$dir|detail")
       val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0).coalesce(1),
         t, statsColumns = Seq("event_id"))                           // v0
@@ -3635,7 +3605,7 @@ object SparkEntry {
     "q_occ_clone" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val root = freshScratch(s, "occ_clone", s"$dir|clone")
+      val root = Scratch.fresh("occ_clone", s"$dir|clone")
       val (src, dst) = (s"$root/src", s"$root/dst")
       OccTable.init(base.filter(col("event_id") % 2 === 0), src)
       OccTable.clone(s, src, dst)
@@ -3653,7 +3623,7 @@ object SparkEntry {
     "q_occ_history" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val root = freshScratch(s, "occ_hist", s"$dir|history")
+      val root = Scratch.fresh("occ_hist", s"$dir|history")
       val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0)
         .coalesce(1), t)                                           // v0
@@ -3675,7 +3645,7 @@ object SparkEntry {
     "q_occ_delete" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val root = freshScratch(s, "occ_del", s"$dir|delete")
+      val root = Scratch.fresh("occ_del", s"$dir|delete")
       val t = s"$root/t"
       val maxId = ev.agg(max("event_id")).head.getLong(0)
       val qId = maxId / 4
@@ -3712,7 +3682,7 @@ object SparkEntry {
     "q_occ_changes" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val root = freshScratch(s, "occ_changes", s"$dir|changes")
+      val root = Scratch.fresh("occ_changes", s"$dir|changes")
       val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0), t)       // v0
       OccTable.append(base.filter(col("event_id") % 2 === 1), t)     // v1
@@ -3739,7 +3709,7 @@ object SparkEntry {
     "q_occ_restore" -> ((s, dir) => {
       val base = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val root = freshScratch(s, "occ_restore", s"$dir|restore")
+      val root = Scratch.fresh("occ_restore", s"$dir|restore")
       val t = s"$root/t"
       OccTable.init(base.filter(col("event_id") % 2 === 0), t)       // v0
       OccTable.append(base.filter(col("event_id") % 2 === 1), t)     // v1
@@ -3779,7 +3749,7 @@ object SparkEntry {
     "q_occ_sql" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("event_id", "event_type", "value")
-      val root = freshScratch(s, "occ_sql", s"$dir|sqlddl")
+      val root = Scratch.fresh("occ_sql", s"$dir|sqlddl")
       val t = s"$root/t"
       OccTable.init(ev.filter(col("event_id") % 2 === 0).coalesce(2), t,
         statsColumns = Seq("event_id"))

@@ -714,30 +714,19 @@ object Similarity {
       pqBooks: => Seq[Seq[(Int, Seq[Double])]] = Seq.empty,
       withPq: Boolean = false, assign: Int = 1,
       pqResidual: Boolean = false): String = synchronized {
-    // collision-free dir name: md5 of the RAW key (a lossy char-class
-    // sanitization could collide two distinct keys onto one layout and
-    // silently probe the wrong index). The "k" prefix keeps the name from
-    // starting with "_" or "." — Spark's hidden-path filter warns on (and
-    // on some code paths skips) such inputs. Note the key CONTENT is the
-    // caller's contract: fold in whatever invalidates the layout (file
-    // length + mtime at minimum; mtime has second granularity on some
-    // filesystems, so include a content hash if the corpus can be
-    // regenerated in-place sub-second). Scoped per user: tmpdir is
-    // world-shared on multi-user hosts.
-    // "pqv4|" versions the LAYOUT FORMAT itself (v2 added sq8_code +
+    // the dir is Scratch.path's: md5 of the RAW key, scoped per user.
+    // The key CONTENT is the caller's contract: fold in whatever
+    // invalidates the layout (file length + mtime at minimum; mtime has
+    // second granularity on some filesystems, so include a content hash
+    // if the corpus can be regenerated in-place sub-second).
+    // "pqv5:" versions the LAYOUT FORMAT itself (v2 added sq8_code +
     // _sq8; v3 the optional pq_code + _pq; v4 the _meta assign sidecar):
     // a cache dir written by an older writer must miss, not be probed
     // with a missing column. withPq and assign are IN the key — a pq and
     // a non-pq layout, or two assignment factors, of one corpus are
     // different formats and must never share a dir.
-    val key = "k" + java.security.MessageDigest.getInstance("MD5")
-      .digest((s"pqv5:$withPq:a$assign:r$pqResidual|" + cacheKey)
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_ivf_layout_$user/$key").toString
+    val path = graft.Scratch.path("ivf_layout",
+      s"pqv5:$withPq:a$assign:r$pqResidual|" + cacheKey)
     // the quantizer is written AFTER the data, so its own _SUCCESS is the
     // true commit marker — checking only the directory would accept a
     // layout whose quantizer write crashed mid-flight and poison every

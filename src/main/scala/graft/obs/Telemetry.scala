@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusShim
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
 /** The one telemetry collector: a `SparkListener` recording, for the span
@@ -23,15 +24,28 @@ final class Telemetry private () extends SparkListener {
   private val jobs = mutable.LinkedHashMap[Int, Job]()
   private val stageToJob = mutable.HashMap[Int, Int]()
   private val progress = mutable.ArrayBuffer[Progress]()
+  private val executions = mutable.HashMap[Long, String]()
 
   /** What has been recorded so far; final once the window has closed. */
   def records: Records = synchronized {
     Records(jobs.values.toSeq, progress.toSeq)
   }
 
+  /** A job is labelled by its description when a caller set one
+    * (streaming sets it per micro-batch), else by the description of the
+    * SQL execution that ran it — the call site of the action, `count at
+    * Foo.scala:NN`, as the Spark UI's SQL tab shows it — else by its last
+    * stage's name. The SQL execution comes before the stage name because
+    * adaptive execution submits shuffle stages from a pool thread, whose
+    * stack names no user frame.
+    */
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    val desc = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description")))
+    def prop(k: String) =
+      Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+    val desc = prop("spark.job.description").filter(_.nonEmpty)
+      .orElse(prop("spark.sql.execution.id")
+        .flatMap(_.toLongOption).flatMap(executions.get))
+      .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
       .getOrElse("")
     e.stageIds.foreach(stageToJob(_) = e.jobId)
     jobs(e.jobId) = Job(e.jobId, desc, e.time, stages = e.stageIds.size)
@@ -55,6 +69,9 @@ final class Telemetry private () extends SparkListener {
   }
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart => synchronized {
+      executions(x.executionId) = x.description
+    }
     case q: QueryProgressEvent => synchronized {
       val p = q.progress
       progress += Progress(p.id, p.numInputRows,

@@ -446,7 +446,7 @@ object Temporal {
     * unmatched left row emits null-padded only when watermark-driven
     * state EVICTION reaches it, which Spark runs one batch behind — so
     * a bounded replay must CLOSE the stream or tail-state never
-    * flushes: `Pipeline.replayStreamSplit`'s two-sided flush sentinels
+    * flushes: `Replay.eventsSplit`'s two-sided flush sentinels
     * are that close, and the `q_stream_stream_join_outer` oracle is
     * then the plain batch left join, with no finalized-prefix clause).
     */

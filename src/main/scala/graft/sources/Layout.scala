@@ -428,20 +428,14 @@ object Layout {
   /** Build-once cached layout directory: returns a stable per-user tmp
     * dir derived from `cacheKey`, invoking `write(path)` only when the
     * dir's `_SUCCESS` commit marker is missing (parquet writes stamp it).
-    * Same contract as the IVF layout cache (`ext/Similarity.scala`):
-    * md5 of the RAW key (lossy sanitization could collide two keys onto
-    * one dir), callers fold source length+mtime and every layout
-    * parameter into the key so a regenerated source or changed config
-    * can never be read through a stale layout.
+    * The dir is [[graft.Scratch.path]]'s, like the IVF layout cache
+    * (`ext/Similarity.scala`): callers fold source length+mtime and every
+    * layout parameter into the key so a regenerated source or changed
+    * config can never be read through a stale layout.
     */
   def ensureLayoutDir(prefix: String, cacheKey: String)(
       write: String => Unit): String = synchronized {
-    val key = "k" + java.security.MessageDigest.getInstance("MD5")
-      .digest(cacheKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_${prefix}_$user/$key").toString
+    val path = graft.Scratch.path(prefix, cacheKey)
     if (!new java.io.File(path, "_SUCCESS").exists()) write(path)
     path
   }

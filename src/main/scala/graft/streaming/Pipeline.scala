@@ -1,10 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+
+import graft.Scratch
 import graft.ops.WindowedAgg
+import graft.sources.{OccTable, Tables}
 
 /** The north-star streaming path (SURVEY.md §2.8, §3.1): event stream →
   * watermarked 5-minute tumbling aggregate → dual sink (raw append + agg
@@ -60,7 +67,7 @@ object Pipeline {
     * fence's empty manifest. Shared by [[startAggSink]] and the replay
     * gates so they can never drift from the sink shape they verify.
     */
-  private def parquetAppendSink(dir: String): (DataFrame, Long) => Unit =
+  private[streaming] def parquetAppendSink(dir: String): (DataFrame, Long) => Unit =
     TxnSink.exactlyOnceParquetSink(dir)
 
   /** Aggregate sink: append-mode windowed rollup to `$outDir/agg`,
@@ -90,20 +97,12 @@ object Pipeline {
     * state is bounded by the window count of the replayed range.
     */
   def replayWindowedAgg(spark: SparkSession, dir: String): DataFrame = {
-    val (stream, streamDir) = replayStream(spark, dir)
     val sinkName = "replay_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    withReplayParallelism(spark) {
-      val q = WindowedAgg.tumbling(stream, "ts", "event_type", "value")
-        .writeStream
-        .format("memory").queryName(sinkName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(streamDir) // engine-managed temp ckpt self-cleans
-      }
+    Replay(spark, "agg", dir) { r =>
+      val stream = r.events(dir)
+      r.toEnd(WindowedAgg.tumbling(stream, "ts", "event_type", "value"),
+        outputMode = "complete")(_.format("memory").queryName(sinkName))
     }
     spark.table(sinkName)
   }
@@ -119,14 +118,21 @@ object Pipeline {
     * windows of a finite replay — this variant's contract is exactly the
     * FINALIZED prefix: windows whose end the final watermark
     * (max event time − `watermark`) has passed).
+    *
+    * A replay shorter than watermark + window finalizes nothing: empty
+    * batches commit no data files, so the gate returns the plan's empty
+    * batch form (the oracle's HAVING is empty too). The hopping and
+    * session twins below share this contract.
     */
   def replayWindowedAggIncremental(spark: SparkSession, dir: String,
-      watermark: String = "10 minutes"): DataFrame =
-    replayAppendIncremental(spark, dir, "agg", watermark)(
-      s => WindowedAgg.tumbling(s, "ts", "event_type", "value"))(
-      WindowedAgg.tumbling(
-        graft.sources.Tables.events(spark, dir).limit(0),
-        "ts", "event_type", "value"))
+      watermark: String = "10 minutes"): DataFrame = {
+    def plan(d: DataFrame) = WindowedAgg.tumbling(d, "ts", "event_type", "value")
+    val out = Replay(spark, "agg_inc", s"$dir|$watermark") { r =>
+      val stream = r.events(dir)
+      r.toParquet("agg")(plan(stream.withWatermark("ts", watermark)))
+    }
+    TxnSink.committedReadOr(spark, out)(plan(Tables.events(spark, dir).limit(0)))
+  }
 
   /** The HOPPING (overlapping-window) member of the incremental-replay
     * family: [[WindowedAgg.hopping]]'s width/slide windows through the
@@ -143,46 +149,14 @@ object Pipeline {
     */
   def replayHoppingIncremental(spark: SparkSession, dir: String,
       watermark: String = "10 minutes", width: String = "10 minutes",
-      slide: String = "5 minutes"): DataFrame =
-    replayAppendIncremental(spark, dir, "hop", watermark)(
-      s => WindowedAgg.hopping(s, "ts", "event_type", "value", width, slide))(
-      WindowedAgg.hopping(
-        graft.sources.Tables.events(spark, dir).limit(0),
-        "ts", "event_type", "value", width, slide))
-
-  /** Shared scaffolding of the append-mode finite replays: events file
-    * stream → caller's watermarked plan → append output + AvailableNow +
-    * [[parquetAppendSink]], state/checkpoint dropped after the replay.
-    * Returns the finalized-prefix rows via the sink's committed-manifest
-    * reader; `emptyResult` when the replay finalized nothing (shorter
-    * than watermark + window — empty batches commit no data files, and
-    * the oracle's HAVING is empty too).
-    */
-  private def replayAppendIncremental(spark: SparkSession, dir: String,
-      tag: String, watermark: String)(plan: DataFrame => DataFrame)(
-      emptyResult: => DataFrame): DataFrame = {
-    val (stream, streamDir) = replayStream(spark, dir)
-    val outDir = java.nio.file.Files
-      .createTempDirectory(s"graft_replay_${tag}_out").toString + s"/$tag"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory(s"graft_replay_${tag}_ckpt")
-    withReplayParallelism(spark) {
-      val q = plan(stream.withWatermark("ts", watermark))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        // the replay is done: drop the state-store checkpoint and source
-        // symlink dir (outDir must survive — the returned frame reads it)
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
-      }
+      slide: String = "5 minutes"): DataFrame = {
+    def plan(d: DataFrame) =
+      WindowedAgg.hopping(d, "ts", "event_type", "value", width, slide)
+    val out = Replay(spark, "hop_inc", s"$dir|$watermark|$width|$slide") { r =>
+      val stream = r.events(dir)
+      r.toParquet("hop")(plan(stream.withWatermark("ts", watermark)))
     }
-    TxnSink.committedReadOr(spark, outDir)(emptyResult)
+    TxnSink.committedReadOr(spark, out)(plan(Tables.events(spark, dir).limit(0)))
   }
 
   /** Streaming SESSIONIZATION — the one stateful shape the engine had
@@ -199,19 +173,21 @@ object Pipeline {
     * the batch form plus the finalized-prefix HAVING.
     */
   def replaySessionized(spark: SparkSession, dir: String,
-      gap: String = "30 minutes", watermark: String = "10 minutes"): DataFrame =
-    replayAppendIncremental(spark, dir, "sess", watermark)(
-      s => WindowedAgg.sessionized(s, "ts", "event_type", gap))(
-      WindowedAgg.sessionized(
-        graft.sources.Tables.events(spark, dir).limit(0),
-        "ts", "event_type", gap))
+      gap: String = "30 minutes", watermark: String = "10 minutes"): DataFrame = {
+    def plan(d: DataFrame) = WindowedAgg.sessionized(d, "ts", "event_type", gap)
+    val out = Replay(spark, "sess_inc", s"$dir|$gap|$watermark") { r =>
+      val stream = r.events(dir)
+      r.toParquet("sess")(plan(stream.withWatermark("ts", watermark)))
+    }
+    TxnSink.committedReadOr(spark, out)(plan(Tables.events(spark, dir).limit(0)))
+  }
 
   /** STREAM-STREAM interval-join gate: correlate each high-value alert
     * with the readings of the same `event_type` in the `window` after it
     * ([[graft.ops.Temporal.streamIntervalJoin]]), both sides LIVE
     * branches of one events stream — the self-join form Spark's
     * stream-stream join supports. The replay runs the events table as a
-    * TIME-SPLIT multi-file stream ([[replayStreamSplit]]): four
+    * TIME-SPLIT multi-file stream ([[Replay.eventsSplit]]): four
     * micro-batches in event-time order, so alerts genuinely wait in join
     * state across batches for readings that arrive later, and watermark
     * eviction runs mid-replay — the single-file replay would fold the
@@ -234,7 +210,7 @@ object Pipeline {
     * six-days-stale alert stayed unemitted). The replay therefore closes
     * the stream the way Flink's bounded sources do — a final
     * watermark past everything — via two far-future flush-sentinel
-    * batches ([[replayStreamSplit]]'s `flushSentinels`), after which
+    * batches ([[Replay.eventsSplit]]'s `flushSentinels`), after which
     * EVERY unresolved alert has emitted and the oracle is the plain
     * batch LEFT join, no finalized-prefix clause.
     */
@@ -257,28 +233,14 @@ object Pipeline {
       alerts(d), "alert_ts", watermark,
       readings(d), "r_ts", watermark,
       Seq("event_type"), windowTo = window, joinType = joinType)
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4,
-      flushSentinels = if (joinType == "leftOuter") 2 else 0)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_ssj_out").toString + "/ssj"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_ssj_ckpt")
-    withReplayParallelism(spark) {
-      val q = plan(stream)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
-      }
+    val out = Replay(spark, "ssj",
+        s"$dir|$threshold|$window|$watermark|$joinType") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4,
+        flushSentinels = if (joinType == "leftOuter") 2 else 0)
+      r.toParquet("ssj")(plan(stream))
     }
-    val raw = TxnSink.committedReadOr(spark, outDir)(
-      plan(graft.sources.Tables.events(spark, dir).limit(0)))
+    val raw = TxnSink.committedReadOr(spark, out)(
+      plan(Tables.events(spark, dir).limit(0)))
     // the flush sentinels wear negative ids; drop their own join rows
     if (joinType == "leftOuter") raw.filter(col("alert_id") >= 0) else raw
   }
@@ -299,46 +261,24 @@ object Pipeline {
     * watermark state).
     */
   def replayOccIngest(spark: SparkSession, dir: String): DataFrame = {
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    // deterministic per-(user, source) scratch, CLEARED on entry —
-    // OccTable.init refuses a live log (same pattern as the dedup replay)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_occ_ingest_$user", key)
-    deleteRecursively(outRoot)
-    val table = outRoot.toString + "/t"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_occ_ingest_ckpt")
     val cols = Seq("event_id", "event_type", "value")
-    graft.sources.OccTable.init(
-      graft.sources.Tables.events(spark, dir).select(cols.map(col): _*)
-        .limit(0), table)
-    withReplayParallelism(spark) {
-      val q = stream.select(cols.map(col): _*)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.sources.OccTable.appendStream(batch, table,
-            "occ_ingest", batchId)
+    val table = Replay(spark, "occ_ingest", dir) { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      val table = r.path("t")
+      OccTable.init(
+        Tables.events(spark, dir).select(cols.map(col): _*).limit(0), table)
+      r.toEnd(stream.select(cols.map(col): _*))(_.foreachBatch {
+        (batch: DataFrame, batchId: Long) =>
+          OccTable.appendStream(batch, table, "occ_ingest", batchId)
           // the racing maintenance job: compact everything committed so
           // far while slices are still arriving
           if (batchId == 2L)
-            graft.sources.OccTable.rewrite(spark, table, d => d.coalesce(1))
+            OccTable.rewrite(spark, table, d => d.coalesce(1))
           ()
-        }
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
-      }
+      })
+      table
     }
-    graft.sources.OccTable.read(spark, table)()
+    OccTable.read(spark, table)()
   }
 
   /** X145 — the COMPOSED lakehouse flow through the STREAMING ingest
@@ -356,48 +296,29 @@ object Pipeline {
     * verify in ONE oracled frame (closed-form oracle over events).
     */
   def replayOccComposed(spark: SparkSession, dir: String): DataFrame = {
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|composed".getBytes("UTF-8")).map("%02x".format(_))
-      .mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_occ_comp_$user", key)
-    deleteRecursively(outRoot)
-    val table = outRoot.toString + "/t"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_occ_comp_ckpt")
     val cols = Seq("event_id", "event_type", "value")
-    val O = graft.sources.OccTable
-    // the zero-row init still stages (empty) part files, so the
-    // declaration gate sees a non-empty table — carry the column in
-    // the v0 SCHEMA and the zero-row validation passes trivially
-    O.init(graft.sources.Tables.events(spark, dir)
-      .select(cols.map(col): _*).limit(0)
-      .withColumn("bucket", expr("cast(event_id % 4 as bigint)")), table)
-    O.renameColumn(spark, table, "value", "reading")
-    O.addGeneratedColumn(spark, table, "bucket",
-      "cast(event_id % 4 as bigint)")
-    withReplayParallelism(spark) {
-      val q = stream.select(cols.map(col): _*)
-        .withColumnRenamed("value", "reading")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val O = OccTable
+    val table = Replay(spark, "occ_comp", dir) { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      val table = r.path("t")
+      // the zero-row init still stages (empty) part files, so the
+      // declaration gate sees a non-empty table — carry the column in
+      // the v0 SCHEMA and the zero-row validation passes trivially
+      O.init(Tables.events(spark, dir)
+        .select(cols.map(col): _*).limit(0)
+        .withColumn("bucket", expr("cast(event_id % 4 as bigint)")), table)
+      O.renameColumn(spark, table, "value", "reading")
+      O.addGeneratedColumn(spark, table, "bucket",
+        "cast(event_id % 4 as bigint)")
+      r.toEnd(stream.select(cols.map(col): _*)
+          .withColumnRenamed("value", "reading"))(_.foreachBatch {
+        (batch: DataFrame, batchId: Long) =>
           O.appendStream(batch, table, "occ_comp", batchId,
             statsColumns = Seq("event_id"),
             partitionBy = Seq("bucket"))
           ()
-        }
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
-      }
+      })
+      table
     }
     val vIngested = O.snapshot(spark, table).version
     val src = O.read(spark, table)()
@@ -428,44 +349,32 @@ object Pipeline {
     * events selection — the oracle (`q_occ_stream_read`).
     */
   def replayOccTail(spark: SparkSession, dir: String): DataFrame = {
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_occ_tail_$user", key)
-    deleteRecursively(outRoot)
-    val src = outRoot.toString + "/src"
-    val dst = outRoot.toString + "/dst"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_occ_tail_ckpt")
     val cols = Seq("event_id", "event_type", "value")
-    val base = graft.sources.Tables.events(spark, dir)
-      .select(cols.map(col): _*)
+    val base = Tables.events(spark, dir).select(cols.map(col): _*)
     def slice(i: Int): DataFrame = base.filter(col("event_id") % 4 === i)
-    withReplayParallelism(spark) {
-      graft.sources.OccTable.init(slice(0), src)                   // v0
-      graft.sources.OccTable.init(base.limit(0), dst)
-      val q = graft.sources.OccStream.tailTo(spark, src, ckpt.toString,
-        graft.sources.OccTable.streamingSink(dst, "occ_tail"),
-        maxVersionsPerTrigger = 1, onRewrite = "skipRewrites")
-      try {
-        q.processAllAvailable()                                    // v0 delivered
-        graft.sources.OccTable.append(slice(1), src)               // v1
+    val dst = Replay(spark, "occ_tail", dir) { r =>
+      val (src, dst) = (r.path("src"), r.path("dst"))
+      r.live { ckpt =>
+        OccTable.init(slice(0), src)                                // v0
+        OccTable.init(base.limit(0), dst)
+        graft.sources.OccStream.tailTo(spark, src, ckpt,
+          OccTable.streamingSink(dst, "occ_tail"),
+          maxVersionsPerTrigger = 1, onRewrite = "skipRewrites")
+      } { q =>
+        q.processAllAvailable()                                     // v0 delivered
+        OccTable.append(slice(1), src)                              // v1
         q.processAllAvailable()
-        graft.sources.OccTable.append(slice(2), src)               // v2
+        OccTable.append(slice(2), src)                              // v2
         // the racing maintenance pass: compact everything committed so
         // far while the tail is mid-log — delivered content must not
         // duplicate, later appends must still arrive
-        graft.sources.OccTable.rewrite(spark, src, d => d.coalesce(1)) // v3
-        graft.sources.OccTable.append(slice(3), src)               // v4
+        OccTable.rewrite(spark, src, d => d.coalesce(1))            // v3
+        OccTable.append(slice(3), src)                              // v4
         q.processAllAvailable()
-      } finally {
-        q.stop()
-        deleteRecursively(ckpt)
       }
+      dst
     }
-    graft.sources.OccTable.read(spark, dst)()
+    OccTable.read(spark, dst)()
   }
 
   /** Streaming MERGE gate (`q_occ_merge_stream`, X129 — Delta's
@@ -479,53 +388,35 @@ object Pipeline {
     * latest-wins oracle VERBATIM: batch order cannot matter.
     */
   def replayOccMerge(spark: SparkSession, dir: String): DataFrame = {
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|mergestream".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_occ_mergestream_$user", key)
-    deleteRecursively(outRoot)
-    val table = outRoot.toString + "/t"
-    val cdcDir = outRoot.toString + "/cdc"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_occ_merge_ckpt")
-    val ev = graft.sources.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val maxId = ev.agg(max("event_id")).head.getLong(0)
-    val qId = maxId / 4
-    graft.sources.OccTable.init(
-      ev.repartitionByRange(8, col("event_id")), table,
-      statsColumns = Seq("event_id"))
-    val upd = ev
-      .filter(col("event_id") % 10 === 0 && col("event_id") <= qId)
-      .withColumn("ts", col("ts") + expr("INTERVAL 60 DAYS"))
-      .withColumn("value", -col("value"))
-      .withColumn("deleted", col("event_id") % 100 === 0)
-    val ins = ev
-      .filter(col("event_id") % 10 === 5 && col("event_id") <= qId)
-      .withColumn("event_id", col("event_id") + maxId)
-      .withColumn("deleted", lit(false))
-    val cdc = upd.unionByName(ins)
-    cdc.repartitionByRange(4, col("event_id")).write.parquet(cdcDir)
-    withReplayParallelism(spark) {
-      val stream = spark.readStream.schema(cdc.schema)
-        .option("maxFilesPerTrigger", 1).parquet(cdcDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(graft.sources.OccTable.mergeSink(table,
+    val table = Replay(spark, "occ_mergestream", dir) { r =>
+      val table = r.path("t")
+      val cdcDir = r.path("cdc")
+      val ev = Tables.events(spark, dir)
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      val maxId = ev.agg(max("event_id")).head.getLong(0)
+      val qId = maxId / 4
+      OccTable.init(
+        ev.repartitionByRange(8, col("event_id")), table,
+        statsColumns = Seq("event_id"))
+      val upd = ev
+        .filter(col("event_id") % 10 === 0 && col("event_id") <= qId)
+        .withColumn("ts", col("ts") + expr("INTERVAL 60 DAYS"))
+        .withColumn("value", -col("value"))
+        .withColumn("deleted", col("event_id") % 100 === 0)
+      val ins = ev
+        .filter(col("event_id") % 10 === 5 && col("event_id") <= qId)
+        .withColumn("event_id", col("event_id") + maxId)
+        .withColumn("deleted", lit(false))
+      val cdc = upd.unionByName(ins)
+      cdc.repartitionByRange(4, col("event_id")).write.parquet(cdcDir)
+      r.toEnd(spark.readStream.schema(cdc.schema)
+          .option("maxFilesPerTrigger", 1).parquet(cdcDir))(
+        _.foreachBatch(OccTable.mergeSink(table,
           "occ_merge_stream", Seq("event_id"),
-          deleteCol = Some("deleted"), statsColumns = Seq("event_id")))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckpt)
-      }
+          deleteCol = Some("deleted"), statsColumns = Seq("event_id"))))
+      table
     }
-    graft.sources.OccTable.read(spark, table)()
+    OccTable.read(spark, table)()
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), round(col("value"), 6).as("value"))
   }
@@ -539,40 +430,27 @@ object Pipeline {
     * which an append-only tail cannot represent at all.
     */
   def replayOccChanges(spark: SparkSession, dir: String): DataFrame = {
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|occchanges".getBytes("UTF-8")).map("%02x".format(_))
-      .mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_occ_changes_str_$user", key)
-    deleteRecursively(outRoot)
-    val t = outRoot.toString + "/t"
-    val outDir = outRoot.toString + "/changes"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_occ_changes_ckpt")
-    val base = graft.sources.Tables.events(spark, dir)
+    val base = Tables.events(spark, dir)
       .select("event_id", "event_type", "value")
-    withReplayParallelism(spark) {
-      graft.sources.OccTable.init(
-        base.filter(col("event_id") % 3 === 0), t)                  // v0
-      graft.sources.OccTable.append(
-        base.filter(col("event_id") % 3 === 1), t)                  // v1
-      graft.sources.OccTable.rewrite(spark, t, d => d.withColumn(
-        "value", when(col("event_id") % 10 === 0, -col("value"))
-          .otherwise(col("value"))))                                // v2
-      graft.sources.OccTable.append(
-        base.filter(col("event_id") % 3 === 2), t)                  // v3
-      val q = graft.sources.OccStream.changesTo(spark, t,
-        ckpt.toString, Seq("event_id"), Seq("event_type", "value"),
-        (changes, v) => parquetAppendSink(outDir)(changes, v),
-        maxVersionsPerTrigger = 1, trigger = Trigger.AvailableNow())
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckpt)
-      }
+    val out = Replay(spark, "occ_changes", dir) { r =>
+      val (t, out) = (r.path("t"), r.path("changes"))
+      r.live { ckpt =>
+        OccTable.init(
+          base.filter(col("event_id") % 3 === 0), t)                  // v0
+        OccTable.append(
+          base.filter(col("event_id") % 3 === 1), t)                  // v1
+        OccTable.rewrite(spark, t, d => d.withColumn(
+          "value", when(col("event_id") % 10 === 0, -col("value"))
+            .otherwise(col("value"))))                                // v2
+        OccTable.append(
+          base.filter(col("event_id") % 3 === 2), t)                  // v3
+        graft.sources.OccStream.changesTo(spark, t, ckpt, Seq("event_id"),
+          Seq("event_type", "value"), parquetAppendSink(out),
+          maxVersionsPerTrigger = 1, trigger = Replay.ToEnd)
+      }(_.awaitTermination())
+      out
     }
-    TxnSink.committedRead(spark, outDir)
+    TxnSink.committedRead(spark, out)
       .select(col("event_id"), col("to_version").as("version"),
         col("status"))
   }
@@ -586,39 +464,26 @@ object Pipeline {
     * emit nothing at all for it).
     */
   def replayOccChangesDv(spark: SparkSession, dir: String): DataFrame = {
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|occchangesdv".getBytes("UTF-8")).map("%02x".format(_))
-      .mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_occ_changes_dv_$user", key)
-    deleteRecursively(outRoot)
-    val t = outRoot.toString + "/t"
-    val outDir = outRoot.toString + "/changes"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_occ_changes_dv_ckpt")
-    val base = graft.sources.Tables.events(spark, dir)
+    val base = Tables.events(spark, dir)
       .select("event_id", "event_type", "value")
-    val q5 = base.agg(max("event_id")).head.getLong(0) / 5
-    withReplayParallelism(spark) {
-      graft.sources.OccTable.init(
-        base.filter(col("event_id") % 2 === 0), t,
-        statsColumns = Seq("event_id"))                             // v0
-      graft.sources.OccTable.deleteRangeDv(spark, t, "event_id",
-        0.0, q5.toDouble)                                           // v1
-      graft.sources.OccTable.append(
-        base.filter(col("event_id") % 2 === 1), t)                  // v2
-      val q = graft.sources.OccStream.changesTo(spark, t,
-        ckpt.toString, Seq("event_id"), Seq("event_type", "value"),
-        (changes, v) => parquetAppendSink(outDir)(changes, v),
-        maxVersionsPerTrigger = 1, trigger = Trigger.AvailableNow())
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckpt)
-      }
+    val out = Replay(spark, "occ_changes_dv", dir) { r =>
+      val (t, out) = (r.path("t"), r.path("changes"))
+      val q5 = base.agg(max("event_id")).head.getLong(0) / 5
+      r.live { ckpt =>
+        OccTable.init(
+          base.filter(col("event_id") % 2 === 0), t,
+          statsColumns = Seq("event_id"))                             // v0
+        OccTable.deleteRangeDv(spark, t, "event_id",
+          0.0, q5.toDouble)                                           // v1
+        OccTable.append(
+          base.filter(col("event_id") % 2 === 1), t)                  // v2
+        graft.sources.OccStream.changesTo(spark, t, ckpt, Seq("event_id"),
+          Seq("event_type", "value"), parquetAppendSink(out),
+          maxVersionsPerTrigger = 1, trigger = Replay.ToEnd)
+      }(_.awaitTermination())
+      out
     }
-    TxnSink.committedRead(spark, outDir)
+    TxnSink.committedRead(spark, out)
       .select(col("event_id"), col("to_version").as("version"),
         col("status"))
   }
@@ -645,20 +510,7 @@ object Pipeline {
     * curation stage scales with writer parallelism.
     */
   def replayLakehousePipeline(spark: SparkSession, dir: String): DataFrame = {
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|lakehouse".getBytes("UTF-8")).map("%02x".format(_))
-      .mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_lakehouse_$user", key)
-    deleteRecursively(outRoot)
-    val src = outRoot.toString + "/src"
-    val dst = outRoot.toString + "/dst"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_lakehouse_ckpt")
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select("doc_id", "text")
+    val docs = Tables.documents(spark, dir).select("doc_id", "text")
     // fp-hash routing: all copies of a normalized text co-shard
     val fpExpr = md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
     val sharded = docs.withColumn("__shard",
@@ -668,41 +520,31 @@ object Pipeline {
     def curateBatch(b: DataFrame): DataFrame =
       graft.ext.TextStats.curate(b, "doc_id", "text",
         minQuality = 0.5, lang = "en")
-    withReplayParallelism(spark) {
-      graft.sources.OccTable.init(slice(0), src)                    // v0
-      graft.sources.OccTable.init(curateBatch(docs.limit(0)), dst)
-      val q = graft.sources.OccStream.tailTo(spark, src, ckpt.toString,
-        (batch, ver) => graft.sources.OccTable
-          .streamingSink(dst, "lakehouse_curate")(curateBatch(batch), ver),
-        maxVersionsPerTrigger = 1, onRewrite = "skipRewrites")
-      try {
-        q.processAllAvailable()                                     // v0 curated
-        graft.sources.OccTable.append(slice(1), src)                // v1
+    val dst = Replay(spark, "lakehouse", dir) { r =>
+      val (src, dst) = (r.path("src"), r.path("dst"))
+      r.live { ckpt =>
+        OccTable.init(slice(0), src)                                  // v0
+        OccTable.init(curateBatch(docs.limit(0)), dst)
+        graft.sources.OccStream.tailTo(spark, src, ckpt,
+          (batch, ver) => OccTable
+            .streamingSink(dst, "lakehouse_curate")(curateBatch(batch), ver),
+          maxVersionsPerTrigger = 1, onRewrite = "skipRewrites")
+      } { q =>
+        q.processAllAvailable()                                       // v0 curated
+        OccTable.append(slice(1), src)                                // v1
         q.processAllAvailable()
-        graft.sources.OccTable.append(slice(2), src)                // v2
+        OccTable.append(slice(2), src)                                // v2
         // the racing maintenance pass mid-log: the tail must neither
         // duplicate compacted content nor miss the append after it
-        graft.sources.OccTable.rewrite(spark, src, d => d.coalesce(1)) // v3
-        graft.sources.OccTable.append(slice(3), src)                // v4
+        OccTable.rewrite(spark, src, d => d.coalesce(1))              // v3
+        OccTable.append(slice(3), src)                                // v4
         q.processAllAvailable()
-      } finally {
-        q.stop()
-        deleteRecursively(ckpt)
       }
+      dst
     }
-    graft.sources.OccTable.read(spark, dst)()
+    OccTable.read(spark, dst)()
   }
 
-  /** Events table as a TIME-SPLIT multi-file stream: `nFiles` range
-    * partitions of `ts` written as one parquet file each, mtimes forced
-    * ascending in path (= time) order, `maxFilesPerTrigger = 1` — so an
-    * AvailableNow replay runs one micro-batch per time slice, in order.
-    * FileStreamSource processes files by modification time; writing them
-    * in one job leaves near-tied mtimes, so the forced spacing is what
-    * GUARANTEES discovery order matches event-time order (an
-    * out-of-order slice whose span exceeds the watermark slack would be
-    * silently dropped as late — a flaky gate).
-    */
   /** X150 replayed end-to-end: the reference's hot path —
     * `spark.readStream.format(...)` by NAME (spark_streaming.py:125-130)
     * — against the OCC table instead of Kafka. A source table receives
@@ -716,205 +558,41 @@ object Pipeline {
     * exactly-once delivery.
     */
   def replayOccFormatStream(spark: SparkSession, dir: String): DataFrame = {
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|fmtstream".getBytes("UTF-8")).map("%02x".format(_))
-      .mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_occ_fmt_$user", key)
-    deleteRecursively(outRoot)
-    val src = outRoot.toString + "/src"
-    val dst = outRoot.toString + "/dst"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_occ_fmt_ckpt")
     val cols = Seq("event_id", "event_type", "value")
-    val base = graft.sources.Tables.events(spark, dir)
-      .select(cols.map(col): _*)
-    val O = graft.sources.OccTable
-    withReplayParallelism(spark) {
-      O.init(base.filter(col("event_id") % 4 === 0).coalesce(2), src)
-      (1 to 3).foreach(i =>
-        O.append(base.filter(col("event_id") % 4 === i).coalesce(2), src))
-      O.init(base.limit(0), dst)
-      val q = spark.readStream.format("graft-occ")
-        .option("startingVersion", "earliest")
-        .option("maxVersionsPerTrigger", "1")
-        .load(src)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          O.appendStream(batch, dst, "occ_fmt", batchId)
-          ()
-        }
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckpt)
-      }
+    val base = Tables.events(spark, dir).select(cols.map(col): _*)
+    val O = OccTable
+    val dst = Replay(spark, "occ_fmt", dir) { r =>
+      val (src, dst) = (r.path("src"), r.path("dst"))
+      r.toEnd {
+        O.init(base.filter(col("event_id") % 4 === 0).coalesce(2), src)
+        (1 to 3).foreach(i =>
+          O.append(base.filter(col("event_id") % 4 === i).coalesce(2), src))
+        O.init(base.limit(0), dst)
+        spark.readStream.format("graft-occ")
+          .option("startingVersion", "earliest")
+          .option("maxVersionsPerTrigger", "1")
+          .load(src)
+      }(_.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        O.appendStream(batch, dst, "occ_fmt", batchId)
+        ()
+      })
+      dst
     }
     O.read(spark, dst)()
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
   }
 
-  private def replayStreamSplit(spark: SparkSession, dir: String,
-      nFiles: Int, flushSentinels: Int = 0): (DataFrame, java.nio.file.Path) = {
-    val streamDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_split")
-    val dataDir = streamDir.resolve("data").toString
-    val events = graft.sources.Tables.events(spark, dir)
-    // the sentinel anchor (max ts) rides the slice write as an observed
-    // metric — the previous separate `events.agg(max("ts"))` action was
-    // a second full pass over the table per replay (guide §1.4: one
-    // action computes everything the setup needs)
-    val obs = org.apache.spark.sql.Observation()
-    val sliced = events
-      .repartitionByRange(nFiles, col("ts"))
-      .sortWithinPartitions("ts")
-    val toWrite =
-      if (flushSentinels > 0) sliced.observe(obs, max(col("ts")).as("mx"))
-      else sliced
-    toWrite.write.parquet(dataDir)
-    // stream-close sentinels: `flushSentinels` two-row files, each its
-    // own micro-batch, with ts a day+ past everything before it. A
-    // bounded stream should end with watermark → ∞ (Flink's bounded
-    // sources emit exactly that final watermark); Spark has no
-    // end-of-stream watermark and stateful operators evict one batch
-    // behind it, so without these, state that arrived in the LAST data
-    // batch is never flushed (outer-join nulls go unemitted). Each file
-    // carries one far-ABOVE-threshold row and one far-below row because
-    // the global watermark is the MIN across every withWatermark
-    // column: a plan that filter-splits the stream into two watermarked
-    // sides (alerts/readings) stays pinned to whichever side saw data
-    // last unless the sentinel advances BOTH (measured: a one-sided
-    // sentinel left a six-days-stale alert unemitted). Sentinel rows
-    // wear negative event_ids so consumers can drop them from output;
-    // every other column is NULL — sentinels never join (a NULL key
-    // matches nothing) and never reach output, so only (ts, event_id,
-    // value) carry meaning. Rows are built driver-side: the previous
-    // `events.limit(1)`-based construction paid a table scan plus a
-    // write job per sentinel.
-    if (flushSentinels > 0) {
-      // an empty source has no max ts to anchor sentinels on — fail
-      // loudly instead of silently never flushing
-      val mxAny = obs.get("mx")
-      require(mxAny != null,
-        s"replayStreamSplit: events table at $dir is empty; " +
-          "cannot anchor flush sentinels")
-      val mx = mxAny.asInstanceOf[java.sql.Timestamp]
-      val schema = events.schema
-      import org.apache.spark.sql.types.{FloatType, IntegerType}
-      // values take the field's own width: the schema tripwire admits
-      // an int32 event_id and a float value
-      def sentinelRow(id: Long, at: java.sql.Timestamp, v: Double) =
-        org.apache.spark.sql.Row.fromSeq(schema.fields.toSeq.map { f =>
-          (f.name, f.dataType) match {
-            case ("ts", _) => at
-            case ("event_id", IntegerType) => Integer.valueOf(id.toInt)
-            case ("event_id", _) => java.lang.Long.valueOf(id)
-            case ("value", FloatType) => java.lang.Float.valueOf(v.toFloat)
-            case ("value", _) => java.lang.Double.valueOf(v)
-            case _ => null
-          }
-        })
-      (1 to flushSentinels).foreach { i =>
-        val scratch = streamDir.resolve(s"sent$i").toString
-        val at = new java.sql.Timestamp(mx.getTime + i * 86400000L)
-        val rows = java.util.Arrays.asList(
-          sentinelRow(-(2L * i - 1), at, 1e9),
-          sentinelRow(-(2L * i), at, -1e9))
-        spark.createDataFrame(rows, schema)
-          .coalesce(1).write.parquet(scratch)
-        val part = new java.io.File(scratch).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        // "part-sentinel-…" sorts after every "part-0000N-…" data file,
-        // so the mtime spacing below keeps sentinels strictly last
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(dataDir, s"part-sentinel-$i.parquet"))
-      }
-    }
-    val parts = new java.io.File(dataDir).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val base = System.currentTimeMillis() - parts.length * 60000L
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(base + i * 60000L)
-    }
-    // the slice files carry exactly the events frame's schema (written
-    // from it; sentinels are built from it) — re-inferring it with
-    // spark.read.parquet was one distributed footer-read job per replay
-    val stream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    (stream, streamDir)
-  }
-
-  /** Events table as a file-stream source (micros-normalized `ts`) plus
-    * the scratch dir to delete after the replay. The file stream source
-    * requires a directory; the single-file table is symlinked into a
-    * scratch dir instead of copied.
+  /** The latest snapshot per `key`: the first row of each key's
+    * partition under `order`. The snapshot gates append one snapshot per
+    * key per micro-batch with a strictly increasing `n`, so the append
+    * sink needs no upsert; the reader takes argmax `n`.
     */
-  private def replayStream(spark: SparkSession,
-      dir: String, copies: Int = 1,
-      maxFilesPerTrigger: Option[Int] = None): (DataFrame, java.nio.file.Path) = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val path = s"$dir/events.parquet"
-    // eventsPhysical carries the NANOS catch-and-rethrow, so a session
-    // missing the nanosAsLong conf names its one-line fix here too
-    val schema = graft.sources.Tables.eventsPhysical(spark, dir).schema
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_replay")
-    // copies > 1 models an at-least-once source: the SAME table delivered
-    // `copies` times (symlinks — no data copied); with maxFilesPerTrigger=1
-    // each delivery lands in its own micro-batch
-    (1 to copies).foreach { i =>
-      java.nio.file.Files.createSymbolicLink(
-        streamDir.resolve(s"events$i.parquet"),
-        java.nio.file.Paths.get(path).toAbsolutePath)
-    }
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val raw = reader.parquet(streamDir.toString)
-    // same dtype adaptation AND same unsupported-dtype rejection as
-    // Tables.events (the lake has shipped both nanos-as-long and
-    // native-micros ts encodings)
-    val stream = schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => raw
-      case other => throw new IllegalArgumentException(
-        s"events.parquet ts column has unsupported dtype $other; expected " +
-          "TIMESTAMP(MICROS), TIMESTAMP_NTZ, or TIMESTAMP(NANOS)-as-long")
-    }
-    (stream, streamDir)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      // Files.walk holds directory handles until closed — leaking one
-      // per replay would creep toward the fd limit over a long session
-      scala.util.Using.resource(java.nio.file.Files.walk(p)) { s =>
-        s.iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      }
-    }
-  }
-
-  /** Runs `body` with `spark.sql.shuffle.partitions` lowered to 4: the
-    * stateful stream inside pins one state-store instance per shuffle
-    * partition for the query's lifetime, and a 2-micro-batch finite replay
-    * at 32 partitions spends more time on 32× state-store init/commit/
-    * checkpoint I/O than on data. Batch queries on the session are
-    * unaffected (conf restored in finally); an UNBOUNDED stream should
-    * keep the session default — partition count bounds stateful
-    * parallelism for the query's whole life.
-    */
-  private def withReplayParallelism[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try body finally spark.conf.set(key, prev)
+  private def latestPerKey(snaps: DataFrame, key: String)(
+      order: Column*): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(order: _*)
+    snaps.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Streaming EXACTLY-ONCE dedup gate — [[dedupedStream]]'s
@@ -935,39 +613,14 @@ object Pipeline {
     */
   def replayDedupIncremental(spark: SparkSession, dir: String,
       watermark: String = "40 days"): DataFrame = {
-    val (stream, streamDir) =
-      replayStream(spark, dir, copies = 2, maxFilesPerTrigger = Some(1))
-    // deterministic per-(user, source) scratch, CLEARED on entry: a
-    // fresh createTempDirectory per run would leak a whole-table dump
-    // each bench pass (the append sink cannot overwrite)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_dedup_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/dedup"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_dedup_ckpt")
-    withReplayParallelism(spark) {
-      val q = stream
+    val out = Replay(spark, "dedup", s"$dir|$watermark") { r =>
+      val stream = r.events(dir, copies = 2, maxFilesPerTrigger = Some(1))
+      r.toParquet("dedup")(stream
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark("event_id")
-        .select("event_id", "user_id", "event_type")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
-      }
+        .select("event_id", "user_id", "event_type"))
     }
-    TxnSink.committedRead(spark, outDir)
+    TxnSink.committedRead(spark, out)
   }
 
   /** Streaming per-key KLL quantile state gate — the CUSTOM-STATE
@@ -987,42 +640,20 @@ object Pipeline {
   def replayKllQuantiles(spark: SparkSession, dir: String,
       k: Int = 256): DataFrame = {
     import spark.implicits._
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$k".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_kll_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_kll_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .filter(col("value").isNotNull)
-        .select(col("event_type"), col("value").cast("double"))
-        .as[(String, Double)]
-      val q = Stateful.kllSnapshots(typed, k)
-        .toDF()
-        .select(col("key").as("event_type"), col("sketch"))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "kll", s"$dir|$k") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("snapshots") {
+        val typed = stream
+          .filter(col("value").isNotNull)
+          .select(col("event_type"), col("value").cast("double"))
+          .as[(String, Double)]
+        Stateful.kllSnapshots(typed, k)
+          .toDF()
+          .select(col("key").as("event_type"), col("sketch"))
       }
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type").orderBy(col("sketch.n").desc)
-    snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    latestPerKey(TxnSink.committedRead(spark, out), "event_type")(
+      col("sketch.n").desc)
   }
 
   /** Streaming funnel gate (`q_funnel_stream`) — X113's live form: the
@@ -1038,62 +669,35 @@ object Pipeline {
       steps: Seq[String] = Seq("view", "click", "purchase"),
       horizonSec: Long = 86400L, useTws: Boolean = false): DataFrame = {
     import spark.implicits._
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|funnel|${steps.mkString(",")}|$useTws".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_funnel_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_funnel_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .select(col("user_id").cast("string").as("user_id"),
-          col("event_type"), col("ts"), col("event_id"))
-        .withWatermark("ts", "0 seconds")
-        .as[UserEvent]
-      // the TWS twin needs the RocksDB provider for the query's
-      // lifetime (the engine rejects transformWithState on the
-      // HDFS-backed default)
-      def start(): Unit = {
+    val out = Replay(spark, "funnel",
+        s"$dir|${steps.mkString(",")}|$horizonSec|$useTws") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      def run() = r.toParquet("snapshots") {
+        val typed = stream
+          .select(col("user_id").cast("string").as("user_id"),
+            col("event_type"), col("ts"), col("event_id"))
+          .withWatermark("ts", "0 seconds")
+          .as[UserEvent]
         val snapsDs =
           if (useTws) Stateful.funnelSnapshotsTws(typed, steps, horizonSec)
           else Stateful.funnelSnapshots(typed, steps, horizonSec)
-        val q = snapsDs
-          .toDF()
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckptDir.toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch(parquetAppendSink(outDir))
-          .start()
-        try q.awaitTermination() finally q.stop()
+        snapsDs.toDF()
       }
-      try {
-        if (useTws)
-          graft.StatePosture.withProvider(spark,
-            graft.Session.rocksdbStateStore)(start())
-        else start()
-      } finally {
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
-      }
+      // the TWS twin needs the RocksDB provider for the query's
+      // lifetime (the engine rejects transformWithState on the
+      // HDFS-backed default)
+      if (useTws)
+        graft.StatePosture.withProvider(spark,
+          graft.Session.rocksdbStateStore)(run())
+      else run()
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
     // latest = argmax n, tie-broken by EARLIEST funnel entry: terminal
     // snapshots wear n = Long.MaxValue, so a post-eviction SECOND
     // funnel (possible once the first's state is freed) never outranks
     // the first — the consumer answers with the batch semantics (the
     // funnel from the user's first entry) regardless of eviction timing
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key")
-      .orderBy(col("n").desc, element_at(col("times"), 1).asc)
-    val latest = snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val latest = latestPerKey(TxnSink.committedRead(spark, out), "key")(
+      col("n").desc, element_at(col("times"), 1).asc)
       .select(col("times"))
     steps.zipWithIndex.map { case (st, i) =>
       latest.filter(size(col("times")) > i)
@@ -1125,39 +729,19 @@ object Pipeline {
   def replayTransitionsStream(spark: SparkSession, dir: String,
       maxGapSec: Long = Long.MaxValue): DataFrame = {
     import spark.implicits._
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|trans|$maxGapSec".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_trans_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/pairs"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_trans_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .select(col("user_id").cast("string").as("user_id"),
-          col("event_type"), col("ts"), col("event_id"))
-        .withWatermark("ts", "0 seconds")
-        .as[UserEvent]
-      val q = Stateful.transitionPairs(typed, maxGapSec)
-        .toDF("user_id", "from_type", "to_type")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "trans", s"$dir|$maxGapSec") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("pairs") {
+        val typed = stream
+          .select(col("user_id").cast("string").as("user_id"),
+            col("event_type"), col("ts"), col("event_id"))
+          .withWatermark("ts", "0 seconds")
+          .as[UserEvent]
+        Stateful.transitionPairs(typed, maxGapSec)
+          .toDF("user_id", "from_type", "to_type")
       }
     }
-    val pairs = TxnSink.committedRead(spark, outDir)
+    val pairs = TxnSink.committedRead(spark, out)
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
     val totals = pairs.groupBy(col("from_type"))
@@ -1187,39 +771,19 @@ object Pipeline {
   def replayCohortStream(spark: SparkSession, dir: String,
       retentionDays: Long = Long.MaxValue): DataFrame = {
     import spark.implicits._
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|cohort|$retentionDays".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_cohort_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/activity"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_cohort_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .select(col("user_id").cast("string").as("user_id"), col("ts"),
-          unix_date(col("ts").cast("date")).cast("long").as("epoch_day"))
-        .withWatermark("ts", "0 seconds")
-        .as[CohortEvent]
-      val q = Stateful.cohortActivity(typed, retentionDays)
-        .toDF("user_id", "cohort_epoch_day", "day_offset")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "cohort", s"$dir|$retentionDays") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("activity") {
+        val typed = stream
+          .select(col("user_id").cast("string").as("user_id"), col("ts"),
+            unix_date(col("ts").cast("date")).cast("long").as("epoch_day"))
+          .withWatermark("ts", "0 seconds")
+          .as[CohortEvent]
+        Stateful.cohortActivity(typed, retentionDays)
+          .toDF("user_id", "cohort_epoch_day", "day_offset")
       }
     }
-    val acts = TxnSink.committedRead(spark, outDir)
+    val acts = TxnSink.committedRead(spark, out)
     val matrix = acts.groupBy(col("cohort_epoch_day"), col("day_offset"))
       .agg(count(lit(1)).as("n_active"))
     // every user emits offset 0 once per cohort segment → the cohort
@@ -1249,45 +813,22 @@ object Pipeline {
   def replayKmvStream(spark: SparkSession, dir: String,
       k: Int = 64): DataFrame = {
     import spark.implicits._
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|kmv|$k".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_kmv_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_kmv_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .filter(col("user_id").isNotNull)
-        .select(col("event_type"), col("user_id").cast("string"))
-        .as[(String, String)]
-      val q = Stateful.kmvSnapshots(typed, k)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "kmv", s"$dir|$k") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("snapshots") {
+        val typed = stream
+          .filter(col("user_id").isNotNull)
+          .select(col("event_type"), col("user_id").cast("string"))
+          .as[(String, String)]
+        Stateful.kmvSnapshots(typed, k).toDF()
       }
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("n").desc)
-    val latest = snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val latest = latestPerKey(TxnSink.committedRead(spark, out), "key")(
+      col("n").desc)
       .select(col("key").as("event_type"),
         round(graft.ops.Sketches.kmvEstimate(col("ks"), k), 4)
           .as("est_uniques"))
-    val exact = graft.sources.Tables.events(spark, dir)
+    val exact = Tables.events(spark, dir)
       .filter(col("user_id").isNotNull)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_uniques"))
@@ -1311,43 +852,20 @@ object Pipeline {
       k: Int = 64): DataFrame = {
     import spark.implicits._
     val itemCol = floor(col("value")).cast("long").cast("string")
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|hh|$k".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_hh_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_hh_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .filter(col("value").isNotNull)
-        .select(col("event_type"), itemCol.as("bucket"))
-        .as[(String, String)]
-      val q = Stateful.mgSnapshots(typed, k)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "hh", s"$dir|$k") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("snapshots") {
+        val typed = stream
+          .filter(col("value").isNotNull)
+          .select(col("event_type"), itemCol.as("bucket"))
+          .as[(String, String)]
+        Stateful.mgSnapshots(typed, k).toDF()
       }
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("sketch.n").desc)
-    val latest = snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val latest = latestPerKey(TxnSink.committedRead(spark, out), "key")(
+      col("sketch.n").desc)
       .select(col("key").as("__g"), col("sketch").as("__mg"))
-    val items = graft.sources.Tables.events(spark, dir)
+    val items = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .select(col("event_type"), itemCol.as("bucket"))
     graft.ops.Freq.audit(items, "event_type", "bucket", k, latest)
@@ -1368,7 +886,7 @@ object Pipeline {
   def replayKsDrift(spark: SparkSession, dir: String,
       k: Int = 256): DataFrame = {
     import spark.implicits._
-    val ev = graft.sources.Tables.events(spark, dir)
+    val ev = Tables.events(spark, dir)
     val sideB = graft.ops.Drift.secondHalf(ev, "ts")
     val baseMap = ev
       .filter(col("value").isNotNull && !sideB)
@@ -1376,41 +894,18 @@ object Pipeline {
       .agg(graft.ops.Kll.sketchColumn(k, col("value")).as("sketch"))
       .select(col("event_type"), col("sketch"))
       .as[(String, graft.ops.KllBuf)].collect().toMap
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|ks|$k".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_ksdrift_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_ksdrift_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .filter(col("value").isNotNull && sideB)
-        .select(col("event_type"), col("value").cast("double"))
-        .as[(String, Double)]
-      val q = Stateful.kllSnapshots(typed, k)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "ksdrift", s"$dir|$k") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("snapshots") {
+        val typed = stream
+          .filter(col("value").isNotNull && sideB)
+          .select(col("event_type"), col("value").cast("double"))
+          .as[(String, Double)]
+        Stateful.kllSnapshots(typed, k).toDF()
       }
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("sketch.n").desc)
-    val latest = snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val latest = latestPerKey(TxnSink.committedRead(spark, out), "key")(
+      col("sketch.n").desc)
       .select(col("key"), col("sketch"))
       .as[(String, graft.ops.KllBuf)]
     val paired = latest
@@ -1436,7 +931,7 @@ object Pipeline {
   def replayKsRolling(spark: SparkSession, dir: String, k: Int = 256,
       bucketSec: Long = 172800L, windowBuckets: Int = 4): DataFrame = {
     import spark.implicits._
-    val ev = graft.sources.Tables.events(spark, dir)
+    val ev = Tables.events(spark, dir)
     val sideB = graft.ops.Drift.secondHalf(ev, "ts")
     val baseMap = ev
       .filter(col("value").isNotNull && !sideB)
@@ -1444,45 +939,22 @@ object Pipeline {
       .agg(graft.ops.Kll.sketchColumn(k, col("value")).as("sketch"))
       .select(col("event_type"), col("sketch"))
       .as[(String, graft.ops.KllBuf)].collect().toMap
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|ksroll|$k|$bucketSec|$windowBuckets".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_ksroll_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_ksroll_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .filter(col("value").isNotNull && sideB)
-        .select(col("event_type").as("key"), col("ts"),
-          col("value").cast("double").as("v"))
-        .withWatermark("ts", "0 seconds")
-        .as[KeyedReading]
-      val q = Stateful.kllWindowedSnapshots(typed, k, bucketSec,
-          windowBuckets)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "ksroll",
+        s"$dir|$k|$bucketSec|$windowBuckets") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("snapshots") {
+        val typed = stream
+          .filter(col("value").isNotNull && sideB)
+          .select(col("event_type").as("key"), col("ts"),
+            col("value").cast("double").as("v"))
+          .withWatermark("ts", "0 seconds")
+          .as[KeyedReading]
+        Stateful.kllWindowedSnapshots(typed, k, bucketSec, windowBuckets)
+          .toDF()
       }
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("n").desc)
-    val latest = snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val latest = latestPerKey(TxnSink.committedRead(spark, out), "key")(
+      col("n").desc)
       .select(col("key"), col("sketch"))
       .as[(String, graft.ops.KllBuf)]
     val paired = latest
@@ -1514,43 +986,18 @@ object Pipeline {
     */
   def replaySeasonalStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|seasonal".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_seasonal_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_seasonal_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream
-        .filter(col("value").isNotNull)
-        .select(col("event_type"), hour(col("ts")).cast("int"),
-          round(col("value").cast("double") * lit(1e6), 0).cast("long"))
-        .as[(String, Int, Long)]
-      val q = Stateful.seasonalSnapshots(typed)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "seasonal", dir) { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("snapshots") {
+        val typed = stream
+          .filter(col("value").isNotNull)
+          .select(col("event_type"), hour(col("ts")).cast("int"),
+            round(col("value").cast("double") * lit(1e6), 0).cast("long"))
+          .as[(String, Int, Long)]
+        Stateful.seasonalSnapshots(typed).toDF()
       }
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("n").desc)
-    snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    latestPerKey(TxnSink.committedRead(spark, out), "key")(col("n").desc)
       .select(col("key"), explode(col("cells")).as("c"))
       .as[(String, HourCell)]
       .map { case (k, c) =>
@@ -1587,52 +1034,28 @@ object Pipeline {
   def replayCusum(spark: SparkSession, dir: String, h: Double = 500.0,
       slack: Double = 25.0): DataFrame = {
     import spark.implicits._
-    val ev = graft.sources.Tables.events(spark, dir)
+    val ev = Tables.events(spark, dir)
     val bl = graft.ops.Drift.cusumBaselines(ev, "event_type", "ts", "value")
     val baseMap = bl.as[(String, Long, Long)].collect()
       .map { case (k, n0, s0) => k -> (n0, s0) }.toMap
     val hS = math.round(h * 1e6)
     val kS = math.round(slack * 1e6)
-    val (stream, streamDir) = replayStreamSplit(spark, dir, nFiles = 4)
-    val user = sys.props.getOrElse("user.name", "anon")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$h|$slack".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val outRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_replay_cusum_$user", key)
-    deleteRecursively(outRoot)
-    val outDir = outRoot.toString + "/snapshots"
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_cusum_ckpt")
-    withReplayParallelism(spark) {
-      val typed = stream.filter(col("value").isNotNull)
-        .select(col("event_type"), unix_micros(col("ts")),
-          round(col("value").cast("double") * lit(1e6), 0).cast("long"),
-          col("event_id").cast("long"))
-        .as[(String, Long, Long, Long)]
-      val q = CusumStream.monitor(typed, baseMap, hS, kS)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(parquetAppendSink(outDir))
-        .start()
-      try q.awaitTermination() finally {
-        q.stop()
-        deleteRecursively(ckptDir)
-        deleteRecursively(streamDir)
+    val out = Replay(spark, "cusum", s"$dir|$h|$slack") { r =>
+      val stream = r.eventsSplit(dir, nFiles = 4)
+      r.toParquet("snapshots") {
+        val typed = stream.filter(col("value").isNotNull)
+          .select(col("event_type"), unix_micros(col("ts")),
+            round(col("value").cast("double") * lit(1e6), 0).cast("long"),
+            col("event_id").cast("long"))
+          .as[(String, Long, Long, Long)]
+        CusumStream.monitor(typed, baseMap, hS, kS).toDF()
       }
     }
-    val snaps = TxnSink.committedRead(spark, outDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("n").desc)
-    val latest = snaps.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val latest = latestPerKey(TxnSink.committedRead(spark, out), "key")(
+      col("n").desc)
     // batch-schema projection: identical integer registers, identical
     // final-division shape — hash-equal to the batch oracle
-    val den = (nc: org.apache.spark.sql.Column) =>
+    val den = (nc: Column) =>
       nc.cast("double") / (col("n0") * lit(1000000L)).cast("double")
     latest.join(broadcast(bl), latest("key") === bl("event_type"))
       .select(col("event_type"), col("n"), col("n0").as("n_baseline"),
@@ -1666,4 +1089,231 @@ object Pipeline {
     Seq(
       startRawSink(readings, outDir, checkpointRoot, trigger),
       startAggSink(readings, outDir, checkpointRoot, trigger = trigger))
+}
+
+/** One finite replay's scope: the harness every `Pipeline.replay*` gate
+  * runs in. It owns
+  *   - the scratch root, `Scratch.fresh("replay_<tag>", key)`:
+  *     deterministic per (user, tag, key) and CLEARED on entry, so a
+  *     rerun rebuilds in place instead of leaking a copy per run (the
+  *     append sinks and `OccTable.init` cannot overwrite);
+  *   - the query's checkpoint and the stream scratch of [[events]] and
+  *     [[eventsSplit]], both under the root;
+  *   - the shuffle-partition scope of the query ([[live]]), and its
+  *     start, stop and cleanup: the scope's one `finally` stops every
+  *     query it started and deletes the checkpoint and stream scratch,
+  *     also when a `start()` or the body throws.
+  * A gate keeps only its own parts: source shape, plan, sink and
+  * post-processing. Outputs named through [[path]] outlive the scope —
+  * the gate's returned frame reads them — until the next run of the
+  * same gate and key clears the root; two runs of one gate and key must
+  * therefore not overlap.
+  */
+private[graft] final class Replay private (spark: SparkSession, root: Path) {
+  private val checkpoint = root.resolve("_checkpoint")
+  private val source = root.resolve("_source")
+  private val started = mutable.ArrayBuffer[StreamingQuery]()
+
+  /** `<root>/name`: where the gate's tables and sink output live. */
+  def path(name: String): String = root.resolve(name).toString
+
+  /** Starts one query on the replay's checkpoint (`start` receives its
+    * path) with `spark.sql.shuffle.partitions` lowered to 4, and runs
+    * `drive` on it. The stateful stream pins one state-store instance
+    * per shuffle partition for the query's lifetime, and a
+    * 2-micro-batch finite replay at 32 partitions spends more time on
+    * 32× state-store init/commit/checkpoint I/O than on data. Batch
+    * queries on the session are unaffected (the conf is restored on
+    * exit, and a started query keeps its own copy of the session conf);
+    * an UNBOUNDED stream should keep the session default — partition
+    * count bounds stateful parallelism for the query's whole life.
+    */
+  def live[A](start: String => StreamingQuery)(drive: StreamingQuery => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try {
+      val q = start(checkpoint.toString)
+      started += q
+      drive(q)
+    } finally spark.conf.set(key, prev)
+  }
+
+  /** Runs `plan` (evaluated inside [[live]]'s scope) with `AvailableNow`
+    * to the end of its input through the sink `sink` configures.
+    */
+  def toEnd(plan: => DataFrame, outputMode: String = "append")(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    live(ckpt => sink(plan.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", ckpt)
+      .trigger(Replay.ToEnd)).start())(_.awaitTermination())
+
+  /** [[toEnd]] into the production aggregate sink's transactional
+    * parquet append at `path(name)`; returns that path for the gate's
+    * `TxnSink.committedRead`.
+    */
+  def toParquet(name: String)(plan: => DataFrame): String = {
+    val out = path(name)
+    toEnd(plan)(_.foreachBatch(Pipeline.parquetAppendSink(out)))
+    out
+  }
+
+  /** Events table as a file-stream source (micros-normalized `ts`). The
+    * file stream source requires a directory; the single-file table is
+    * symlinked into the stream scratch instead of copied.
+    */
+  def events(dir: String, copies: Int = 1,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    val path = s"$dir/events.parquet"
+    // eventsPhysical carries the NANOS catch-and-rethrow, so a session
+    // missing the nanosAsLong conf names its one-line fix here too
+    val schema = Tables.eventsPhysical(spark, dir).schema
+    val streamDir = Files.createDirectories(source.resolve("events"))
+    // copies > 1 models an at-least-once source: the SAME table delivered
+    // `copies` times (symlinks — no data copied); with maxFilesPerTrigger=1
+    // each delivery lands in its own micro-batch
+    (1 to copies).foreach { i =>
+      Files.createSymbolicLink(streamDir.resolve(s"events$i.parquet"),
+        Paths.get(path).toAbsolutePath)
+    }
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    val raw = reader.parquet(streamDir.toString)
+    // same dtype adaptation AND same unsupported-dtype rejection as
+    // Tables.events (the lake has shipped both nanos-as-long and
+    // native-micros ts encodings)
+    schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+      case TimestampType => raw
+      case other => throw new IllegalArgumentException(
+        s"events.parquet ts column has unsupported dtype $other; expected " +
+          "TIMESTAMP(MICROS), TIMESTAMP_NTZ, or TIMESTAMP(NANOS)-as-long")
+    }
+  }
+
+  /** Events table as a TIME-SPLIT multi-file stream: `nFiles` range
+    * partitions of `ts` written as one parquet file each, mtimes forced
+    * ascending in path (= time) order, `maxFilesPerTrigger = 1` — so an
+    * AvailableNow replay runs one micro-batch per time slice, in order.
+    * FileStreamSource processes files by modification time; writing them
+    * in one job leaves near-tied mtimes, so the forced spacing is what
+    * GUARANTEES discovery order matches event-time order (an
+    * out-of-order slice whose span exceeds the watermark slack would be
+    * silently dropped as late — a flaky gate).
+    */
+  def eventsSplit(dir: String, nFiles: Int,
+      flushSentinels: Int = 0): DataFrame = {
+    val streamDir = Files.createDirectories(source.resolve("split"))
+    val dataDir = streamDir.resolve("data").toString
+    val events = Tables.events(spark, dir)
+    // the sentinel anchor (max ts) rides the slice write as an observed
+    // metric — the previous separate `events.agg(max("ts"))` action was
+    // a second full pass over the table per replay (guide §1.4: one
+    // action computes everything the setup needs)
+    val obs = org.apache.spark.sql.Observation()
+    val sliced = events
+      .repartitionByRange(nFiles, col("ts"))
+      .sortWithinPartitions("ts")
+    val toWrite =
+      if (flushSentinels > 0) sliced.observe(obs, max(col("ts")).as("mx"))
+      else sliced
+    toWrite.write.parquet(dataDir)
+    // stream-close sentinels: `flushSentinels` two-row files, each its
+    // own micro-batch, with ts a day+ past everything before it. A
+    // bounded stream should end with watermark → ∞ (Flink's bounded
+    // sources emit exactly that final watermark); Spark has no
+    // end-of-stream watermark and stateful operators evict one batch
+    // behind it, so without these, state that arrived in the LAST data
+    // batch is never flushed (outer-join nulls go unemitted). Each file
+    // carries one far-ABOVE-threshold row and one far-below row because
+    // the global watermark is the MIN across every withWatermark
+    // column: a plan that filter-splits the stream into two watermarked
+    // sides (alerts/readings) stays pinned to whichever side saw data
+    // last unless the sentinel advances BOTH (measured: a one-sided
+    // sentinel left a six-days-stale alert unemitted). Sentinel rows
+    // wear negative event_ids so consumers can drop them from output;
+    // every other column is NULL — sentinels never join (a NULL key
+    // matches nothing) and never reach output, so only (ts, event_id,
+    // value) carry meaning. Rows are built driver-side: the previous
+    // `events.limit(1)`-based construction paid a table scan plus a
+    // write job per sentinel.
+    if (flushSentinels > 0) {
+      // an empty source has no max ts to anchor sentinels on — fail
+      // loudly instead of silently never flushing
+      val mxAny = obs.get("mx")
+      require(mxAny != null,
+        s"Replay.eventsSplit: events table at $dir is empty; " +
+          "cannot anchor flush sentinels")
+      val mx = mxAny.asInstanceOf[java.sql.Timestamp]
+      val schema = events.schema
+      import org.apache.spark.sql.types.{FloatType, IntegerType}
+      // values take the field's own width: the schema tripwire admits
+      // an int32 event_id and a float value
+      def sentinelRow(id: Long, at: java.sql.Timestamp, v: Double) =
+        Row.fromSeq(schema.fields.toSeq.map { f =>
+          (f.name, f.dataType) match {
+            case ("ts", _) => at
+            case ("event_id", IntegerType) => Integer.valueOf(id.toInt)
+            case ("event_id", _) => java.lang.Long.valueOf(id)
+            case ("value", FloatType) => java.lang.Float.valueOf(v.toFloat)
+            case ("value", _) => java.lang.Double.valueOf(v)
+            case _ => null
+          }
+        })
+      (1 to flushSentinels).foreach { i =>
+        val scratch = streamDir.resolve(s"sent$i").toString
+        val at = new java.sql.Timestamp(mx.getTime + i * 86400000L)
+        val rows = java.util.Arrays.asList(
+          sentinelRow(-(2L * i - 1), at, 1e9),
+          sentinelRow(-(2L * i), at, -1e9))
+        spark.createDataFrame(rows, schema)
+          .coalesce(1).write.parquet(scratch)
+        val part = new java.io.File(scratch).listFiles()
+          .filter(_.getName.startsWith("part-")).head
+        // "part-sentinel-…" sorts after every "part-0000N-…" data file,
+        // so the mtime spacing below keeps sentinels strictly last
+        Files.move(part.toPath,
+          Paths.get(dataDir, s"part-sentinel-$i.parquet"))
+      }
+    }
+    val parts = new java.io.File(dataDir).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val base = System.currentTimeMillis() - parts.length * 60000L
+    parts.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(base + i * 60000L)
+    }
+    // the slice files carry exactly the events frame's schema (written
+    // from it; sentinels are built from it) — re-inferring it with
+    // spark.read.parquet was one distributed footer-read job per replay
+    spark.readStream.schema(events.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dataDir)
+  }
+
+  private def close(): Unit =
+    try started.foreach(_.stop())
+    finally {
+      Scratch.delete(checkpoint.toString)
+      Scratch.delete(source.toString)
+    }
+}
+
+private[graft] object Replay {
+
+  /** The trigger of every finite replay: run to the end of the input
+    * available at start, then stop.
+    */
+  val ToEnd: Trigger = Trigger.AvailableNow()
+
+  /** Runs `body` in a fresh replay scope under
+    * `Scratch.fresh("replay_<tag>", key)`; `key` folds in the source dir
+    * and every parameter that changes the gate's output.
+    */
+  def apply[A](spark: SparkSession, tag: String, key: String)(
+      body: Replay => A): A = {
+    val r = new Replay(spark, Paths.get(Scratch.fresh(s"replay_$tag", key)))
+    try body(r) finally r.close()
+  }
 }

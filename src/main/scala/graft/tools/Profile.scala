@@ -34,7 +34,7 @@ object Profile {
       println(f"  jobs=${rec.jobs.size} sum(job ms)=$jobsMs  gap(driver) ms=${wallMs - jobsMs}%.0f")
       rec.jobs.foreach { j =>
         println(f"  job ${j.id}%4d ${j.ms}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d " +
-          f"in=${j.inputBytes / 1024}%7d KiB  sR=${j.shuffleRead / 1024}%6d KiB sW=${j.shuffleWrite / 1024}%6d KiB  ${j.desc.take(60)}")
+          f"in=${j.inputBytes / 1024}%7d KiB  sR=${j.shuffleRead / 1024}%6d KiB sW=${j.shuffleWrite / 1024}%6d KiB  ${j.desc.trim.replaceAll("\\s+", " ").take(60)}")
       }
     }
     spark.stop()

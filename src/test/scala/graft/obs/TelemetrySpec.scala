@@ -31,6 +31,14 @@ class TelemetrySpec extends SparkSpec {
     assert(next.jobs.isEmpty, next.jobs)
   }
 
+  test("a job with no description is labelled by its action's call site") {
+    val (_, rec) = Telemetry.window(spark)(_ =>
+      spark.range(0, 1000, 1, 7).count())
+    assert(rec.jobs.nonEmpty && rec.jobs.forall(_.desc.nonEmpty), rec.jobs)
+    assert(rec.jobs.exists(_.desc.contains("TelemetrySpec.scala")),
+      rec.jobs.map(_.desc))
+  }
+
   test("progress records carry durationMs and observedMetrics under the query id") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Option[Double])]

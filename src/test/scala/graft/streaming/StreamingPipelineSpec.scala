@@ -306,6 +306,49 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(out.select("event_id").distinct().count() === n)
   }
 
+  /** The `graft_*` entries directly under `java.io.tmpdir` (other
+    * processes share the dir, so only this program's names count).
+    */
+  private def graftTmpEntries: Set[String] = {
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    tmp.list().filter(_.startsWith("graft_")).toSet
+  }
+
+  test("a replay whose query fails at start() leaves no query, checkpoint or stream scratch") {
+    val dir = "/root/testdata/sf0.001"
+    val active = spark.streams.active.map(_.id).toSet
+    val before = graftTmpEntries
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Replay(spark, "failed_start", dir) { r =>
+        val stream = r.eventsSplit(dir, nFiles = 4)
+        // a streaming aggregation without a watermark cannot run in
+        // append mode: the plan builds and start() refuses it
+        r.toParquet("out")(stream.groupBy("event_type").count())
+      }
+    }
+    assert(e.getMessage.toLowerCase.contains("append"), e.getMessage)
+    assert(spark.streams.active.map(_.id).toSet === active)
+    val root = java.nio.file.Paths.get(
+      graft.Scratch.path("replay_failed_start", dir))
+    assert(graftTmpEntries -- before subsetOf
+      Set(root.getParent.getFileName.toString))
+    val left = scala.util.Using.resource(Files.walk(root))(
+      _.iterator().asScala.map(root.relativize(_).toString)
+        .filter(_.nonEmpty).toList)
+    assert(left === Nil, "checkpoint or stream scratch left behind")
+  }
+
+  test("replayStreamStreamJoin reruns in place: no tmpdir entry beyond its scratch root") {
+    val dir = "/root/testdata/sf0.001"
+    val n = Pipeline.replayStreamStreamJoin(spark, dir).count()
+    val between = graftTmpEntries
+    assert(between.contains(
+      java.nio.file.Paths.get(graft.Scratch.path("replay_ssj", dir))
+        .getParent.getFileName.toString))
+    assert(Pipeline.replayStreamStreamJoin(spark, dir).count() === n)
+    assert(graftTmpEntries -- between === Set.empty[String])
+  }
+
   test("streaming output equals batch sensorRollup on the same input") {
     implicit val sqlCtx = spark.sqlContext
     val rows = Seq(
