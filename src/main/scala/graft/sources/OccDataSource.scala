@@ -48,7 +48,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[OccFileIndex.listFiles]], which is where the log-level file
   * skipping happens. The scan also serves
   * `spark.readStream.format("graft-occ")` (X150,
-  * [[OccDataMicroBatchStream]]). A path-named read and a SQL catalog
+  * [[OccDataLane]]). A path-named read and a SQL catalog
   * table (`CREATE TABLE … USING graft-occ`) resolve the same way.
   *
   * Deletion vectors (X151): a plain parquet scan would resurrect
@@ -310,19 +310,13 @@ final class OccParquetScan(spark: SparkSession, dir: String,
       f.copy(name = physToLog.getOrElse(f.name, f.name))))
 
   /** X150: `readStream.format("graft-occ")` — the version-windowed
-    * incremental read over this scan's machinery; see
-    * [[OccDataMicroBatchStream]].
+    * incremental read over this scan's machinery; see [[OccDataLane]].
     */
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read
       .streaming.MicroBatchStream =
-    new OccDataMicroBatchStream(dir, snap, this,
-      startingVersion = Option(options.get("startingVersion"))
-        .getOrElse("earliest"),
-      startingTimestamp = Option(options.get("startingTimestamp"))
-        .map(_.toLong),
-      maxVersions = options.getInt("maxVersionsPerTrigger", 0),
-      onRewrite = Option(options.get("onRewrite")).getOrElse("fail"))
+    new OccVersionStream(dir, options, new OccDataLane(dir, snap, this,
+      Option(options.get("onRewrite")).getOrElse("fail")))
 }
 
 /** The log-backed file index of the `graft-occ` lane, under both of

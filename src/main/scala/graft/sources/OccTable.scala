@@ -235,26 +235,15 @@ object OccTable {
   private def checkpointPath(dir: String, v: Long): Path =
     new Path(s"$dir/$LogDirName/v${"%020d".format(v)}.chk")
 
-  /** True iff no commit in (fromVersion, to.version] replaces the
-    * schema or the column mapping — i.e. every era in that window
-    * reads identically to `to` (what [[scanFilesAs]] keys on). One
-    * version-file read per window commit; the streaming tail uses it
-    * to skip per-version era folds in the steady state, where a
-    * long-lived stream over an ever-mapped table would otherwise pay
-    * O(versions) log parsing PER VERSION — O(V²) cumulative — even
-    * though no mapping change ever intervened. A truncated or missing
-    * window file proves nothing and returns false (the caller falls
-    * back to the per-version fold, whose own vacuum guard decides).
-    */
-  private[sources] def metadataStableSince(spark: SparkSession,
-      dir: String, fromVersion: Long, to: Snapshot): Boolean =
-    metadataStableBetween(spark, dir, fromVersion, to.version)
-
-  /** [[metadataStableSince]] by version bound — what the tail's
-    * era-fold CACHE keys on: if no schema/mapping commit lies in
-    * (fromVersion, toVersion], the era snapshot folded at fromVersion
-    * reads identically at toVersion, so one fold serves the whole
-    * stable stretch instead of one fold per add-carrying version.
+  /** True iff no commit in (fromVersion, toVersion] replaces the
+    * schema or the column mapping — every era in that window reads
+    * identically at toVersion (what [[scanFilesAs]] keys on). One
+    * version-file read per commit; [[OccWindow]] asks it for the
+    * versions between its window and the current snapshot, so a
+    * long-lived tail over an ever-mapped table folds no era in the
+    * steady state. A truncated or missing file proves nothing and
+    * returns false (the caller folds, and the fold's vacuum guard
+    * decides).
     */
   private[sources] def metadataStableBetween(spark: SparkSession,
       dir: String, fromVersion: Long, toVersion: Long): Boolean = {
@@ -422,10 +411,10 @@ object OccTable {
   }
 
   /** Commit-log versions and their parsed actions over `(after, upTo]`
-    * — the incremental read the streaming tail ([[OccTailSource]])
-    * plans from. Missing versions in the window mean a truncation
-    * outran the reader: fail LOUDLY (a silent skip would silently drop
-    * data from the feed).
+    * — the incremental read [[OccWindow.window]] and the action feed
+    * ([[OccTailSource]]) plan from. Missing versions in the window mean
+    * a truncation outran the reader: fail LOUDLY (a silent skip would
+    * silently drop data from the feed).
     */
   def actionsBetween(spark: SparkSession, dir: String, after: Long,
       upTo: Long): Seq[(Long, Actions)] = {
@@ -1753,10 +1742,10 @@ object OccTable {
   /** Raw scan of `names` under snapshot `s`'s LOGICAL shape: reads the
     * files with the physical schema (column-mapping aware) and aliases
     * back to logical names. NO deletion-vector application — callers
-    * that serve rows compose [[applyDvs]] on top (the tail source
-    * deliberately does not: DV commits classify under its onRewrite
-    * policy). `names` must be non-empty; a mapped snapshot always has
-    * a log schema (the mapping verbs refuse legacy logs).
+    * that serve rows compose [[applyDvs]] on top (as
+    * [[OccStream.tailTo]] does for a served add that carries a DV).
+    * `names` must be non-empty; a mapped snapshot always has a log
+    * schema (the mapping verbs refuse legacy logs).
     */
   private[sources] def scanFiles(spark: SparkSession, dir: String,
       s: Snapshot, names: Seq[String]): DataFrame = {
@@ -3676,12 +3665,14 @@ object OccTable {
     * `retainVersions` is the retention window: every file referenced
     * by ANY of the newest `retainVersions` reconstructible snapshots
     * survives, so [[readAt]]/[[snapshotAt]] keep serving that history
-    * (and a lagging [[OccTailSource]] whose lag is shorter than the
-    * window keeps reading). The default (1) keeps only the current
-    * snapshot — maximal reclaim. Vacuum records the highest version it
-    * stopped guaranteeing in a `vacuumedThrough` marker (monotone
-    * across runs); time travel at/below it fails loudly with
-    * [[VacuumedVersionException]] instead of a missing-file scan error.
+    * (and a lagging stream whose lag is shorter than the window keeps
+    * reading: [[OccWindow.window]] probes the adds it serves at or
+    * below the marker and refuses by name if one was reclaimed). The
+    * default (1) keeps only the current snapshot — maximal reclaim.
+    * Vacuum records the highest version it stopped guaranteeing in a
+    * `vacuumedThrough` marker (monotone across runs); time travel
+    * at/below it fails loudly with [[VacuumedVersionException]] instead
+    * of a missing-file scan error.
     *
     * UNSAFE while a writer is mid-stage — run it the way every table
     * format runs vacuum: from the maintenance owner, not concurrently

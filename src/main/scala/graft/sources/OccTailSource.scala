@@ -2,60 +2,38 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** STREAMING SOURCE over an [[OccTable]] commit log (X104) — the
-  * read-side that closes the lakehouse loop: [[OccTable.appendStream]]
-  * ingests into the log exactly-once, and this source lets a standing
-  * pipeline SUBSCRIBE to what lands (Delta's streaming source / change
-  * feed shape). The reference's own architecture is store → dashboard
-  * POLLING (reference/streamlit_dashboard.py:89-121 re-queries the full
-  * store per refresh); commit-log tailing is that read path made
-  * incremental — each refresh reads only the versions that committed
-  * since the last one.
+/** `graft-occ-tail`: an [[OccTable]] commit log as a stream of its
+  * parsed ACTIONS — the read side that closes the lakehouse loop
+  * ([[OccTable.appendStream]] ingests exactly-once; this feed lets a
+  * standing pipeline subscribe to what lands, Delta's streaming source
+  * and change feed shape). The reference's dashboard POLLS the full
+  * store per refresh (reference/streamlit_dashboard.py:89-121); tailing
+  * the log reads only the versions committed since the last batch.
   *
-  * Offset model: an offset IS a log version — "every commit ≤ v has
-  * been delivered". A micro-batch over (start, end] emits the parsed
-  * ACTIONS of exactly those commits as rows:
+  * The feed runs on [[OccVersionStream]]'s offsets (see
+  * [[OccWindow]]); a micro-batch over (start, end] emits one row per
+  * action of exactly those commits:
   *
   *   (version LONG, action STRING, file STRING,
   *    app_id STRING, txn_version LONG, schema_json STRING)
   *
-  * with `action` ∈ add | remove | txn | schema (file set on add/remove,
-  * app_id/txn_version on txn, schema_json on schema — the faithful
-  * feed of the log, not just its AddFiles). The engine checkpoints the
-  * version offsets, so restart resumes mid-log with no duplicates and
-  * no gaps; a version range is immutable once committed, so recovery
-  * replays identical batches. A version MISSING from a planned range
-  * (log truncation outran the tail) fails the stream LOUDLY — a silent
-  * skip would silently drop data from the feed.
-  *
-  * [[OccStream.tailTo]] is the DATA tail built on this feed: per
-  * micro-batch it turns the AddFiles into one incremental parquet scan
-  * and hands the frame to an exactly-once sink. Commits that REMOVE
-  * files (compaction, merge, expiry) cannot be represented by an
-  * append-only tail; the `onRewrite` policy mirrors Delta's:
-  * fail (default — like Delta refusing changed data without a flag),
-  * `skipRewrites` (ignore those commits entirely — Delta's
-  * `skipChangeCommits`), `ignoreRemoves` (process their adds too,
-  * accepting reprocessed rows — Delta's `ignoreChanges`).
-  *
-  * Scale posture: the driver plans from the log only (tiny per-version
-  * files — the same O(metadata) cost every table format's source
-  * pays); the data read is a plain parquet scan of ONLY the new files,
-  * with pushdown/pruning intact. Admission control
-  * (`maxVersionsPerTrigger`) bounds a backlogged catch-up to a fixed
-  * number of commits per micro-batch.
+  * with `action` ∈ add | remove | txn | schema. A version missing from
+  * a planned range (log truncation outran the tail) fails the stream
+  * loudly. [[OccStream.tailTo]] and [[OccStream.changesTo]] take only
+  * each batch's version bounds from the feed; what `tailTo` serves is
+  * [[OccWindow.window]]'s decision.
   */
 object OccTailSource {
   val ShortName = "graft-occ-tail"
@@ -95,108 +73,23 @@ final class OccTailTable(options: CaseInsensitiveStringMap)
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = OccTailSource.schema
         override def toMicroBatchStream(ckpt: String): MicroBatchStream =
-          new OccTailMicroBatchStream(dir,
-            startingVersion = Option(options.get("startingVersion"))
-              .getOrElse("earliest"),
-            maxVersions = options.getInt("maxVersionsPerTrigger", 0),
-            startingTimestamp = Option(options.get("startingTimestamp"))
-              .map(_.toLong))
+          new OccVersionStream(dir, options, new OccFeedLane(dir))
       }
     }
 }
 
-/** "Every commit ≤ version has been delivered"; -1 = nothing yet. */
-final case class OccTailOffset(version: Long) extends Offset {
-  override def json(): String = version.toString
-}
-
-final class OccTailMicroBatchStream(dir: String, startingVersion: String,
-    maxVersions: Int, startingTimestamp: Option[Long] = None)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
-  require(startingVersion == "earliest" || startingVersion == "latest" ||
-    startingVersion.forall(_.isDigit),
-    s"startingVersion must be 'earliest', 'latest' or a version number, " +
-      s"got '$startingVersion'")
-  // X147: Delta's startingVersion/startingTimestamp exclusivity
-  require(startingTimestamp.isEmpty || startingVersion == "earliest",
-    "startingTimestamp and startingVersion are mutually exclusive — " +
-      "set one")
-  require(maxVersions >= 0,
-    s"maxVersionsPerTrigger must be >= 0 (0 = unbounded), got $maxVersions")
-
-  // all offset/planning work is DRIVER-side (the log is metadata)
-  private def spark: SparkSession = SparkSession.active
-  private def latest: Long =
-    OccTable.latestVersion(spark, dir).getOrElse(-1L)
-
-  /** AvailableNow pin: versions committed after prepare() are left for
-    * the next run instead of chasing a live writer forever.
-    */
-  @volatile private var availableNowTarget: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(latest)
-
-  override def initialOffset(): Offset =
-    OccTailOffset(startingTimestamp match {
-      // X147: subscribe from the first commit AT OR AFTER the
-      // timestamp — resolved against the version files' commit clock,
-      // the same clock versionAsOf time-travels by
-      case Some(ts) => OccTable.firstVersionAtOrAfter(spark, dir, ts) - 1
-      case None => startingVersion match {
-        case "earliest" => -1L
-        case "latest" => latest
-        case n => n.toLong - 1 // version n is the first delivered
-      }
-    })
-
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxVersions > 0) ReadLimit.maxRows(maxVersions.toLong)
-    else ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) drives this source")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[OccTailOffset].version
-    val l = availableNowTarget.getOrElse(latest)
-    // Spark may hand a CompositeReadLimit (e.g. Trigger.AvailableNow
-    // combined with admission options) — honor the tightest ReadMaxRows
-    // among the sub-limits instead of silently planning the whole log.
-    def maxRowsOf(rl: ReadLimit): Option[Long] = rl match {
-      case r: ReadMaxRows => Some(r.maxRows())
-      case c: CompositeReadLimit =>
-        c.getReadLimits.toSeq.flatMap(maxRowsOf)
-          .reduceOption((a: Long, b: Long) => math.min(a, b))
-      case _ => None
-    }
-    val capped = maxRowsOf(limit).map(m => math.min(l, s + m)).getOrElse(l)
-    OccTailOffset(math.max(s, capped))
-  }
-
-  override def reportLatestOffset(): Offset = OccTailOffset(latest)
-
-  override def deserializeOffset(json: String): Offset =
-    OccTailOffset(json.trim.toLong)
-  override def commit(end: Offset): Unit = () // log retention is the table's business
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[OccTailOffset].version
-    val e = end.asInstanceOf[OccTailOffset].version
-    if (e <= s) return Array.empty
-    // driver-side parse of the tiny commit files; fails LOUDLY when a
-    // version in the range was truncated away (OccTable.actionsBetween)
-    OccTable.actionsBetween(spark, dir, s, e).map { case (v, a) =>
-      OccTailPartition(v, a.adds, a.removes, a.txns,
-        a.schemaJson): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new OccTailReaderFactory
+/** The feed's lane: one partition per commit of the window. */
+final class OccFeedLane(dir: String) extends OccLane {
+  override def snapshotVersion: Option[Long] = None
+  override def plan(start: OccVersionOffset,
+      end: Long): Array[InputPartition] =
+    if (end <= start.version) Array.empty
+    else OccTable.actionsBetween(SparkSession.active, dir, start.version, end)
+      .map { case (v, a) =>
+        OccTailPartition(v, a.adds, a.removes, a.txns,
+          a.schemaJson): InputPartition
+      }.toArray
+  override def readerFactory: PartitionReaderFactory = new OccTailReaderFactory
 }
 
 /** One commit's parsed actions — tiny, shipped to the executor whole. */
@@ -247,22 +140,22 @@ object OccStream {
   }
 
   /** The DATA tail: subscribe to the table's appends. Each micro-batch
-    * turns its version range's AddFiles into ONE incremental parquet
-    * scan (planned with the table's log schema, so pre-evolution files
-    * serve evolved columns as null) and hands it to `sink` — compose
-    * with [[OccTable.streamingSink]] or
+    * takes its version bounds from the feed, plans them with
+    * [[OccWindow.window]] under `onRewrite` (see
+    * [[OccWindow.RewriteModes]]) and hands `sink` one frame: each era
+    * stretch scanned under the mapping in force when its files landed,
+    * in the table's current logical space (pre-evolution files serve
+    * evolved columns as null), through the add's deletion vector where
+    * it carries one. Compose with [[OccTable.streamingSink]] or
     * [[graft.streaming.TxnSink]] for an exactly-once pipeline (the
     * engine checkpoint replays identical version ranges after a crash;
-    * the sink fence drops the replayed batch). Batches whose range
-    * carries no adds (pure txn/schema commits, or rewrites under
-    * `skipRewrites`) skip the sink call.
+    * the sink fence drops the replayed batch). A batch that serves no
+    * add skips the sink call.
     *
-    * `onRewrite` decides what a commit that REMOVES files means to an
-    * append-only subscriber (see [[OccTailSource]]): "fail" (default),
-    * "skipRewrites", or "ignoreRemoves". Under `skipRewrites` the tail
-    * reads files a later compaction may have REMOVED — run
-    * [[OccTable.vacuum]] with a retention window longer than the
-    * tail's lag, the same contract Delta documents for its source.
+    * Under `skipRewrites` the tail reads files a later compaction may
+    * have removed — run [[OccTable.vacuum]] with a retention window
+    * longer than the tail's lag, the same contract Delta documents for
+    * its source.
     */
   def tailTo(spark: SparkSession, dir: String, checkpointDir: String,
       sink: (DataFrame, Long) => Unit,
@@ -271,120 +164,25 @@ object OccStream {
       onRewrite: String = "fail",
       trigger: Trigger = Trigger.ProcessingTime(0L),
       queryName: Option[String] = None): StreamingQuery = {
-    require(Set("fail", "skipRewrites", "ignoreRemoves")(onRewrite),
-      s"onRewrite must be fail | skipRewrites | ignoreRemoves, got '$onRewrite'")
+    OccWindow.requireMode(onRewrite)
     val writer = feed(spark, dir, startingVersion, maxVersionsPerTrigger)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // metadata-sized collect: the batch IS the commit log slice
-        val acts = batch.select("version", "action", "file").collect()
-          .map(r => (r.getLong(0), r.getString(1),
-            if (r.isNullAt(2)) null else r.getString(2)))
-        val rewriteVs = acts.collect {
-          case (v, "remove", _) => v
-        }.toSet
-        if (onRewrite == "fail" && rewriteVs.nonEmpty)
-          throw new IllegalStateException(
-            s"OccStream: commit(s) v${rewriteVs.toSeq.sorted.mkString(", v")} " +
-              s"of $dir rewrite files under the tail (compaction/merge/" +
-              "expiry) — an append-only tail cannot represent them. Set " +
-              "onRewrite=skipRewrites to ignore those commits (Delta's " +
-              "skipChangeCommits) or onRewrite=ignoreRemoves to process " +
-              "their adds too (downstream may see reprocessed rows).")
-        val addFiles = acts.collect {
-          case (v, "add", f)
-            if onRewrite == "ignoreRemoves" || !rewriteVs(v) => f
-        }
-        // vacuum-lag guard: adds at or below the vacuumedThrough marker
-        // may reference reclaimed files (added then removed outside the
-        // retention window). For exactly those versions, probe the
-        // driver-side metadata and refuse BY NAME instead of failing
-        // with a missing-file error mid-scan — the "retention window
-        // longer than the tail's lag" contract, enforced. Adds above
-        // the marker are never probed: vacuum guarantees them.
-        if (addFiles.nonEmpty) {
-          val through = OccTable.vacuumedThrough(spark, dir)
-          val laggedAdds = acts.collect {
-            case (v, "add", f) if v <= through => (v, f)
-          }
-          if (laggedAdds.nonEmpty) {
-            val fsys = new org.apache.hadoop.fs.Path(dir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val gone = laggedAdds.filterNot { case (_, f) =>
-              fsys.exists(new org.apache.hadoop.fs.Path(dir, f)) }
-            if (gone.nonEmpty) throw new IllegalStateException(
-              s"OccStream: tail lag exceeded the vacuum retention of " +
-                s"$dir — file(s) ${gone.map(_._2).mkString(", ")} of " +
-                s"version(s) v${gone.map(_._1).distinct.sorted.mkString(", v")} " +
-                s"were reclaimed (vacuumedThrough=$through). Vacuum " +
-                "with a retention window longer than the tail's lag.")
-          }
-        }
-        if (addFiles.nonEmpty) {
-          // each version's adds read under the mapping IN FORCE WHEN
-          // THEY LANDED and translate into the CURRENT logical space
-          // (X137): a replay across a colmapclear overwrite would
-          // otherwise read pre-clear files' mapped columns as NULL.
-          // Versions the vacuum marker already covers fall back to the
-          // current era (their era fold is refused by the vacuum
-          // guard; their files survived, and any mapping clear since
-          // would have removed them — the documented skipRewrites lag
-          // hazard).
-          val cur = OccTable.snapshot(spark, dir)
-          val data =
-            if (!cur.everMapped)
-              // never-mapped log: one scan with the current schema —
-              // evolution nulls are the intended read, no era folds
-              OccTable.scanFiles(spark, dir, cur, addFiles.toIndexedSeq)
-            else {
-              val byVersion = acts.collect {
-                case (v, "add", f)
-                  if onRewrite == "ignoreRemoves" || !rewriteVs(v) =>
-                    (v, f)
-              }.groupBy(_._1).toSeq.sortBy(_._1)
-              // steady state: no schema/mapping commit since the
-              // batch's oldest version means every era reads
-              // identically to cur — ONE scan, zero era folds. A
-              // long-lived tail otherwise re-parses the log from the
-              // nearest checkpoint per add-carrying version, O(V²)
-              // cumulative, even when no mapping change ever landed.
-              // The check costs one version-file read per window
-              // commit (lag-bounded); the per-version fold below only
-              // runs across an actual schema/mapping-change window.
-              if (OccTable.metadataStableSince(spark, dir,
-                  byVersion.head._1, cur))
-                OccTable.scanFiles(spark, dir, cur,
-                  byVersion.flatMap(_._2.map(_._2)).toIndexedSeq)
-              else {
-                // a batch that DOES span a schema/mapping change still
-                // folds once per STABLE STRETCH, not once per
-                // add-carrying version: consecutive versions with no
-                // metadata commit between them share an era (same
-                // schema + mapping — all scanFilesAs keys on), so the
-                // cached fold carries forward until a change breaks it.
-                // The stability check is one version-file read per gap
-                // commit — reads the per-version fold would pay anyway.
-                var cached: Option[(Long, OccTable.Snapshot)] = None
-                byVersion.map { case (v, vfs) =>
-                  val era = cached match {
-                    case Some((v0, e)) if OccTable.metadataStableBetween(
-                        spark, dir, v0, v) => e
-                    case _ =>
-                      try OccTable.snapshotAt(spark, dir, v)
-                      catch {
-                        case _: OccTable.VacuumedVersionException => cur
-                      }
-                  }
-                  cached = Some((v, era))
-                  OccTable.scanFilesAs(spark, dir, era, cur,
-                    vfs.map(_._2).toIndexedSeq)
-                }.reduce(_.unionByName(_, allowMissingColumns = true))
-              }
-            }
-          sink(data, batchId)
+        // a version with no feed row has no add, remove or schema action
+        val vs = batch.select("version").collect().map(_.getLong(0))
+        if (vs.nonEmpty) {
+          val w = OccWindow.window(spark, dir, vs.min - 1L, vs.max, onRewrite)
+          if (w.served.nonEmpty) sink(w.eras.map { case (era, files) =>
+            val scan = OccTable.scanFilesAs(spark, dir, era, w.current,
+              files.map(_.file))
+            val dvs = files.collect {
+              case OccWindow.Served(_, f, Some(d)) => f -> d }
+            if (dvs.isEmpty) scan
+            else OccTable.applyDvs(spark, dir, era.copy(dvs = dvs.toMap), scan)
+          }.reduce(_.unionByName(_, allowMissingColumns = true)), batchId)
         }
         ()
       }

@@ -94,7 +94,10 @@ object Pipeline {
     *
     * Complete output mode is used (not append+watermark) because a finite
     * replay must emit every window including the final unflushed ones;
-    * state is bounded by the window count of the replayed range.
+    * state is bounded by the window count of the replayed range. The
+    * sink's temp view is dropped once the returned frame is analysed
+    * (the frame holds the sink's rows itself), so repeated runs in one
+    * session leave no view behind.
     */
   def replayWindowedAgg(spark: SparkSession, dir: String): DataFrame = {
     val sinkName = "replay_" +
@@ -104,7 +107,9 @@ object Pipeline {
       r.toEnd(WindowedAgg.tumbling(stream, "ts", "event_type", "value"),
         outputMode = "complete")(_.format("memory").queryName(sinkName))
     }
-    spark.table(sinkName)
+    val out = spark.table(sinkName)
+    spark.catalog.dropTempView(sinkName)
+    out
   }
 
   /** The INCREMENTAL replay twin of [[replayWindowedAgg]]: the same finite

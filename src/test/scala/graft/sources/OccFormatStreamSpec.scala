@@ -200,5 +200,106 @@ class OccFormatStreamSpec extends SparkSpec {
     assert(viaFormat === viaTail,
       "the by-format-name stream and the Scala-API tail must deliver " +
         "identical rows from the same log")
+
+    // a vacuumed skipRewrites log: each lane drains v0 on its own
+    // checkpoint; two compactions, an append and a vacuum land; each
+    // lane resumes. The vacuum reclaimed the skipped compactions' files,
+    // which neither lane serves, so neither may refuse on them.
+    val vac = freshDir()
+    OccTable.init(Seq((1L, "10")).toDF("id", "key").coalesce(1), vac) // v0
+    val skip = Map("onRewrite" -> "skipRewrites")
+    val formatCk = Files.createTempDirectory("graft_fstream_ck").toString
+    val tailCk = Files.createTempDirectory("graft_fstream_ck").toString
+    def viaTailOn(ck: String): Seq[(Long, String)] = {
+      val got = ArrayBuffer.empty[(Long, String)]
+      val q = OccStream.tailTo(spark, vac, ck,
+        (df, _) => got.synchronized {
+          got ++= df.as[(Long, String)].collect() },
+        onRewrite = "skipRewrites", trigger = Trigger.AvailableNow())
+      q.awaitTermination(); got.toSeq
+    }
+    assert(drain(vac, formatCk, skip)._1 === Seq((1L, "10")))
+    assert(viaTailOn(tailCk) === Seq((1L, "10")))
+    OccTable.rewrite(spark, vac, d => d.coalesce(1))                 // v1
+    OccTable.rewrite(spark, vac, d => d.coalesce(1))                 // v2
+    OccTable.append(Seq((4L, "40")).toDF("id", "key"), vac)          // v3
+    OccTable.vacuum(spark, vac)
+    assert(OccTable.vacuumedThrough(spark, vac) === 2L)
+    assert(drain(vac, formatCk, skip)._1 === Seq((4L, "40")))
+    assert(viaTailOn(tailCk) === Seq((4L, "40")))
+  }
+
+  test("each onRewrite mode across a DV delete, on both lanes") {
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    // subscribe, deliver v0, DV-delete id 2 (v1), process again: the
+    // rows served for v1, or the refusal
+    def acrossDvDelete(lane: String,
+        mode: String): Either[String, Seq[(Long, Long)]] = {
+      val dir = freshDir()
+      OccTable.init(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v")
+        .coalesce(1), dir)
+      val got = ArrayBuffer.empty[(Long, Long)]
+      val collect = (df: DataFrame, _: Long) =>
+        got.synchronized { got ++= df.as[(Long, Long)].collect(); () }
+      val ckpt = Files.createTempDirectory("graft_fstream_ck").toString
+      val q =
+        if (lane == "tail")
+          OccStream.tailTo(spark, dir, ckpt, collect, onRewrite = mode)
+        else spark.readStream.format("graft-occ").option("onRewrite", mode)
+          .load(dir).writeStream.outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .foreachBatch(collect)
+          .start()
+      try {
+        q.processAllAvailable()
+        assert(got.sorted.toSeq === Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+        got.clear()
+        assert(OccTable.deleteRangeDv(spark, dir, "id", 2.0, 2.0)
+          .markedRows === 1L)
+        try { q.processAllAvailable(); Right(got.sorted.toSeq) }
+        catch {
+          case e: StreamingQueryException => Left(messages(e).mkString(" | "))
+        }
+      } finally q.stop()
+    }
+    for (lane <- Seq("tail", "format")) {
+      val refused = acrossDvDelete(lane, "fail")
+      assert(refused.left.exists(_.contains(s"rewrite files under the " +
+        (if (lane == "tail") "tail" else "stream"))), s"$lane: $refused")
+      assert(acrossDvDelete(lane, "skipRewrites") === Right(Seq.empty),
+        s"$lane: skipRewrites serves nothing for the DV commit")
+    }
+    // Delta's ignoreChanges: the rewritten file's SURVIVORS, never the
+    // deleted row
+    assert(acrossDvDelete("tail", "ignoreRemoves")
+      === Right(Seq((1L, 10L), (3L, 30L))))
+    val formatIgnore = acrossDvDelete("format", "ignoreRemoves")
+    assert(formatIgnore.left.exists(m =>
+      m.contains("deletion vector") && m.contains("onRewrite=skipRewrites")),
+      s"format: $formatIgnore")
+
+    // a rename after the DV delete, in the same window: the DV commit's
+    // file is read in its pre-rename era, into the renamed column, and
+    // still through its DV
+    val dir = freshDir()
+    OccTable.init(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v")
+      .coalesce(1), dir)                                              // v0
+    val ckpt = Files.createTempDirectory("graft_fstream_ck").toString
+    def tailOnce(c: String): Seq[(Long, Long)] = {
+      val got = ArrayBuffer.empty[(Long, Long)]
+      OccStream.tailTo(spark, dir, ckpt,
+        (df, _) => got.synchronized {
+          got ++= df.select("id", c).as[(Long, Long)].collect() },
+        onRewrite = "ignoreRemoves", trigger = Trigger.AvailableNow())
+        .awaitTermination()
+      got.sorted.toSeq
+    }
+    OccTable.renameColumn(spark, dir, "v", "reading")                 // v1
+    assert(tailOnce("reading") === Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+    OccTable.deleteRangeDv(spark, dir, "id", 2.0, 2.0)                // v2
+    OccTable.renameColumn(spark, dir, "reading", "r")                 // v3
+    assert(tailOnce("r") === Seq((1L, 10L), (3L, 30L)))
   }
 }

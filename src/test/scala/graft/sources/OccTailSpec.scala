@@ -2,8 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkSpec
 
@@ -17,6 +20,11 @@ class OccTailSpec extends SparkSpec {
 
   private def freshDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/t"
+
+  /** The shared version-offset stream over the action feed's lane. */
+  private def stream(dir: String, opts: (String, String)*): OccVersionStream =
+    new OccVersionStream(dir, new CaseInsensitiveStringMap(opts.toMap.asJava),
+      new OccFeedLane(dir))
 
   test("changesTo: a pure compaction emits ZERO change rows; per-version granularity separates adds from changes") {
     val dir = freshDir("graft_occtail_cdc")
@@ -238,16 +246,15 @@ class OccTailSpec extends SparkSpec {
       fsys.setTimes(vp(v), t, t) }
     assert(OccTable.firstVersionAtOrAfter(spark, dir, 1500L) === 1L)
     assert(OccTable.firstVersionAtOrAfter(spark, dir, 2000L) === 1L)
-    val ms = new OccTailMicroBatchStream(dir, "earliest", 0,
-      startingTimestamp = Some(1500L))
-    assert(ms.initialOffset() === OccTailOffset(0L)) // v1 first delivered
+    val ms = stream(dir, "startingTimestamp" -> "1500")
+    assert(ms.initialOffset() === OccVersionOffset(0L)) // v1 first delivered
     // after the latest commit: refuse loudly (Delta's behavior)
     assertThrows[IllegalArgumentException] {
       OccTable.firstVersionAtOrAfter(spark, dir, 9999L)
     }
     // startingVersion/startingTimestamp exclusivity
     assertThrows[IllegalArgumentException] {
-      new OccTailMicroBatchStream(dir, "latest", 0, Some(1L))
+      stream(dir, "startingVersion" -> "latest", "startingTimestamp" -> "1")
     }
     // end-to-end: the change feed from ts=1500 sees v1..v2 only — v0's
     // row never classifies as an add
@@ -269,24 +276,37 @@ class OccTailSpec extends SparkSpec {
     OccTable.init(Seq((1L, 10L)).toDF("id", "v"), dir)     // v0
     (1 to 4).foreach(i =>
       OccTable.append(Seq((i.toLong, i * 10L)).toDF("id", "v"), dir)) // v1..v4
-    val ms = new OccTailMicroBatchStream(dir, "earliest", maxVersions = 2)
-    val start = OccTailOffset(-1L)
+    val ms = stream(dir, "maxVersionsPerTrigger" -> "2")
+    val start = OccVersionOffset(-1L)
     // bare ReadMaxRows: advance by exactly the cap
     val bare = ms.latestOffset(start, ReadLimit.maxRows(2L))
-    assert(bare === OccTailOffset(1L))
+    assert(bare === OccVersionOffset(1L))
     // composite (AvailableNow wraps the admission cap): the tightest
     // ReadMaxRows still applies — a backlogged catch-up must NOT plan
     // the whole log in one trigger
     val composite = ReadLimit.compositeLimit(
       Array(ReadLimit.allAvailable(), ReadLimit.maxRows(2L)))
-    assert(ms.latestOffset(start, composite) === OccTailOffset(1L))
+    assert(ms.latestOffset(start, composite) === OccVersionOffset(1L))
     // two ReadMaxRows in one composite: the minimum wins
     val two = ReadLimit.compositeLimit(
       Array(ReadLimit.maxRows(3L), ReadLimit.maxRows(1L)))
-    assert(ms.latestOffset(start, two) === OccTailOffset(0L))
+    assert(ms.latestOffset(start, two) === OccVersionOffset(0L))
     // a composite with no row cap falls back to all available
     val none = ReadLimit.compositeLimit(
       Array(ReadLimit.allAvailable(), ReadLimit.allAvailable()))
-    assert(ms.latestOffset(start, none) === OccTailOffset(4L))
+    assert(ms.latestOffset(start, none) === OccVersionOffset(4L))
+  }
+
+  test("offsets round-trip through their checkpoint JSON: N for a version, sN for a pending snapshot") {
+    val dir = freshDir("graft_occtail_offset_json")
+    OccTable.init(Seq((1L, 10L)).toDF("id", "v"), dir)
+    val ms = stream(dir)
+    assert(ms.deserializeOffset("3") === OccVersionOffset(3L))
+    assert(ms.deserializeOffset("s3") ===
+      OccVersionOffset(3L, snapshotPending = true))
+    assert(OccVersionOffset(3L).json() === "3")
+    assert(OccVersionOffset(3L, snapshotPending = true).json() === "s3")
+    assert(ms.deserializeOffset(OccVersionOffset(-1L).json())
+      === OccVersionOffset(-1L))
   }
 }

@@ -349,6 +349,18 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(graftTmpEntries -- between === Set.empty[String])
   }
 
+  test("replayWindowedAgg leaves no memory-sink view behind across runs") {
+    val dir = "/root/testdata/sf0.001"
+    def replayViews: Set[String] = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("replay_")).toSet
+    val before = replayViews
+    val first = Pipeline.replayWindowedAgg(spark, dir)
+    val second = Pipeline.replayWindowedAgg(spark, dir)
+    assert(replayViews === before)
+    assert(first.count() > 0L)
+    assert(first.count() === second.count())
+  }
+
   test("streaming output equals batch sensorRollup on the same input") {
     implicit val sqlCtx = spark.sqlContext
     val rows = Seq(
